@@ -383,21 +383,44 @@ object Fixtures {
   /** A fresh scratch directory on the fastest local filesystem: tmpfs
     * (/dev/shm) when present and writable, else java.io.tmpdir. For
     * run-scoped scratch whose LOCATION is immaterial to results
-    * (streaming checkpoints, q121's rebuilt-per-run snapshot table). */
+    * (streaming checkpoints, q121's rebuilt-per-run snapshot table).
+    * An `overrideBase` (SPARK_GRAFT_STREAM_CKPT) is created when missing.
+    * Every returned dir is also deleted at JVM exit ([[scratchAtExit]]),
+    * so scratch a caller cannot drop eagerly (q121's table, read lazily
+    * by the DataFrame it returns) never outlives the process. */
   def fastScratchDir(prefix: String, overrideBase: Option[String] = None): String = {
     val base = overrideBase
-      .map(java.nio.file.Paths.get(_))
+      .map { b =>
+        val p = java.nio.file.Paths.get(b)
+        try { if (!java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(p); p }
+        catch { case e: java.io.IOException =>
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_STREAM_CKPT=$b: cannot create the scratch base directory ($e)", e) }
+      }
       .getOrElse {
         val shm = java.nio.file.Paths.get("/dev/shm")
         if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
         else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       }
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
+    val dir = java.nio.file.Files.createTempDirectory(base, prefix).toString
+    scratchAtExit.add(dir)
+    dir
+  }
+
+  /** Scratch dirs handed out by [[fastScratchDir]]; one JVM shutdown hook
+    * deletes whatever of them still exists. */
+  private[data] lazy val scratchAtExit: java.util.Set[String] = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      dirs.forEach(d => deleteRecursively(new java.io.File(d))), "graft-scratch-cleanup"))
+    dirs
   }
 
   /** Best-effort cleanup of a [[fastCheckpointDir]] after the stream
     * drains (an explicit checkpointLocation is never auto-deleted the
     * way Spark's implicit temp checkpoint is). */
-  def dropCheckpointDir(dir: String): Unit =
+  def dropCheckpointDir(dir: String): Unit = {
     deleteRecursively(new java.io.File(dir))
+    scratchAtExit.remove(dir)
+  }
 }

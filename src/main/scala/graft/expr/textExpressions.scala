@@ -1,5 +1,7 @@
 package graft.expr
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{DataTypeMismatch, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -247,12 +249,46 @@ case class HammingDist(left: Expression, right: Expression)
     copy(l, r)
 }
 
+/** Analysis-time argument shapes of the struct-array kernels, which read
+  * their inputs positionally (getStruct/getUTF8String/getLong) and would
+  * otherwise fail a wrong call with a ClassCastException at run time.
+  * Struct field TYPES must match; field names are the caller's. No casts
+  * are inserted, so valid calls plan and generate exactly as before. */
+private[expr] object KernelArgs {
+  private def structArray(fields: (String, DataType)*): ArrayType =
+    ArrayType(StructType(fields.map { case (n, t) => StructField(n, t) }))
+  val TokCounts: ArrayType = structArray("tok" -> StringType, "c" -> LongType)
+  val TermCounts: ArrayType = structArray("term" -> StringType, "tf" -> LongType)
+  val QueryTerms: ArrayType =
+    structArray("qpos" -> IntegerType, "term" -> StringType, "idf" -> DoubleType)
+
+  private def fits(got: DataType, want: DataType): Boolean = (got, want) match {
+    case (NullType, _) => true // a NULL literal argument yields NULL, as before
+    case (ArrayType(g: StructType, _), ArrayType(w: StructType, _)) =>
+      g.length == w.length &&
+        g.fields.zip(w.fields).forall { case (gf, wf) => gf.dataType == wf.dataType }
+    case _ => got == want
+  }
+
+  def check(inputs: Seq[Expression], wanted: Seq[DataType]): TypeCheckResult =
+    inputs.zip(wanted).zipWithIndex.collectFirst {
+      case ((e, want), i) if !fits(e.dataType, want) =>
+        DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+          "paramIndex" -> ExpectsInputTypes.ordinalNumber(i),
+          "requiredType" -> ExpectsInputTypes.toSQLType(want),
+          "inputSql" -> ExpectsInputTypes.toSQLExpr(e),
+          "inputType" -> ExpectsInputTypes.toSQLType(e.dataType)))
+    }.getOrElse(TypeCheckSuccess)
+}
+
 /** Exact integer dot product of two sorted (tok, c) struct arrays — the
   * (doc, tok)-keyed join + sum aggregation of a pair query's
   * count-vector dot, collapsed into one merge-walk kernel (r6; see
   * TextOps.keyedDot for the sortedness contract). */
 case class KeyedDot(left: Expression, right: Expression)
     extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelArgs.check(children, Seq(KernelArgs.TokCounts, KernelArgs.TokCounts))
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "keyed_dot"
@@ -270,6 +306,8 @@ case class KeyedDot(left: Expression, right: Expression)
   * sortedness + float-shape contract). NaN = no term matched. */
 case class Bm25Fold(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelArgs.check(children, Seq(KernelArgs.QueryTerms, KernelArgs.TermCounts, DoubleType))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "bm25_fold"

@@ -451,6 +451,28 @@ class ExprSpec extends AnyFunSuite {
     assert(java.lang.Double.doubleToRawLongBits(sums) == java.lang.Double.doubleToRawLongBits(off))
   }
 
+  test("keyed_dot / bm25_fold reject wrong-typed arguments at analysis, naming the function") {
+    // one wrong call per kernel: an INT count field where keyed_dot reads
+    // a BIGINT, an INT kdoc where bm25_fold reads a DOUBLE — both must fail
+    // as DATATYPE_MISMATCH while planning, not as a ClassCastException
+    // inside a task
+    val df = Seq(("a", 1)).toDF("tok", "c")
+      .select(array(struct($"tok", $"c")).as("ps_int"),
+        array(struct($"tok", $"c".cast("long"))).as("ps"),
+        array(struct($"c".as("qpos"), $"tok".as("term"), lit(1.5).as("idf"))).as("qarr"))
+    val kd = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(keyed_dot($"ps_int", $"ps")))
+    assert(kd.getMessage.contains("DATATYPE_MISMATCH") && kd.getMessage.contains("keyed_dot"),
+      kd.getMessage)
+    val bm = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(bm25_fold($"qarr", $"ps", lit(1))))
+    assert(bm.getMessage.contains("DATATYPE_MISMATCH") && bm.getMessage.contains("bm25_fold"),
+      bm.getMessage)
+    // the same arrays with the right types still resolve and evaluate
+    val ok = df.select(keyed_dot($"ps", $"ps"), bm25_fold($"qarr", $"ps", lit(1.0))).collect()(0)
+    assert(ok.getLong(0) == 1L && ok.getDouble(1) == 1.5 * (2.2 / 2.0))
+  }
+
   test("expressions survive codegen AND interpreted paths identically") {
     // force interpreted path by wrapping in a non-codegen context: compare
     // wholestage-on collect vs wholestage-off collect

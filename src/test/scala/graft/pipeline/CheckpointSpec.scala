@@ -1,6 +1,10 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,5 +103,37 @@ class CheckpointSpec extends AnyFunSuite {
     val got = spark.read.parquet(s"$out/data")
       .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
     assert(got === expected)
+  }
+
+  private def list(dir: Path): Seq[Path] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.toVector finally st.close()
+  }
+
+  test("a fresh run commits exactly one parquet file per bucket") {
+    // the docs arrive in 4 splits, so every split holds rows of every
+    // bucket: without the rebalance each bucket would get one file per split
+    val out = Files.createTempDirectory("graft-ckpt4").toString
+    val split = Pages.pages(spark, sfDir, SparkEntry.Amp, repartitionDocs = 4)
+    Checkpointed.runAssign(split, cover, bounds, out, nBuckets = 8)
+    val parts = list(Paths.get(out, "data"))
+      .filter(_.getFileName.toString.startsWith("bucket="))
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      val files = list(p).map(_.getFileName.toString)
+        .filter(f => f.endsWith(".parquet") && !f.startsWith("."))
+      assert(files.size === 1, s"$p holds $files")
+    }
+  }
+
+  test("a resume over an unseen todo set compiles no new code") {
+    val out = Files.createTempDirectory("graft-ckpt5").toString
+    val nBuckets = 8
+    Checkpointed.runAssign(pages, cover, bounds, out, nBuckets) // warm-up: todo = 0..7
+    Seq(2, 5).foreach(b => Files.delete(Paths.get(out, "_manifest", s"bucket-$b.json")))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val r = Checkpointed.runAssign(pages, cover, bounds, out, nBuckets)
+    assert(r.ranBuckets === Seq(2, 5))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0L)
   }
 }
