@@ -50,25 +50,12 @@ object ClusterBench {
       .getOrElse(spark.sparkContext.defaultParallelism)
     require(expected.forall { case (e, _) => execs >= e },
       s"only $execs of ${expected.get._1} executors registered within 120s")
-    // warmup (JIT the generated code once; same plan constants)
-    Bench.flagship(spark, sfDir, amplify, parts = cores * 4)
-    var bestJoin = Double.MaxValue; var bestTile = Double.MaxValue
-    var nPages = 0L
-    (0 until repeats).foreach { _ =>
-      val (np, js, ts, _) = Bench.flagship(spark, sfDir, amplify, parts = cores * 4)
-      nPages = np
-      bestJoin = math.min(bestJoin, js)
-      bestTile = math.min(bestTile, ts)
-    }
-    // the host's pure-compute ceiling sample for THIS topology (a no-IO
-    // codegen'd fold) — lets the two-invocation comparison normalize out
-    // shared-host turbo/contention exactly like ScalingBench does
-    spark.range(0, 200000000L, 1, cores * 4)
-      .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
-    val t0 = System.nanoTime()
-    spark.range(0, 2000000000L, 1, cores * 4)
-      .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
-    val ceilSec = (System.nanoTime() - t0) / 1e9
+    val (nPages, bestJoin, bestTile) =
+      ScalingBench.bestFlagship(spark, sfDir, amplify, repeats, parts = cores * 4)
+    // the host's pure-compute ceiling sample for THIS topology — lets the
+    // two-invocation comparison normalize out shared-host turbo/contention
+    // exactly like ScalingBench does
+    val ceilSec = ScalingBench.ceilingFold(spark, 2000000000L, cores * 4)
     println(
       s"""{"metric":"cluster_bench","master":"${spark.sparkContext.master}",""" +
         s""""executors":$execs,"total_cores":$cores,"pages":$nPages,""" +

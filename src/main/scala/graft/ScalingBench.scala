@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /**
  * Two-cluster-size scaling evidence (BASELINE.json north_rule; no real
  * cluster in the sandbox, so N vs 4N executors is proxied by local[8] vs
@@ -12,46 +14,49 @@ package graft
  */
 object ScalingBench {
 
+  /** Warm-up run (JIT the same generated code: identical plan constants),
+    * then `repeats` timed runs of [[Bench.flagship]]: (pages, best join
+    * seconds, best tile seconds). */
+  def bestFlagship(spark: SparkSession, sfDir: String, amplify: Int, repeats: Int,
+                   parts: Int): (Long, Double, Double) = {
+    Bench.flagship(spark, sfDir, amplify, parts)
+    val runs = Seq.fill(repeats)(Bench.flagship(spark, sfDir, amplify, parts))
+    (runs.last._1, runs.map(_._2).min, runs.map(_._3).min)
+  }
+
   def measure(cpus: Int, sfDir: String, amplify: Int, repeats: Int):
       (Long, Double, Double, Long, Double) = {
     val spark = Bench.session(cpus.toString)
     try {
-      // warmup runs (JIT the same generated code: identical plan constants)
-      Bench.flagship(spark, sfDir, amplify, parts = cpus * 4)
+      val (nPages, bestJoin, bestTile) = bestFlagship(spark, sfDir, amplify, repeats, cpus * 4)
       Bench.flagshipDense(spark, sfDir, amplify / 10, parts = cpus * 4)
-      var bestJoin = Double.MaxValue
-      var bestTile = Double.MaxValue
-      var bestDense = Double.MaxValue
-      var nPages = 0L; var nDense = 0L
-      (0 until repeats).foreach { _ =>
-        val (np, js, ts, _) = Bench.flagship(spark, sfDir, amplify, parts = cpus * 4)
-        nPages = np
-        bestJoin = Math.min(bestJoin, js)
-        bestTile = Math.min(bestTile, ts)
-        val (nd, ds, _) = Bench.flagshipDense(spark, sfDir, amplify / 10, parts = cpus * 4)
-        nDense = nd
-        bestDense = Math.min(bestDense, ds)
-      }
-      (nPages, nPages / bestJoin, nPages / bestTile, nDense, nDense / bestDense)
+      val dense = Seq.fill(repeats)(Bench.flagshipDense(spark, sfDir, amplify / 10, parts = cpus * 4))
+      val nDense = dense.last._1
+      (nPages, nPages / bestJoin, nPages / bestTile, nDense, nDense / dense.map(_._2).min)
     } finally spark.stop()
   }
 
-  /** The host's own scaling ceiling for this cpu pair: a pure-compute
-    * (no-IO, no-shuffle, no-allocation) codegen'd fold. On shared/turbo
-    * hardware this is < the core ratio; the engine can't exceed it, so
-    * normalized efficiency = raw efficiency / ceiling efficiency is the
-    * engine's contribution isolated from the host's. */
+  /** Seconds of a pure-compute (no-IO, no-shuffle, no-allocation)
+    * codegen'd sin·cos fold over `n` ids in `parts` partitions, after a
+    * warm-up fold over n/10. */
+  def ceilingFold(spark: SparkSession, n: Long, parts: Int): Double = {
+    spark.range(0, n / 10, 1, parts)
+      .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
+    val t0 = System.nanoTime()
+    spark.range(0, n, 1, parts)
+      .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The host's own scaling ceiling for this cpu pair: the [[ceilingFold]]
+    * at each parallelism level. On shared/turbo hardware this is < the
+    * core ratio; the engine can't exceed it, so normalized efficiency =
+    * raw efficiency / ceiling efficiency is the engine's contribution
+    * isolated from the host's. */
   def computeCeiling(cpusA: Int, cpusB: Int, n: Long): (Double, Double) = {
     def run(cpus: Int): Double = {
       val spark = Bench.session(cpus.toString)
-      try {
-        spark.range(0, n / 10, 1, cpus * 4)
-          .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
-        val t0 = System.nanoTime()
-        spark.range(0, n, 1, cpus * 4)
-          .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
-        (System.nanoTime() - t0) / 1e9
-      } finally spark.stop()
+      try ceilingFold(spark, n, cpus * 4) finally spark.stop()
     }
     val tA = run(cpusA); val tB = run(cpusB)
     (tA / tB, (tA / tB) / (cpusB.toDouble / cpusA))

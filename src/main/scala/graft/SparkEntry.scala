@@ -167,7 +167,7 @@ object SparkEntry {
     val sfDir = "/root/testdata/sf0.001"
     val p = pages(spark, sfDir)
     val b = boundsDf(spark)
-    SpatialJoin.assignPages(p, SpatialJoin.coverDf(b), b)
+    SpatialJoin.assignPages(p, b)
       .select(col("url"), col("clubId"), col("courseId"), col("holeNumber"),
         gf.tile_x(col("lon"), lit(15)).as("tx"),
         gf.tile_y(col("lat"), lit(15)).as("ty"),
@@ -1103,8 +1103,8 @@ object SparkEntry {
       // implies s*(s-1)/2 candidate pairs, so the band-size histogram IS
       // the shuffle-cost forecast (and the skew alarm: one hot band key
       // dominates the join the way hot cells dominate the flagship's,
-      // which is why assignPagesSmj salts). Two aggregations, output
-      // O(distinct sizes) rows.
+      // which is why the flagship's sort-merge shape salts). Two
+      // aggregations, output O(distinct sizes) rows.
       val bands = graft.pipeline.Dedup.banded(t(s, d, "documents"), "doc_id")
       bands.groupBy(col("band")).agg(count(lit(1)).as("s"))
         .groupBy(col("s")).agg(count(lit(1)).as("n_bands"))
@@ -1934,31 +1934,32 @@ object SparkEntry {
     // ---- geo pipeline (J4/J1/W3/A1/F4/R1/R2/J5/J6 — scalatest-covered) ----
     "q40_course_assign" -> ((s, d) => {
       val b = boundsDf(s)
-      SpatialJoin.assignPages(pages(s, d), SpatialJoin.coverDf(b), b)
+      SpatialJoin.assignPages(pages(s, d), b)
         .select(col("url"), col("text"), col("clubId"), col("courseId"), col("holeNumber"))
     }),
 
     "q41_pages_in_any" -> ((s, d) => {
       val b = boundsDf(s)
-      SpatialJoin.pagesInAnyCourse(pages(s, d), SpatialJoin.coverDf(b), b)
+      SpatialJoin.pagesInAnyCourse(pages(s, d), b)
         .select(col("url"), col("lon"), col("lat"))
     }),
 
     "q42_pages_outside_all" -> ((s, d) => {
       val b = boundsDf(s)
-      SpatialJoin.pagesOutsideAllCourses(pages(s, d), SpatialJoin.coverDf(b), b)
+      SpatialJoin.pagesOutsideAllCourses(pages(s, d), b)
         .groupBy(col("lang")).agg(count(lit(1)).as("n"))
     }),
 
     // ---- the 100-TB join shape driven end-to-end (r3 verdict item #1):
     // same containment semantics as q40 but through the salted sort-merge
-    // path that takes over when the cover outgrows broadcast, with the
-    // salt factor auto-derived from the cell-histogram pre-pass. The
+    // path that takes over when the cover outgrows broadcast (forced
+    // here by a zero broadcast budget), with the salt factor
+    // auto-derived from the cell-histogram pre-pass. The
     // oracle is q40's independent ray-cast — a green row certifies the
     // salt/replicate/SMJ machinery produces byte-identical pairs ----
     "q72_course_assign_smj" -> ((s, d) => {
       val b = boundsDf(s)
-      SpatialJoin.assignPagesSmjAuto(pages(s, d), SpatialJoin.coverDf(b), b)
+      SpatialJoin.assignPages(pages(s, d), b, budget = 0L)
         .select(col("url"), col("text"), col("clubId"), col("courseId"), col("holeNumber"))
     }),
 
@@ -1976,7 +1977,7 @@ object SparkEntry {
       val bM = dimCache.computeIfAbsent((s, "boundsMulti"), _ =>
         graft.sources.Storage.localize(
           CourseEngine.boundariesMulti(Courses.itemsDfWithIslands(s, NCourses))))
-      SpatialJoin.assignPages(pages(s, d), SpatialJoin.coverDf(bM), bM)
+      SpatialJoin.assignPages(pages(s, d), bM)
         .select(col("url"), col("clubId"), col("courseId"), col("holeNumber"))
     }),
 

@@ -776,88 +776,6 @@ object Geom {
   final val Dpi = 300.0
   final val MarkerSizeM = 3.0
 
-  /** Strict containment against a FLATTENED shell ([x0,y0,x1,y1,...]) —
-    * the primitive-array form of [[containsStrict]] restricted to
-    * exterior shells, shared by the Catalyst refine expression
-    * (`GeoOps.stContainsFlat`) and the compact-index probe
-    * (`SpatialJoin.assignPagesCompact`) so the two join paths are
-    * bit-identical by construction. Piece-aware: multi-piece polygons
-    * flatten with one (NaN, NaN) pair between piece shells
-    * (`GeoOps.flattenShell`); on the boundary of ANY piece -> false,
-    * strictly inside any piece -> true. Single-ring arithmetic and
-    * outcome are exactly the pre-r5 kernel's. */
-  def containsFlatShell(flat: Array[Double], px: Double, py: Double): Boolean = {
-    val total = flat.length / 2
-    if (total == 0) return false
-    // dispatch on the multi-piece marker (leading NaN pair) — see
-    // GeoOps.stContainsFlat: the dominant single-piece path is the EXACT
-    // pre-r5 loop with no per-vertex NaN check
-    if (!java.lang.Double.isNaN(flat(0))) {
-      val n = total
-      if (n < 3) return false
-      var inside = false
-      var xj = flat(2 * (n - 1)); var yj = flat(2 * (n - 1) + 1)
-      var i = 0
-      while (i < n) {
-        val xi = flat(2 * i); val yi = flat(2 * i + 1)
-        val cross = (xi - xj) * (py - yj) - (yi - yj) * (px - xj)
-        if (cross == 0.0 &&
-            px >= Math.min(xj, xi) && px <= Math.max(xj, xi) &&
-            py >= Math.min(yj, yi) && py <= Math.max(yj, yi)) return false // on edge
-        if ((yi > py) != (yj > py)) {
-          val xCross = (xj - xi) * (py - yi) / (yj - yi) + xi
-          if (px < xCross) inside = !inside
-        }
-        xj = xi; yj = yi
-        i += 1
-      }
-      return inside
-    }
-    // multi-piece: fused forward walk per piece (exact segment set and
-    // arithmetic of the classic prev/cur loop)
-    var inside = false
-    var i = 1 // skip the marker pair
-    while (i < total) {
-      val firstX = flat(2 * i); val firstY = flat(2 * i + 1)
-      var xj = firstX; var yj = firstY
-      var pieceInside = false
-      var cnt = 1
-      i += 1
-      var run = true
-      while (run && i < total) {
-        val xi = flat(2 * i)
-        if (java.lang.Double.isNaN(xi)) run = false
-        else {
-          val yi = flat(2 * i + 1)
-          val cross = (xi - xj) * (py - yj) - (yi - yj) * (px - xj)
-          if (cross == 0.0 &&
-              px >= Math.min(xj, xi) && px <= Math.max(xj, xi) &&
-              py >= Math.min(yj, yi) && py <= Math.max(yj, yi)) return false // on edge
-          if ((yi > py) != (yj > py)) {
-            val xCross = (xj - xi) * (py - yi) / (yj - yi) + xi
-            if (px < xCross) pieceInside = !pieceInside
-          }
-          xj = xi; yj = yi
-          cnt += 1
-          i += 1
-        }
-      }
-      if (cnt >= 3) {
-        val cross = (firstX - xj) * (py - yj) - (firstY - yj) * (px - xj)
-        if (cross == 0.0 &&
-            px >= Math.min(xj, firstX) && px <= Math.max(xj, firstX) &&
-            py >= Math.min(yj, firstY) && py <= Math.max(yj, firstY)) return false
-        if ((firstY > py) != (yj > py)) {
-          val xCross = (xj - firstX) * (py - firstY) / (yj - firstY) + firstX
-          if (px < xCross) pieceInside = !pieceInside
-        }
-        if (pieceInside) inside = true
-      }
-      i += 1 // skip the NaN separator (or step past the end)
-    }
-    inside
-  }
-
   /** (figWidthInches, figHeightInches, aspect, markerPixels) from bounds
     * (west, south, east, north) — utils.py:69-80. */
   def viewport(west: Double, south: Double, east: Double, north: Double): Array[Double] = {

@@ -3,9 +3,9 @@ package graft.index
 import graft.geom.Geom
 
 /**
- * Polygon → cell cover, plus the compact broadcastable probe index —
- * BASELINE.json north_star: "Polygons are indexed into an H3 cover
- * (res 7-10) broadcast as a compact sorted-cell-array structure".
+ * Polygon → cell cover — BASELINE.json north_star: "Polygons are indexed
+ * into an H3 cover (res 7-10)"; the flagship join broadcasts it as a
+ * relation (`SpatialJoin.assignPages`).
  *
  * The geometric analog in the reference is the envelope-bounded texture
  * grid (`/root/reference/src/python/plot_courses.py:174-200`): enumerate
@@ -120,79 +120,4 @@ object Cover {
   /** Single-level cover (all cells at `level`). */
   def coverAt(poly: Array[Array[Double]], level: Int): Array[(Long, Boolean)] =
     cover(poly, level, level)
-}
-
-/**
- * Compact, broadcast-friendly probe structure: parallel sorted arrays
- * (cell -> entry range -> (featureIdx, full) entries). Probing a page is
- * one binary search per cover level actually present (<= 4 for the
- * res-7..10 analog), on primitive arrays — no per-row allocation.
- */
-final class CoverIndex private (
-    val cells: Array[Long],        // sorted distinct cover cell ids
-    val offsets: Array[Int],       // len = cells.length + 1
-    val featureIdx: Array[Int],    // entry -> feature ordinal
-    val fullFlags: Array[Boolean], // entry -> cell fully inside feature
-    val levels: Array[Int]         // distinct cover levels, descending (fine->coarse)
-) extends Serializable {
-
-  /** Entries for one cell id, or empty. */
-  def lookup(cell: Long): IndexedSeq[(Int, Boolean)] = {
-    val i = java.util.Arrays.binarySearch(cells, cell)
-    if (i < 0) IndexedSeq.empty
-    else (offsets(i) until offsets(i + 1)).map(e => (featureIdx(e), fullFlags(e)))
-  }
-
-  /** Candidate (featureIdx, full) pairs for a point: checks the point's
-    * cell at each cover level present in the index. */
-  def probe(lon: Double, lat: Double): IndexedSeq[(Int, Boolean)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
-    probeEach(lon, lat)((fid, full) => buf += ((fid, full)))
-    buf.toIndexedSeq
-  }
-
-  /** Allocation-free probe (hot path): invokes `f` per candidate entry,
-    * walking the primitive arrays directly — the 96%-miss case touches
-    * only `levels.length` binary searches and allocates nothing. */
-  def probeEach(lon: Double, lat: Double)(f: (Int, Boolean) => Unit): Unit = {
-    var li = 0
-    while (li < levels.length) {
-      val i = java.util.Arrays.binarySearch(cells, Cells.cellId(lon, lat, levels(li)))
-      if (i >= 0) {
-        var e = offsets(i)
-        val end = offsets(i + 1)
-        while (e < end) { f(featureIdx(e), fullFlags(e)); e += 1 }
-      }
-      li += 1
-    }
-  }
-
-  def nCells: Int = cells.length
-  def nEntries: Int = featureIdx.length
-}
-
-object CoverIndex {
-  /** Build from (cellId, featureIdx, full) triples. */
-  def build(entries: Iterable[(Long, Int, Boolean)]): CoverIndex = {
-    val grouped = entries.toArray.sortBy(_._1)
-    val cellsB = new scala.collection.mutable.ArrayBuilder.ofLong
-    val offB = new scala.collection.mutable.ArrayBuilder.ofInt
-    val featB = new scala.collection.mutable.ArrayBuilder.ofInt
-    val fullB = new scala.collection.mutable.ArrayBuffer[Boolean]
-    var i = 0
-    offB += 0
-    while (i < grouped.length) {
-      val cell = grouped(i)._1
-      cellsB += cell
-      while (i < grouped.length && grouped(i)._1 == cell) {
-        featB += grouped(i)._2
-        fullB += grouped(i)._3
-        i += 1
-      }
-      offB += fullB.length
-    }
-    val cells = cellsB.result()
-    val lvls = cells.map(Cells.level).distinct.sorted(Ordering.Int.reverse)
-    new CoverIndex(cells, offB.result(), featB.result(), fullB.toArray, lvls)
-  }
 }

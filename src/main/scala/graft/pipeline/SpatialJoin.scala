@@ -1,72 +1,192 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions._
+import graft.index.Cells
 
 /**
  * The flagship operator (BASELINE.json north_star; SURVEY.md §2.3 J4/J5):
  * assign Common-Crawl-style pages (points) to golf-course hole polygons
- * via a multi-resolution cell-cover prefilter join refined by exact
- * point-in-polygon, plus cell-ring kNN.
+ * via a cell-cover prefilter join refined by exact point-in-polygon, plus
+ * cell-ring kNN.
  *
- * Plan shape (what .explain must show):
- *   pages scan (pruned cols) -> cell_id per cover level (codegen'd)
- *     -> posexplode of probe cells
- *     -> BroadcastHashJoin with the exploded cover index (equi on cell)
- *     -> Filter full OR st_contains(boundary, lon, lat)   [codegen'd]
- * No shuffle touches the pages side; skew is irrelevant to a broadcast
- * hash join (pages never repartition), which is precisely why the cover
- * is broadcast. At 10^12 rows with a cover too big for broadcast, switch
- * to the salted sort-merge variant [[assignPagesSmj]] — AQE skew-join
- * splitting handles the residual hot cells.
+ * One entry, [[assignPages]], builds the multi-resolution cover of the
+ * polygon set and picks one of three join shapes from the cover's own
+ * size (the cost-based partitioning choice of SpatialHadoop, VLDB 2015,
+ * made from a size the engine measures rather than one the caller picks):
+ *
+ *   - flat:     the cover expanded to [[MaxLevel]] cells fits the budget —
+ *               pages compute ONE cell id and do ONE broadcast hash probe.
+ *   - multires: only the un-expanded cover fits — pages explode their
+ *               cell and its ancestors down to [[MinLevel]] and probe the
+ *               broadcast cover with each.
+ *   - smj:      the cover exceeds the budget even un-expanded — salted
+ *               sort-merge join on (cell, salt), salt factor from
+ *               [[autoSalts]]; AQE skew-join splitting handles residual
+ *               hot cells.
+ *
+ * The rule: a shape fits when its cell count × [[BytesPerCoverEntry]] is
+ * at most `budget`; the first shape that fits wins. Every shape ends in
+ * the same refine (`full` cells skip it, the rest run st_contains_flat)
+ * and returns the page columns plus the hole key. [[assignPagesFlat]]
+ * is the flat shape for callers that hold one localized flat cover
+ * ([[coverDfFlat]]) across many calls.
+ *
+ * Plan shape of the broadcast shapes (what .explain must show):
+ *   pages scan (pruned cols) -> cell_id (codegen'd)
+ *     -> BroadcastHashJoin with the cover (equi on cell)
+ *     -> Filter full OR st_contains_flat(bflat, lon, lat)   [codegen'd]
+ * No shuffle touches the pages side, so skew is irrelevant to them.
  */
 object SpatialJoin {
 
-  /** Default cover resolution band — area-equivalent to the north star's
+  /** Cover resolution band — area-equivalent to the north star's
     * "H3 res 7-10" mandate (graft level 13 ~ H3 r7 ... 16 ~ r10), with a
     * finer tail so hole-sized polygons (~300m) still get multi-cell
     * covers. */
   val MinLevel = 13
   val MaxLevel = 17
 
-  /** Exploded cover table: one row per (cell, hole), `full` marking cells
-    * wholly inside the polygon (skip the PIP refine). Built from the
-    * boundaries frame of [[CourseEngine.boundaries]]. */
-  def coverDf(bounds: DataFrame, minLevel: Int = MinLevel, maxLevel: Int = MaxLevel): DataFrame =
+  /** Estimated broadcast bytes per exploded cover entry — (cell long,
+    * full bool, hole_id long) plus UnsafeRow + hash-relation overhead;
+    * 32 B is deliberately conservative (measured LongHashedRelation
+    * footprints land near 24 B/row for this shape). ONE constant so the
+    * [[assignPages]] shape boundary is auditable. */
+  val BytesPerCoverEntry = 32L
+
+  /** Default broadcast budget for the cover: 64 MiB — small enough to
+    * stay L2/L3-friendly on the probe side and to co-exist with the
+    * refine dim broadcast, large enough for ~2M flat cells (a few
+    * thousand hole-sized polygons at level 17). */
+  val DefaultBroadcastBudget: Long = 64L << 20
+
+  /** Exploded multi-res cover table: one row per (cell, hole), `full`
+    * marking cells wholly inside the polygon (skip the PIP refine). Built
+    * from the boundaries frame of [[CourseEngine.boundaries]]. */
+  def coverDf(bounds: DataFrame): DataFrame =
     bounds.select(
       holeId.as("hole_id"), col("boundary"),
-      explode(cover_cells(col("boundary"), lit(minLevel), lit(maxLevel))).as("cov"))
+      explode(cover_cells(col("boundary"), lit(MinLevel), lit(MaxLevel))).as("cov"))
       .select(col("cov.cell").as("cell"), col("cov.full").as("full"), col("hole_id"))
+
+  /** Flat single-level cover: [[coverDf]] expanded to its [[MaxLevel]]
+    * cells driver-side, as a local frame. Trades broadcast size
+    * (4^Δlevel per coarse cell) for a zero-explode probe side. */
+  def coverDfFlat(bounds: DataFrame): DataFrame = {
+    val cover = coverDf(bounds)
+    flatCover(cover, cover.collect())
+  }
+
+  /**
+   * Assign pages to the holes that strictly contain them: one row per
+   * (page, hole) pair, the page's columns (`text` untouched — the
+   * byte-identity invariant column) plus clubId, courseId, holeNumber.
+   *
+   * The cover is collected behind the size gate of
+   * [[graft.sources.Storage.localizeOrCheckpointRows]] at `budget /
+   * BytesPerCoverEntry` rows, so the driver never holds more than one
+   * entry past the budget. If the gate holds, the flat count is summed
+   * from the collected rows (a level-l cell stands for 4^(MaxLevel-l)
+   * flat cells) and picks flat (the rows expanded driver-side) or
+   * multires (the rows as they are); if it misses, the checkpointed
+   * cover goes to the sort-merge join. A budget below one entry skips
+   * the gate and hands the sort-merge join the unmaterialised cover:
+   * only an empty cover could fit, and an empty cover joins to nothing
+   * on any shape.
+   */
+  def assignPages(pages: DataFrame, bounds: DataFrame,
+                  budget: Long = DefaultBroadcastBudget): DataFrame = {
+    val cover = coverDf(bounds)
+    val maxEntries = math.min(budget / BytesPerCoverEntry, Int.MaxValue - 1L).toInt
+    val (gated, rows) =
+      if (maxEntries < 1) (cover, None)
+      else graft.sources.Storage.localizeOrCheckpointRows(cover, maxEntries)
+    rows match {
+      case None => sortMergeJoin(pages, gated, bounds)
+      case Some(rs) if rs.iterator.map(r => flatCells(r.getLong(0))).sum *
+          BytesPerCoverEntry <= budget =>
+        assignPagesFlat(pages, flatCover(gated, rs), bounds)
+      case Some(_) => multiResJoin(pages, gated, bounds)
+    }
+  }
+
+  /** Single-probe broadcast join against a flat cover ([[coverDfFlat]]).
+    * The cover broadcast carries only (cell, full, hole_id) — ~12B/cell,
+    * L2-resident hash table for the 96%-miss probe stream; the geometry
+    * joins in from the small `bounds` dim only for candidate rows. */
+  def assignPagesFlat(pages: DataFrame, flatCover: DataFrame, bounds: DataFrame): DataFrame =
+    refine(pages,
+      pages
+        .withColumn("probe_cell", cell_id(col("lon"), col("lat"), lit(MaxLevel)))
+        .join(broadcast(flatCover), col("probe_cell") === flatCover("cell")),
+      bounds)
 
   /** Numeric surrogate key for a hole (long-keyed joins beat 3-string-keyed
     * joins on the 30M-candidate refine probe stream). */
   private def holeId = xxhash64(col("clubId"), col("courseId"), col("holeNumber"))
 
-  /** Probe cells for a page: its cell at maxLevel plus ancestors down to
-    * minLevel (<= maxLevel-minLevel+1 probes, pure bit-shift math). */
-  private def probeCells(minLevel: Int, maxLevel: Int) = {
-    val fine = cell_id(col("lon"), col("lat"), lit(maxLevel))
-    array((minLevel to maxLevel).map(l => cell_parent(fine, lit(l))): _*)
+  private val holeKeyCols = Seq("clubId", "courseId", "holeNumber")
+
+  /** Number of [[MaxLevel]] cells a cover cell stands for. */
+  private def flatCells(cell: Long): Long = 1L << 2 * (MaxLevel - Cells.level(cell))
+
+  /** Cover rows expanded to their [[MaxLevel]] descendants, as a local
+    * frame. Morton ids make descendants a CONTIGUOUS id range (children
+    * of c = [c<<2 .. c<<2|3]), so a cell standing for n flat cells covers
+    * ids [c * n, (c + 1) * n). */
+  private def flatCover(cover: DataFrame, rows: Array[Row]): DataFrame = {
+    val flat = rows.flatMap { r =>
+      val (c, n) = (r.getLong(0), flatCells(r.getLong(0)))
+      (c * n until (c + 1) * n).map(Row(_, r.getBoolean(1), r.getLong(2)))
+    }
+    cover.sparkSession.createDataFrame(java.util.Arrays.asList(flat: _*), cover.schema)
   }
 
-  /**
-   * Broadcast cover join + exact refine. Result: one row per (page, hole)
-   * containment pair, carrying `text` through untouched (the byte-identity
-   * invariant column).
-   */
-  def assignPages(pages: DataFrame, cover: DataFrame, bounds: DataFrame,
-                  minLevel: Int = MinLevel, maxLevel: Int = MaxLevel): DataFrame =
-    pages
-      .withColumn("probe_cell", explode(probeCells(minLevel, maxLevel)))
-      .join(broadcast(cover), col("probe_cell") === cover("cell"))
+  /** Probe cells for a page: its cell at MaxLevel plus ancestors down to
+    * MinLevel (MaxLevel-MinLevel+1 probes, pure bit-shift math). */
+  private def probeCells: Column = {
+    val fine = cell_id(col("lon"), col("lat"), lit(MaxLevel))
+    array((MinLevel to MaxLevel).map(l => cell_parent(fine, lit(l))): _*)
+  }
+
+  /** Multires shape: probe-side ancestor explode against the broadcast
+    * multi-res cover. */
+  private def multiResJoin(pages: DataFrame, cover: DataFrame, bounds: DataFrame): DataFrame =
+    refine(pages,
+      pages
+        .withColumn("probe_cell", explode(probeCells))
+        .join(broadcast(cover), col("probe_cell") === cover("cell")),
+      bounds)
+
+  /** Smj shape, for covers too large to broadcast (the 10^12-row /
+    * continental-polygon-set path): pages salted on a hash of url so hot
+    * cells spread over [[autoSalts]] reducers; the cover side replicated
+    * per salt. */
+  private def sortMergeJoin(pages: DataFrame, cover: DataFrame, bounds: DataFrame): DataFrame = {
+    val nSalts = autoSalts(pages)
+    val saltedPages = pages
+      .withColumn("probe_cell", explode(probeCells))
+      .withColumn("salt", pmod(xxhash64(col("url")), lit(nSalts)))
+    val saltedCover = cover
+      .withColumn("salt", explode(array((0 until nSalts).map(lit(_)): _*)))
+    refine(pages,
+      saltedPages
+        .hint("merge")
+        .join(saltedCover, saltedPages("probe_cell") === saltedCover("cell") &&
+          saltedPages("salt") === saltedCover("salt")),
+      bounds)
+  }
+
+  /** The tail every shape shares: candidate rows join the geometry dim by
+    * hole_id, `full` cells skip the exact point-in-polygon test, and the
+    * output is the page columns plus the hole key. */
+  private def refine(pages: DataFrame, candidates: DataFrame, bounds: DataFrame): DataFrame =
+    candidates
       .join(broadcast(refineDim(bounds)), Seq("hole_id"))
       .filter(col("full") || st_contains_flat(col("bflat"), col("lon"), col("lat")))
-      .select(pages.columns.toIndexedSeq.map(col) :+ col("clubId") :+ col("courseId") :+
-        col("holeNumber"): _*)
-
-  private val holeKeyCols = Seq("clubId", "courseId", "holeNumber")
+      .select((pages.columns.toIndexedSeq ++ holeKeyCols).map(col): _*)
 
   /** Geometry + key dim in the zero-allocation probe form (flattened
     * shells; exterior-only, matching the reference's `.exterior`
@@ -77,123 +197,20 @@ object SpatialJoin {
       flatten_shell(col("boundary")).as("bflat"))
 
   /**
-   * Flat single-level cover: every multi-res cover cell expanded to its
-   * maxLevel descendants. Morton ids make descendants a CONTIGUOUS id
-   * range (children of c = [c<<2 .. c<<2|3]), so the expansion is a plain
-   * `sequence()` — no custom generator. Trades broadcast size (4^dLevel
-   * per coarse cell) for a zero-explode probe side: pages compute ONE
-   * cell id and do ONE hash probe. The right variant whenever the
-   * expanded cover still fits a broadcast (hole-scale polygon sets);
-   * [[assignPages]] is the multi-res-probe variant for continental covers.
-   */
-  def coverDfFlat(bounds: DataFrame, minLevel: Int = MinLevel,
-                  maxLevel: Int = MaxLevel): DataFrame = {
-    graft.functions.registerAll(bounds.sparkSession)
-    val c = coverDf(bounds, minLevel, maxLevel)
-    c.withColumn("cell", expr(
-      s"""explode(sequence(
-         |  shiftleft(cell, ($maxLevel - cell_level(cell)) * 2),
-         |  shiftleft(cell + 1, ($maxLevel - cell_level(cell)) * 2) - 1))""".stripMargin))
-  }
-
-  /** Single-probe broadcast join against a flat (single-level) cover.
-    * The cover broadcast carries only (cell, full, hole key) — ~12B/cell,
-    * L2-resident hash table for the 96%-miss probe stream; the geometry
-    * joins in from the small `bounds` dim only for candidate rows. */
-  def assignPagesFlat(pages: DataFrame, flatCover: DataFrame, bounds: DataFrame,
-                      maxLevel: Int = MaxLevel): DataFrame =
-    pages
-      .withColumn("probe_cell", cell_id(col("lon"), col("lat"), lit(maxLevel)))
-      .join(broadcast(flatCover), col("probe_cell") === flatCover("cell"))
-      .join(broadcast(refineDim(bounds)), Seq("hole_id"))
-      .filter(col("full") || st_contains_flat(col("bflat"), col("lon"), col("lat")))
-      .select(pages.columns.toIndexedSeq.map(col) :+ col("clubId") :+ col("courseId") :+
-        col("holeNumber"): _*)
-
-  /** Estimated broadcast bytes per exploded cover entry — (cell long,
-    * full bool, hole_id long) plus UnsafeRow + hash-relation overhead;
-    * 32 B is deliberately conservative (measured LongHashedRelation
-    * footprints land near 24 B/row for this shape). ONE constant so the
-    * [[chooseCoverStrategy]] boundary is auditable. */
-  val BytesPerCoverEntry = 32L
-
-  /** Default broadcast budget for the cover index: 64 MiB — small enough
-    * to stay L2/L3-friendly on the probe side and to co-exist with the
-    * refine dim broadcast, large enough for ~2M flat cells (a few
-    * thousand hole-sized polygons at level 17). */
-  val DefaultBroadcastBudget: Long = 64L << 20
-
-  /** (multi-res cells, flat-expanded cells) of the cover — the flat count
-    * is the 4^(maxLevel-level) per-cell expansion [[coverDfFlat]] would
-    * materialize, summed WITHOUT building it (pure level arithmetic on
-    * the multi-res cover, one tiny aggregate). */
-  def coverStats(bounds: DataFrame, minLevel: Int = MinLevel,
-                 maxLevel: Int = MaxLevel): (Long, Long) = {
-    graft.functions.registerAll(bounds.sparkSession)
-    val r = coverDf(bounds, minLevel, maxLevel)
-      .agg(count(lit(1)).as("n"),
-        sum(expr(s"shiftleft(1L, ($maxLevel - cell_level(cell)) * 2)")).as("flat"))
-      .collect()(0)
-    if (r.isNullAt(1)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-  }
-
-  /**
-   * Pick the join shape from the cover's estimated broadcast footprint
-   * (r3 verdict: coverDfFlat's 4^Δ expansion had no size guard — a
-   * continental cover flat-expanded from level 13 to 17 multiplies cells
-   * x256 and silently blows the broadcast budget):
-   *
-   *   - "flat":     flat-expanded cover fits the budget — single-probe
-   *                 broadcast hash join, the fastest shape.
-   *   - "multires": only the un-expanded multi-res cover fits — probe-side
-   *                 ancestor explode (≤ maxLevel-minLevel+1 probes/page).
-   *   - "smj":      cover exceeds the budget even un-expanded — salted
-   *                 sort-merge with auto-derived salt factor.
-   *
-   * The boundary is exact and documented: strategy flips where
-   * cells * [[BytesPerCoverEntry]] crosses `budget` (PipelineSpec pins
-   * both flips with budgets straddling the measured stats).
-   */
-  def chooseCoverStrategy(bounds: DataFrame, minLevel: Int = MinLevel,
-                          maxLevel: Int = MaxLevel,
-                          budget: Long = DefaultBroadcastBudget): String = {
-    val (nCells, flatCells) = coverStats(bounds, minLevel, maxLevel)
-    if (flatCells * BytesPerCoverEntry <= budget) "flat"
-    else if (nCells * BytesPerCoverEntry <= budget) "multires"
-    else "smj"
-  }
-
-  /** [[assignPages]] family with the physical shape auto-selected by
-    * [[chooseCoverStrategy]]. The stats pre-pass costs one aggregate over
-    * the (polygon-set-sized, not corpus-sized) cover — amortized over the
-    * dataset version exactly like the cover build itself. */
-  def assignPagesAuto(pages: DataFrame, bounds: DataFrame,
-                      minLevel: Int = MinLevel, maxLevel: Int = MaxLevel,
-                      budget: Long = DefaultBroadcastBudget): DataFrame =
-    chooseCoverStrategy(bounds, minLevel, maxLevel, budget) match {
-      case "flat" =>
-        assignPagesFlat(pages, coverDfFlat(bounds, minLevel, maxLevel), bounds, maxLevel)
-      case "multires" =>
-        assignPages(pages, coverDf(bounds, minLevel, maxLevel), bounds, minLevel, maxLevel)
-      case _ =>
-        assignPagesSmjAuto(pages, coverDf(bounds, minLevel, maxLevel), bounds, minLevel, maxLevel)
-    }
-
-  /**
    * Salt factor from a cheap cell-histogram pre-pass (SURVEY §7): a
    * deterministic 1/128 hash-sample of the pages is histogrammed by
-   * maxLevel cell; a cell holding share `s` of the rows needs
+   * MaxLevel cell; a cell holding share `s` of the rows needs
    * `ceil(s * shufflePartitions)` salts before its reducer looks like the
    * average — clamped to [1, shufflePartitions]. RNG-free (the sample is
    * a hash bucket), so the derived factor is identical at any
    * parallelism. At 10^12 rows the pre-pass reads two columns of 1/128 of
    * the table once per dataset version — noise next to the join itself.
    */
-  def autoSalts(pages: DataFrame, maxLevel: Int = MaxLevel): Int = {
+  def autoSalts(pages: DataFrame): Int = {
     val nPart = pages.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val r = pages
       .filter(pmod(xxhash64(col("url")), lit(128L)) === 0L)
-      .select(cell_id(col("lon"), col("lat"), lit(maxLevel)).as("cell"))
+      .select(cell_id(col("lon"), col("lat"), lit(MaxLevel)).as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("mx"), sum(col("n")).as("tot"))
       .collect()(0)
@@ -204,106 +221,15 @@ object SpatialJoin {
     }
   }
 
-  /** [[assignPagesSmj]] with the salt factor derived by [[autoSalts]]. */
-  def assignPagesSmjAuto(pages: DataFrame, cover: DataFrame, bounds: DataFrame,
-                         minLevel: Int = MinLevel, maxLevel: Int = MaxLevel): DataFrame =
-    assignPagesSmj(pages, cover, bounds, autoSalts(pages, maxLevel), minLevel, maxLevel)
-
-  /**
-   * Sort-merge variant for covers too large to broadcast (the 10^12-row /
-   * continental-polygon-set path): pages salted on a hash of url so hot
-   * cells spread over `nSalts` reducers; the cover side replicated per
-   * salt. AQE skew-join splitting covers residual skew.
-   */
-  def assignPagesSmj(pages: DataFrame, cover: DataFrame, bounds: DataFrame, nSalts: Int,
-                     minLevel: Int = MinLevel, maxLevel: Int = MaxLevel): DataFrame = {
-    val saltedPages = pages
-      .withColumn("probe_cell", explode(probeCells(minLevel, maxLevel)))
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(nSalts)))
-    val saltedCover = cover
-      .withColumn("salt", explode(array((0 until nSalts).map(lit(_)): _*)))
-    saltedPages
-      .hint("merge")
-      .join(saltedCover, saltedPages("probe_cell") === saltedCover("cell") &&
-        saltedPages("salt") === saltedCover("salt"))
-      .join(broadcast(refineDim(bounds)), Seq("hole_id"))
-      .filter(col("full") || st_contains_flat(col("bflat"), col("lon"), col("lat")))
-      .select(pages.columns.toIndexedSeq.map(col) :+ col("clubId") :+ col("courseId") :+
-        col("holeNumber"): _*)
-  }
-
-  /**
-   * The north-star-literal index shape: the whole cover as ONE
-   * `Broadcast[CoverIndex]` — parallel sorted primitive arrays, binary-
-   * search probe — consumed inside a typed `mapPartitions`, no join
-   * operator on the probe side at all. Functionally identical to
-   * [[assignPagesFlat]] (tested); exists because some consumers (custom
-   * partition logic, non-SQL probes) want the index as a data structure
-   * rather than a relation, and as the bench's second shape. The
-   * DataFrame broadcast-hash variants remain the Catalyst-native default:
-   * they keep whole-stage codegen, AQE, and column pruning.
-   */
-  def assignPagesCompact(pages: DataFrame, bounds: DataFrame,
-                         minLevel: Int = MinLevel, maxLevel: Int = MaxLevel): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // driver-side build (once per polygon-set version, like the broadcast)
-    val feats = bounds
-      .select(col("clubId"), col("courseId"), col("holeNumber"), col("boundary"))
-      .collect()
-    val keys: Array[(String, String, Int)] =
-      feats.map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-    def ringFlat(r: org.apache.spark.sql.Row, ringIdx: Int): Array[Double] = {
-      val rings = r.getAs[scala.collection.Seq[scala.collection.Seq[org.apache.spark.sql.Row]]](3)
-      rings(ringIdx).iterator.flatMap(p => Iterator(p.getDouble(0), p.getDouble(1))).toArray
-    }
-    // all piece shells in GeoOps.flattenShell's encoding (leading
-    // (NaN,NaN) marker + (NaN,NaN)-separated pieces when multi; bare ring
-    // when single), so this probe path and the expression path stay
-    // bit-identical on any polygon
-    val shells: Array[Array[Double]] = feats.map { r =>
-      val nr = r.getAs[scala.collection.Seq[Any]](3).length
-      if (nr == 1) ringFlat(r, 0)
-      else (0 until nr).map(ringFlat(r, _))
-        .foldLeft(Array(Double.NaN, Double.NaN))((a, b) =>
-          if (a.length == 2) a ++ b else a ++ Array(Double.NaN, Double.NaN) ++ b)
-    }
-    val entries = feats.iterator.zipWithIndex.flatMap { case (r, fid) =>
-      val poly = (0 until r.getAs[scala.collection.Seq[Any]](3).length)
-        .map(ringFlat(r, _)).toArray
-      graft.index.Cover.cover(poly, minLevel, maxLevel)
-        .iterator.map { case (cell, full) => (cell, fid, full) }
-    }.toSeq
-    val bcIdx = spark.sparkContext.broadcast(graft.index.CoverIndex.build(entries))
-    val bcShells = spark.sparkContext.broadcast(shells)
-    val bcKeys = spark.sparkContext.broadcast(keys)
-    pages.select(col("url"), col("lon"), col("lat")).as[(String, Double, Double)]
-      .mapPartitions { it =>
-        val idx = bcIdx.value; val sh = bcShells.value; val ks = bcKeys.value
-        // one reusable buffer per partition; probeEach allocates nothing on
-        // the (dominant) miss path
-        val hits = new scala.collection.mutable.ArrayBuffer[(String, Double, Double, String, String, Int)](4)
-        it.flatMap { case (url, lon, lat) =>
-          hits.clear()
-          idx.probeEach(lon, lat) { (fid, full) =>
-            if (full || graft.geom.Geom.containsFlatShell(sh(fid), lon, lat))
-              hits += ((url, lon, lat, ks(fid)._1, ks(fid)._2, ks(fid)._3))
-          }
-          if (hits.isEmpty) Iterator.empty else hits.toList.iterator
-        }
-      }
-      .toDF("url", "lon", "lat", "clubId", "courseId", "holeNumber")
-  }
-
   /** Pages inside at least one course hole (left_semi form of J4). */
-  def pagesInAnyCourse(pages: DataFrame, cover: DataFrame, bounds: DataFrame): DataFrame = {
-    val hits = assignPages(pages, cover, bounds).select(col("url")).distinct()
+  def pagesInAnyCourse(pages: DataFrame, bounds: DataFrame): DataFrame = {
+    val hits = assignPages(pages, bounds).select(col("url")).distinct()
     pages.join(hits, Seq("url"), "left_semi")
   }
 
   /** Pages outside every course hole (left_anti form of J4). */
-  def pagesOutsideAllCourses(pages: DataFrame, cover: DataFrame, bounds: DataFrame): DataFrame = {
-    val hits = assignPages(pages, cover, bounds).select(col("url")).distinct()
+  def pagesOutsideAllCourses(pages: DataFrame, bounds: DataFrame): DataFrame = {
+    val hits = assignPages(pages, bounds).select(col("url")).distinct()
     pages.join(hits, Seq("url"), "left_anti")
   }
 
@@ -364,17 +290,17 @@ object SpatialJoin {
         flatten_shell(col("boundary")).as("bflat")),
         Seq("clubId", "courseId", "holeNumber"))
     // max centroid->envelope-corner distance over all four corners
-    // (driver-side scalar; one tiny aggregate over the polygon dim, like
-    // the cover stats pre-pass)
+    // (driver-side scalar; one tiny aggregate over the polygon dim). An
+    // empty polygon set has no max: its radius is 0, and the kNN is empty
     val cx = (col("env.minx") + col("env.maxx")) / 2
     val cy = (col("env.miny") + col("env.maxy")) / 2
     val envRadM = bounds
       .withColumn("env", st_envelope(col("boundary")))
-      .agg(max(greatest(
+      .agg(coalesce(max(greatest(
         st_distance_m(cx, cy, col("env.maxx"), col("env.maxy")),
         st_distance_m(cx, cy, col("env.maxx"), col("env.miny")),
         st_distance_m(cx, cy, col("env.minx"), col("env.maxy")),
-        st_distance_m(cx, cy, col("env.minx"), col("env.miny")))))
+        st_distance_m(cx, cy, col("env.minx"), col("env.miny")))), lit(0.0)))
       .collect()(0).getDouble(0)
     knnStaged(pagesIn, dim, k, level, radius, maxLocalRows,
       slackM = envRadM,

@@ -25,24 +25,26 @@ class MultiPieceSpec extends AnyFunSuite {
   private val multi =
     Array(Double.NaN, Double.NaN) ++ sqA ++ Array(Double.NaN, Double.NaN) ++ sqB
 
+  /** st_contains_flat of one flat shell at each probe point, in one query. */
+  private def flatContains(flat: Array[Double], pts: Seq[(Double, Double)]): Seq[Boolean] =
+    pts.toDF("x", "y")
+      .select(graft.functions.st_contains_flat(typedLit(flat.toSeq), $"x", $"y"))
+      .as[Boolean].collect().toSeq
+
   test("piece-aware flat contains: inside either piece, on any piece's edge -> out") {
-    assert(Geom.containsFlatShell(multi, 0.5, 0.5))   // inside piece A
-    assert(Geom.containsFlatShell(multi, 5.5, 0.5))   // inside piece B
-    assert(!Geom.containsFlatShell(multi, 3.0, 0.5))  // between pieces
-    assert(!Geom.containsFlatShell(multi, 1.0, 0.5))  // on A's edge
-    assert(!Geom.containsFlatShell(multi, 5.0, 0.5))  // on B's edge
+    // inside A, inside B, between the pieces, on A's edge, on B's edge
+    assert(flatContains(multi, Seq((0.5, 0.5), (5.5, 0.5), (3.0, 0.5), (1.0, 0.5), (5.0, 0.5))) ===
+      Seq(true, true, false, false, false))
     // single-ring flat behaves exactly like the pre-r5 kernel: compare to
     // containsStrict on a probe grid over the square's neighborhood
-    for (xi <- -2 to 12; yi <- -2 to 12) {
-      val x = xi * 0.1; val y = yi * 0.1
-      assert(Geom.containsFlatShell(sqA, x, y) ===
-        Geom.containsStrict(Array(sqA), x, y), s"($x,$y)")
+    val near = for (xi <- -2 to 12; yi <- -2 to 12) yield (xi * 0.1, yi * 0.1)
+    flatContains(sqA, near).zip(near).foreach { case (got, (x, y)) =>
+      assert(got === Geom.containsStrict(Array(sqA), x, y), s"($x,$y)")
     }
     // multi flat == containsStrict over both pieces, everywhere
-    for (xi <- -2 to 26; yi <- -2 to 6) {
-      val x = xi * 0.25; val y = yi * 0.25
-      assert(Geom.containsFlatShell(multi, x, y) ===
-        Geom.containsStrict(Array(sqA, sqB), x, y), s"($x,$y)")
+    val both = for (xi <- -2 to 26; yi <- -2 to 6) yield (xi * 0.25, yi * 0.25)
+    flatContains(multi, both).zip(both).foreach { case (got, (x, y)) =>
+      assert(got === Geom.containsStrict(Array(sqA, sqB), x, y), s"($x,$y)")
     }
   }
 

@@ -47,31 +47,56 @@ class PipelineSpec extends AnyFunSuite {
     assert(expected.nonEmpty, "fixture produced no containment pairs — useless test")
   }
 
+  /** (multi-res cells, flat cells) of a polygon set's cover: a level-l
+    * cell stands for 4^(MaxLevel-l) flat cells. */
+  private def coverSizes(b: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val cells = SpatialJoin.coverDf(b).select($"cell").as[Long].collect()
+    (cells.length.toLong,
+      cells.map(c => 1L << 2 * (SpatialJoin.MaxLevel - graft.index.Cells.level(c))).sum)
+  }
+
+  /** The shape assignPages planned: smj sort-merges, multires probes the
+    * page cell's ancestors, flat does neither. */
+  private def shape(joined: org.apache.spark.sql.DataFrame): String = {
+    val plan = joined.queryExecution.sparkPlan.toString
+    if (plan.contains("SortMergeJoin")) "smj"
+    else if (plan.contains("cell_parent")) "multires"
+    else "flat"
+  }
+
+  private def bigSquare = spark.sql(
+    """SELECT 'bigclub' AS clubId, 'c1' AS courseId, 1 AS holeNumber, array(array(
+      |  struct(10.0d AS x, 50.0d AS y), struct(10.1d AS x, 50.0d AS y),
+      |  struct(10.1d AS x, 50.1d AS y), struct(10.0d AS x, 50.1d AS y),
+      |  struct(10.0d AS x, 50.0d AS y))) AS boundary""".stripMargin)
+
   test("flat single-level cover join equals multi-res probe join") {
     val p = Pages.pages(spark, sfDir, SparkEntry.Amp)
-    val multi = SpatialJoin.assignPages(p, SpatialJoin.coverDf(bounds), bounds)
-      .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
-    val flat = SpatialJoin.assignPagesFlat(p, SpatialJoin.coverDfFlat(bounds), bounds)
+    val flatJoin = SpatialJoin.assignPages(p, bounds)
+    // the hole-sized fixture's covers mostly bottom out at MaxLevel; the
+    // big square's coarse full cells make the two shapes genuinely differ
+    val b = bounds.unionByName(bigSquare)
+    val (_, flatCells) = coverSizes(b)
+    val multiJoin = SpatialJoin.assignPages(p, b,
+      budget = flatCells * SpatialJoin.BytesPerCoverEntry - 1)
+    assert(shape(flatJoin) == "flat" && shape(multiJoin) == "multires")
+    val flat = flatJoin.select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
+    val multi = multiJoin.filter($"clubId" =!= "bigclub")
       .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
     assert(multi == flat)
     assert(multi.nonEmpty)
-  }
-
-  test("compact sorted-cell-array probe equals the broadcast join") {
-    val p = Pages.pages(spark, sfDir, SparkEntry.Amp)
-    val bcast = SpatialJoin.assignPagesFlat(p, SpatialJoin.coverDfFlat(bounds), bounds)
+    val viaCover = SpatialJoin.assignPagesFlat(p, SpatialJoin.coverDfFlat(bounds), bounds)
       .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
-    val compact = SpatialJoin.assignPagesCompact(p, bounds)
-      .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
-    assert(compact == bcast && compact.nonEmpty)
+    assert(viaCover == flat)
   }
 
   test("salted sort-merge variant equals the broadcast join (skew/scale path)") {
     val p = Pages.pages(spark, sfDir, SparkEntry.Amp)
     val bcast = SpatialJoin.assignPagesFlat(p, SpatialJoin.coverDfFlat(bounds), bounds)
       .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
-    val smj = SpatialJoin.assignPagesSmj(p, SpatialJoin.coverDf(bounds), bounds, nSalts = 4)
-      .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
+    val smjJoin = SpatialJoin.assignPages(p, bounds, budget = 0L)
+    assert(shape(smjJoin) == "smj")
+    val smj = smjJoin.select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
     assert(smj == bcast && smj.nonEmpty)
   }
 
@@ -80,34 +105,42 @@ class PipelineSpec extends AnyFunSuite {
     // expansion genuinely dwarfs the multi-res cover (the hole-sized
     // fixture's covers bottom out at maxLevel — flat == multires there,
     // which is exactly why this test needs its own polygon)
-    val big = spark.sql(
-      """SELECT 'bigclub' AS clubId, 'c1' AS courseId, 1 AS holeNumber, array(array(
-        |  struct(10.0d AS x, 50.0d AS y), struct(10.1d AS x, 50.0d AS y),
-        |  struct(10.1d AS x, 50.1d AS y), struct(10.0d AS x, 50.1d AS y),
-        |  struct(10.0d AS x, 50.0d AS y))) AS boundary""".stripMargin)
-    val (nCells, flatCells) = SpatialJoin.coverStats(big)
+    val big = bigSquare
+    val (nCells, flatCells) = coverSizes(big)
     assert(nCells > 0 && flatCells > nCells,
-      s"degenerate cover stats ($nCells, $flatCells) — boundary test would be vacuous")
+      s"degenerate cover sizes ($nCells, $flatCells) — boundary test would be vacuous")
     val per = SpatialJoin.BytesPerCoverEntry
-    // the documented selection rule, pinned at both flips (budgets exactly
-    // on and one byte below each threshold)
-    assert(SpatialJoin.chooseCoverStrategy(big, budget = flatCells * per) == "flat")
-    assert(SpatialJoin.chooseCoverStrategy(big, budget = flatCells * per - 1) == "multires")
-    assert(SpatialJoin.chooseCoverStrategy(big, budget = nCells * per) == "multires")
-    assert(SpatialJoin.chooseCoverStrategy(big, budget = nCells * per - 1) == "smj")
-    // the default budget picks flat for the real hole-sized polygon set
-    assert(SpatialJoin.chooseCoverStrategy(bounds) == "flat")
-    // every auto-dispatched shape computes the same containment relation
-    // over a probe grid straddling the big square's boundary
     val pts = (0 until 400).map(i =>
       (s"u$i", 9.99 + (i % 20) * 0.0065, 49.99 + (i / 20) * 0.0065))
       .toDF("url", "lon", "lat")
-    def pairs(budget: Long) = SpatialJoin.assignPagesAuto(pts, big, budget = budget)
-      .select($"url").collect().map(_.getString(0)).toSet
+    def join(budget: Long) = SpatialJoin.assignPages(pts, big, budget = budget)
+    // the documented selection rule, pinned at both flips (budgets exactly
+    // on and one byte below each threshold)
+    assert(shape(join(flatCells * per)) == "flat")
+    assert(shape(join(flatCells * per - 1)) == "multires")
+    assert(shape(join(nCells * per)) == "multires")
+    assert(shape(join(nCells * per - 1)) == "smj")
+    // the default budget picks flat for the real hole-sized polygon set
+    assert(shape(SpatialJoin.assignPages(Pages.pages(spark, sfDir, SparkEntry.Amp), bounds)) ==
+      "flat")
+    // every shape computes the same containment relation over a probe
+    // grid straddling the big square's boundary
+    def pairs(budget: Long) = join(budget).select($"url").collect().map(_.getString(0)).toSet
     val flat = pairs(flatCells * per)
     assert(flat.nonEmpty && flat.size < 400)
     assert(pairs(flatCells * per - 1) == flat, "multires path diverges from flat")
     assert(pairs(nCells * per - 1) == flat, "smj path diverges from flat")
+  }
+
+  test("an empty polygon set: no assignments, no neighbours, every page outside") {
+    val p = Pages.pages(spark, sfDir, SparkEntry.Amp)
+    val none = bounds.limit(0)
+    val nPages = p.count()
+    assert(nPages > 0)
+    assert(SpatialJoin.assignPages(p, none).count() == 0)
+    assert(SpatialJoin.pagesOutsideAllCourses(p, none).count() == nPages)
+    assert(SpatialJoin.knnCourses(p, none, k = 2).count() == 0)
+    assert(SpatialJoin.knnCoursesBoundary(p, none, k = 2).count() == 0)
   }
 
   test("boundary-metric kNN equals brute force; margins rule out rank flips") {
@@ -621,8 +654,9 @@ class PipelineSpec extends AnyFunSuite {
       assert(unsalted > 3.0, s"fixture not skewed enough to test: $unsalted")
       assert(salted <= 3.0, s"salted reducer input unbalanced: $salted (unsalted $unsalted)")
       // and the auto-salted join itself agrees with the broadcast path
-      val smj = SpatialJoin.assignPagesSmjAuto(pages, SpatialJoin.coverDf(bounds), bounds)
-        .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
+      val smjJoin = SpatialJoin.assignPages(pages, bounds, budget = 0L)
+      assert(shape(smjJoin) == "smj")
+      val smj = smjJoin.select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
       val bcast = SpatialJoin.assignPagesFlat(pages, SpatialJoin.coverDfFlat(bounds), bounds)
         .select($"url", $"clubId", $"courseId", $"holeNumber").collect().toSet
       assert(smj == bcast && smj.nonEmpty)
@@ -785,7 +819,7 @@ class PipelineSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val plan = try {
-      val joined = SpatialJoin.assignPagesSmj(p, SpatialJoin.coverDf(bounds), bounds, nSalts = 4)
+      val joined = SpatialJoin.assignPages(p, bounds, budget = 0L)
       joined.collect()
       joined.queryExecution.executedPlan.toString
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
