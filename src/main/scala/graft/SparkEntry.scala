@@ -1214,8 +1214,9 @@ object SparkEntry {
       // jaccard-verified pair graph (q25's pairs), one representative
       // (the min id) kept per component — the rule production dedup
       // passes apply when "first seen" is not well-defined. Components
-      // via iterative min-label propagation (Dedup.connectedComponents);
-      // the oracle closes the same graph with a recursive CTE.
+      // via Dedup.connectedComponents (union-find under its size gate,
+      // star contraction past it); the oracle closes the same graph with
+      // a recursive CTE.
       val docs = t(s, d, "documents")
       // r6: the banded-candidates -> shingle-verify front half is the
       // shared Dedup.verifiedPairs (band table + shingle state each
@@ -2135,23 +2136,25 @@ object SparkEntry {
 
     "q96_components_star" -> ((s, d) => {
       graft.functions.registerAll(s)
-      // large-star/small-star connected components (Dedup
-      // .connectedComponentsStar) on a HIGH-DIAMETER graph — the regime
-      // where q78's min-label propagation is the wrong plan (one shuffle
-      // round per hop; its 20-round guard throws here). The edge set is
-      // derived from doc ids alone so both engines define it identically:
+      // connected components (Dedup.connectedComponents) on a
+      // HIGH-DIAMETER graph: past the operator's size gate its
+      // large-star/small-star rounds are diameter-independent, where
+      // per-hop label propagation would pay one shuffle round per hop.
+      // The edge set is derived from doc ids alone so both engines
+      // define it identically:
       // seven stride-7 chains over the dense id space (diameter ~ n/7,
       // ~71 at sf0.01) plus a bridge (i, i+3) at every i % 101 == 0,
       // which welds six of the seven chains into one snaking component
-      // hundreds of hops across. Star contraction closes it in <= 8
-      // rounds; the oracle closes the same graph with a recursive CTE.
+      // hundreds of hops across. At sf0.01 it fits the gate and the
+      // union-find closes it; the oracle closes the same graph with a
+      // recursive CTE.
       val ids = t(s, d, "documents").select(col("doc_id"))
       val chain = ids.as("a").join(ids.as("b"), col("b.doc_id") === col("a.doc_id") + 7)
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       val bridge = ids.as("a").filter(col("doc_id") % 101 === 0)
         .join(ids.as("b"), col("b.doc_id") === col("a.doc_id") + 3)
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      graft.pipeline.Dedup.connectedComponentsStar(chain.unionByName(bridge))
+      graft.pipeline.Dedup.connectedComponents(chain.unionByName(bridge))
         .select(col("doc_id"), col("component"),
           (col("doc_id") === col("component")).as("kept"))
     }),

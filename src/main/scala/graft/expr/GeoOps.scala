@@ -346,7 +346,9 @@ object GeoOps {
 
   /** Point-to-shell distance over the flattened ring — zero-copy ArrayData
     * walk (the q75 candidate-refine hot path; HOF composition of the same
-    * arithmetic measured 50x slower at sf0.1). */
+    * arithmetic measured 50x slower at sf0.1). Operation-for-operation the
+    * DuckDB oracle's `segDistSql` replay, so only libm ULPs can differ —
+    * which is why q75 grades ranks. */
   def stDistanceToShellM(flat: ArrayData, px: Double, py: Double): Double = {
     // multi-piece flats carry (NaN,NaN) separators (flattenShell): the two
     // pseudo-segments touching a separator evaluate to d = NaN, and

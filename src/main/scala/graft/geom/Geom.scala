@@ -737,36 +737,6 @@ object Geom {
     2.0 * EarthRadiusM * Math.asin(Math.min(1.0, Math.sqrt(a)))
   }
 
-  /** Haversine meters from a point to the nearest segment of a flattened
-    * closed shell ring: per segment, the planar (equirectangular lon/lat)
-    * projection parameter clamped to [0,1], then haversine to the clamped
-    * closest point — the q75 boundary-kNN metric. Arithmetic is
-    * operation-for-operation the DuckDB oracle's `segDistSql` replay (and
-    * PipelineSpec's replica), so only libm ULPs can differ — which is why
-    * q75 grades ranks, with pinned near-tie margins. MaxValue for a
-    * degenerate (<2-point) shell. */
-  def distanceToShellM(flat: Array[Double], px: Double, py: Double): Double = {
-    val n = flat.length / 2
-    var best = Double.MaxValue
-    var i = 0
-    while (i < n - 1) {
-      val ax = flat(2 * i); val ay = flat(2 * i + 1)
-      val bx = flat(2 * i + 2); val by = flat(2 * i + 3)
-      val dx = bx - ax; val dy = by - ay
-      val d2 = dx * dx + dy * dy
-      val t =
-        if (d2 == 0.0) 0.0
-        else {
-          val tr = ((px - ax) * dx + (py - ay) * dy) / d2
-          if (tr < 0.0) 0.0 else if (tr > 1.0) 1.0 else tr
-        }
-      val d = haversineM(px, py, ax + t * dx, ay + t * dy)
-      if (d < best) best = d
-      i += 1
-    }
-    best
-  }
-
   // ---------------------------------------------------------------------
   // Viewport math — reference: utils.py:18-24, 69-80. Constants are the
   // reference's module-level values.

@@ -64,86 +64,120 @@ object Dedup {
   }
 
   /**
-   * Connected components of the near-dup pair graph — the CLUSTER-level
-   * retention a production dedup pass runs (keep one representative per
-   * component of the verified-pair graph), complementing the greedy
-   * first-wins rule. Iterative min-label propagation to fixpoint:
-   * label(doc) := min(label(doc), min label over neighbors), repeated
-   * until no label changes — deterministic at any partitioning (min is
-   * order-free), converging to component = min doc id reachable.
+   * Connected components of a pair graph — the CLUSTER-level retention a
+   * production dedup pass runs (keep one representative per component of
+   * the verified-pair graph), complementing the greedy first-wins rule.
+   * The engine's ONE connected-components operator: q78, q86, q89, q96,
+   * q105 and q110 all close their graphs here.
    *
-   * Scale shape: each iteration is one equi-join (edges x labels) + one
-   * groupBy-min + one left join — all shuffles on doc-id keys, state is
-   * the (docs-in-pairs)-sized label frame, lineage broken per iteration
-   * by the same size-gated localize the kNN stages use (q62's iterative
-   * k-means discipline). Iteration count is the graph diameter, which
-   * for LSH near-dup clusters is small; `maxIter` is a guard, not a
-   * tuning knob — hitting it throws rather than returning a
-   * half-converged labeling. (The large-star/small-star variant halves
-   * the iteration count at extreme diameters; min-propagation is the
-   * right default while diameters stay single-digit.)
+   * Returns `(doc_id, component)`, component = the component's minimum id,
+   * one row per vertex of the graph, id column typed like `doc_a`. A
+   * self-pair `(a, a)` carries no edge and adds no vertex: a doc that only
+   * pairs with itself is absent, like a doc in no pair at all. Callers that
+   * need every doc left-join from their doc set with
+   * `coalesce(component, doc_id)` ([[leakageSafeSplit]], [[embeddingKept]]).
    *
-   * Returns `(doc_id, component)` for every doc appearing in `pairs`.
+   * Size-gated: the canonical edges `(least, greatest)` are probed through
+   * [[graft.sources.Storage.localizeOrCheckpointRows]] at `maxLocalRows`.
+   * When they fit, one driver-side union-find pass over the collected rows
+   * finishes (duplicate edges are harmless to it, so there is no `distinct`
+   * before the probe: one limit-collect job in all).
+   *
+   * Past the gate — the only kind of graph a 100-TB corpus produces — the
+   * distinct edge set contracts by alternating LARGE-STAR / SMALL-STAR
+   * rounds (Kiveris et al., "Connected Components in MapReduce and
+   * Beyond", SoCC'14): O(log^2 n) rounds, independent of the diameter
+   * (a 119-hop chain closes within 12). Each round is pure relational
+   * algebra, no collect_list, so a high-degree node never materialises
+   * its neighbourhood in one task:
+   *   large-star: m(u) = min(N(u) ∪ {u}); every neighbour v > u re-links
+   *     to m(u);
+   *   small-star: every neighbour v < u, and u itself, re-links to m(u).
+   * Edges stay canonical (u < v) and distinct, so the edge set contracts
+   * toward one star per component rooted at its minimum; connectivity and
+   * the vertex set are invariants of every round. Each phase goes through
+   * the same size gate, and the union-find finishes as soon as contraction
+   * brings the edge set under it. Otherwise the loop stops when the
+   * (count, bit_xor of a mix64 edge hash) checksum is stable, and
+   * `maxIter` is a guard, not a tuning knob: hitting it throws rather than
+   * return a half-contracted labelling.
    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           maxLocalRows: Int = 1 << 20): DataFrame = {
-    // SIZE-GATED LOCAL FINISH (r6, guide §1.2 "the distributed algorithm
-    // first"): the loop below already probe-collects the whole edge set
-    // every round (localizeOrCheckpoint's size gate). When the canonical
-    // edge set fits that same gate, the fixpoint is computable from the
-    // ALREADY-COLLECTED rows in one union-find pass (component = min
-    // reachable id — exactly the loop's fixpoint), replacing
-    // diameter-many (join + groupBy + left-join + convergence-count)
-    // micro-job rounds with zero extra jobs. The at-scale path — edge
-    // sets past the gate, the only kind a 100-TB corpus produces — is
-    // the unchanged relational loop; this is the standard "contract,
-    // then finish the tail locally" CC pattern, not a fixture shortcut:
-    // the gate is on data size, not on which query is running.
-    val probe = pairs.select(col("doc_a"), col("doc_b"))
-      .limit(maxLocalRows + 1).collect()
-    if (probe.length <= maxLocalRows)
-      return localComponents(pairs.sparkSession, probe, pairs.schema("doc_a").dataType)
-    // materialize the edge list ONCE: every iteration references it, and
-    // without a lineage break the whole pair-generation upstream (the
-    // minhash banding in q78's case) would re-execute per round —
-    // measured 3.9s -> the edges are the loop's working set, exactly like
-    // q62's centroids
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    var labels = graft.sources.Storage.localizeOrCheckpoint(
-      edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("component", col("doc_id")), maxLocalRows)
-    var it = 0
-    while (it < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("component").as("dst_c")), Seq("dst"))
-        .groupBy(col("src").as("doc_id")).agg(min(col("dst_c")).as("nbr_c"))
-      val next = graft.sources.Storage.localizeOrCheckpoint(
-        labels.join(nbrMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("component"), coalesce(col("nbr_c"), col("component"))).as("component")),
-        maxLocalRows)
-      val changed = next.as("n")
-        .join(labels.as("o"), col("n.doc_id") === col("o.doc_id"))
-        .filter(col("n.component") < col("o.component")).count()
-      labels = next
-      if (changed == 0L) return labels
-      it += 1
+    val matz = graft.sources.Storage.localizeOrCheckpointRows(_: DataFrame, maxLocalRows)
+    var (edges, rows) = matz(
+      pairs.select(least(col("doc_a"), col("doc_b")).as("u"),
+          greatest(col("doc_a"), col("doc_b")).as("v"))
+        .filter(col("u") =!= col("v")))
+    if (rows.isEmpty) {
+      def sym(e: DataFrame): DataFrame =
+        e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      // m(center) = min over the closed neighbourhood
+      def mins(s: DataFrame): DataFrame = s
+        .groupBy(col("u").as("c")).agg(min(col("v")).as("mn"))
+        .select(col("c"), least(col("c"), col("mn")).as("m"))
+      // large-star: every neighbour v > center re-links to m; since
+      // m <= center < v the emit is already canonical, and duplicates are
+      // tolerated (the following small-star's groupBy-min absorbs them —
+      // one distinct per round, not two)
+      def largeStar(e: DataFrame): DataFrame = {
+        val s = sym(e)
+        s.filter(col("v") > col("u")).join(mins(s), col("u") === col("c"))
+          .select(col("m").as("u"), col("v"))
+      }
+      def smallStar(e: DataFrame): DataFrame = {
+        val s = sym(e)
+        s.filter(col("v") < col("u")).join(mins(s), col("u") === col("c"))
+          .select(least(col("v"), col("m")).as("u"), greatest(col("v"), col("m")).as("v"))
+          .unionByName(mins(s).select(least(col("c"), col("m")).as("u"),
+            greatest(col("c"), col("m")).as("v")))
+          .filter(col("u") =!= col("v")).distinct()
+      }
+      def checksum(e: DataFrame): (Long, Long) = {
+        val r = e.agg(count(lit(1)),
+          coalesce(bit_xor(gf.mix64(gf.mix64(col("u")).bitwiseXOR(col("v")))), lit(0L)))
+          .collect()(0)
+        (r.getLong(0), r.getLong(1))
+      }
+      // One materialisation per star phase: each phase's plan references
+      // its input from BOTH the filter side and the mins side (and sym
+      // doubles it again) — left unmaterialised, one round's tree
+      // re-evaluates the previous phase 4x (measured 17.6s for the q96
+      // fixture at sf0.1). The first input is the checkpointed front, so
+      // the upstream pair generation runs once.
+      val (distinctEdges, distinctRows) = matz(edges.distinct())
+      edges = distinctEdges
+      rows = distinctRows
+      var chk = (-1L, 0L)
+      var it = 0
+      while (rows.isEmpty) {
+        val next = checksum(edges)
+        // fixed point = disjoint stars rooted at each component's min: a
+        // non-root's sole neighbour is its root; a root keeps itself
+        if (next == chk) return graft.sources.Storage.localizeOrCheckpoint(
+          sym(edges).groupBy(col("u").as("doc_id"))
+            .agg(min(col("v")).as("mn"))
+            .select(col("doc_id"), least(col("doc_id"), col("mn")).as("component")),
+          maxLocalRows)
+        if (it == maxIter) throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds — " +
+            "raise maxIter deliberately")
+        chk = next
+        val (small, smallRows) = matz(smallStar(matz(largeStar(edges))._1))
+        edges = small
+        rows = smallRows
+        it += 1
+      }
     }
-    throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter iterations — " +
-        "graph diameter exceeds the guard; raise maxIter deliberately")
+    localComponents(pairs.sparkSession, rows.get, pairs.schema("doc_a").dataType)
   }
 
   /**
    * Union-find over a size-gated, already-collected edge array — the
-   * local finish shared by [[connectedComponents]] and
-   * [[connectedComponentsStar]]. Component = min vertex id of the
-   * component (the fixpoint both relational forms converge to; union
-   * keeps the smaller root as parent so the final root IS the min).
-   * Output: one row per distinct vertex of the edge set,
-   * `(doc_id, component)`, id column typed like the input.
+   * local finish of [[connectedComponents]]. Component = min vertex id of
+   * the component (union keeps the smaller root as parent, so the final
+   * root IS the min). Output: one row per distinct vertex of the edge
+   * set, `(doc_id, component)`, id column typed like the input.
    */
   private def localComponents(spark: org.apache.spark.sql.SparkSession,
                               edgeRows: Array[org.apache.spark.sql.Row],
@@ -180,141 +214,6 @@ object Dedup {
   }
 
   /**
-   * Connected components by alternating LARGE-STAR / SMALL-STAR rounds
-   * (the two-phase star-contraction scheme of Kiveris et al., "Connected
-   * Components in MapReduce and Beyond", SoCC'14) — the scale path for
-   * HIGH-DIAMETER graphs, where [[connectedComponents]]'s min-label
-   * propagation needs one round per hop (a 10^6-hop chain in a 100-TB
-   * pair graph would mean 10^6 shuffles; star contraction converges in
-   * O(log^2 n) rounds — single digits in practice, diameter-independent).
-   *
-   * Each round is pure relational algebra, no collect_list (so a
-   * high-degree node never materializes its neighborhood in one task):
-   *   large-star: m(u) = min(N(u) ∪ {u}); every neighbor v > u re-links
-   *     to m(u);
-   *   small-star: every neighbor v < u, and u itself, re-links to m(u).
-   * Edges stay canonical (lo < hi) + distinct per round, so the edge set
-   * monotonically contracts toward per-component stars rooted at the
-   * component minimum. Convergence: the canonical edge set is a fixed
-   * point exactly when it is a STAR FOREST (no root appears as a leaf, no
-   * leaf has two roots) — tested driver-side for free on the size-gate
-   * probe rows; the checkpointed big-graph path falls back to
-   * (count, bit_xor of a mix64 edge hash) stability, one extra round
-   * (order-independent, ANSI-overflow-safe; a checksum collision is
-   * guarded by the equivalence spec vs the propagation form).
-   *
-   * Output shape matches [[connectedComponents]]: one row per vertex of
-   * the pair graph, (doc_id, component = component min).
-   */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25,
-                              maxLocalRows: Int = 1 << 20): DataFrame = {
-    def sym(e: DataFrame): DataFrame =
-      e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-    // m(center) = min over the closed neighborhood
-    def mins(s: DataFrame): DataFrame = s
-      .groupBy(col("u").as("c")).agg(min(col("v")).as("mn"))
-      .select(col("c"), least(col("c"), col("mn")).as("m"))
-    // large-star: every neighbor v > center re-links to m; since
-    // m <= center < v the emit is already canonical, and duplicates are
-    // tolerated (the following small-star's groupBy-min absorbs them —
-    // one distinct per round, not two)
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      s.filter(col("v") > col("u")).join(mins(s), col("u") === col("c"))
-        .select(col("m").as("u"), col("v"))
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      s.filter(col("v") < col("u")).join(mins(s), col("u") === col("c"))
-        .select(least(col("v"), col("m")).as("u"), greatest(col("v"), col("m")).as("v"))
-        .unionByName(mins(s).select(least(col("c"), col("m")).as("u"),
-          greatest(col("c"), col("m")).as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    // One materialization per star phase: each phase's plan references its
-    // input from BOTH the filter side and the mins side (and sym doubles
-    // it again) — left unmaterialized, one round's tree re-evaluates the
-    // previous phase 4x (measured 17.6s for the q96 fixture at sf0.1).
-    // The size-gate probe already collects the rows, so convergence is
-    // detected driver-side from the SAME collect: the canonical edge set
-    // is a FIXED POINT exactly when it is a star forest — no (u, v)
-    // chains (roots never appear as leaves) and no leaf shared by two
-    // roots — which ends the loop the round convergence happens instead
-    // of one checksum-equality round later. The checkpointed big-graph
-    // fallback keeps checksum stability (one extra round).
-    def materialize(df: DataFrame): (DataFrame, Option[Array[org.apache.spark.sql.Row]]) = {
-      val spark = df.sparkSession
-      val probe = df.limit(maxLocalRows + 1).collect()
-      if (probe.length <= maxLocalRows)
-        (spark.createDataFrame(java.util.Arrays.asList(probe: _*), df.schema), Some(probe))
-      else (df.localCheckpoint(), None)
-    }
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(bit_xor(gf.mix64(gf.mix64(col("u")).bitwiseXOR(col("v")))), lit(0L)))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    var (edges, local0) = materialize(
-      pairs.select(least(col("doc_a"), col("doc_b")).as("u"),
-          greatest(col("doc_a"), col("doc_b")).as("v"))
-        .filter(col("u") =!= col("v")).distinct())
-    // SIZE-GATED LOCAL FINISH (r6): when the canonical edge set fits the
-    // probe gate, its rows are ALREADY on the driver — one union-find
-    // pass yields the identical fixpoint (component = min id) without
-    // the per-round micro-jobs (measured ~0.6s/round x ~13 rounds on the
-    // q96 fixture even at 1 partition). Past the gate — the 100-TB
-    // regime — the star rounds below run unchanged; they are what
-    // CONTRACTS a huge graph down to (eventually) local size.
-    local0 match {
-      case Some(rows) =>
-        return localComponents(pairs.sparkSession, rows,
-          pairs.schema("doc_a").dataType)
-      case None => ()
-    }
-    val spark = edges.sparkSession
-    var chk = checksum(edges)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val (large, _) = materialize(largeStar(edges))
-      val (small, localRows) = materialize(smallStar(large))
-      edges = small
-      localRows match {
-        case Some(rows) =>
-          // contraction brought the edge set under the local gate:
-          // finish with the same union-find the front gate uses
-          // (connectivity and the vertex set are contraction
-          // invariants — the final star-forest extraction below
-          // relies on exactly the same property)
-          return localComponents(spark, rows, pairs.schema("doc_a").dataType)
-        case None =>
-          val next = checksum(edges)
-          converged = next == chk
-          chk = next
-      }
-      it += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds")
-    // fixed point = disjoint stars rooted at each component's min: a
-    // non-root's sole neighbor is its root; a root keeps itself
-    graft.sources.Storage.localizeOrCheckpoint(
-      sym(edges).groupBy(col("u").as("doc_id"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("doc_id"), least(col("doc_id"), col("mn")).as("component")),
-      maxLocalRows)
-  }
-
-  /**
-   * Leakage-safe train/val/test split (q86): assignment is a hash of the
-   * near-dup COMPONENT id, not the doc id — near-duplicates can never
-   * straddle the train/eval boundary (the contamination a doc-keyed
-   * split invites at corpus scale). Docs outside every pair are their
-   * own singleton component (component = doc_id). Thresholds are
-   * percentage points of `mix64(component) pmod 100`.
-   */
-  /**
    * Incremental connected components (q110): fold a corpus INCREMENT into
    * existing near-dup component labels without recomputing — or even
    * touching — the old corpus's pair graph. State persisted by the
@@ -333,8 +232,7 @@ object Dedup {
    * by closing the FULL verified pair graph recursively.
    */
   def incrementalComponents(oldLabels: DataFrame, oldBands: DataFrame, oldSh: DataFrame,
-                            newDocs: DataFrame, threshold: Double = 0.5,
-                            maxLocalRows: Int = 1 << 20): DataFrame = {
+                            newDocs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val nb = banded(newDocs, "doc_id")
     val nsh = shingleState(newDocs)
     def verify(cand: DataFrame, fa: DataFrame, fb: DataFrame): DataFrame =
@@ -377,8 +275,7 @@ object Dedup {
    * results"); at production scale the caller persists the banded frame
    * across its consumers instead.
    */
-  def verifiedPairs(docs: DataFrame, threshold: Double = 0.5,
-                    maxLocalRows: Int = 1 << 20): DataFrame = {
+  def verifiedPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val bands = banded(docs, "doc_id")
     val feat = shingleState(docs)
     val cand = bands.as("a").join(bands.as("b"),
@@ -392,6 +289,14 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
   }
 
+  /**
+   * Leakage-safe train/val/test split (q86): assignment is a hash of the
+   * near-dup COMPONENT id, not the doc id — near-duplicates can never
+   * straddle the train/eval boundary (the contamination a doc-keyed
+   * split invites at corpus scale). Docs outside every pair are their
+   * own singleton component (component = doc_id). Thresholds are
+   * percentage points of `mix64(component) pmod 100`.
+   */
   def leakageSafeSplit(docs: DataFrame, pairs: DataFrame,
                        trainPct: Int = 90, valPct: Int = 5): DataFrame = {
     require(trainPct + valPct < 100, "need a nonempty test slice")
@@ -445,8 +350,7 @@ object Dedup {
     * construction; DedupSpec pins measured candidate recall vs the brute
     * anchor on the fixture. */
   def embeddingCandidates(emb: DataFrame, nTables: Int = EmbTables,
-                          nBits: Int = EmbBits, seed: Long = EmbSeed,
-                          maxLocalRows: Int = 1 << 20): DataFrame = {
+                          nBits: Int = EmbBits, seed: Long = EmbSeed): DataFrame = {
     val b = embeddingBuckets(emb, nTables, nBits, seed)
     b.select(col("bucket"), col("vec_id").as("vec_a"))
       .join(b.select(col("bucket"), col("vec_id").as("vec_b")), Seq("bucket"))
@@ -466,20 +370,20 @@ object Dedup {
    * id) pairs — embeddings never leave their map side until the verify
    * join; the verify stage joins the (sparse) candidate set back to the
    * embedding table by id (two id-keyed shuffles of only candidate rows);
-   * retention reuses [[connectedComponents]]'s iterative min-label
-   * propagation with size-gated lineage breaks. Driver state is O(1).
+   * retention is [[connectedComponents]] (a driver-side union-find when
+   * the verified pairs fit its size gate, star-contraction rounds past it).
    * The all-pairs brute form exists only as q32's labeled anchor.
    */
   def embeddingKept(emb: DataFrame, threshold: Double = 0.8,
                     nTables: Int = EmbTables, nBits: Int = EmbBits,
-                    seed: Long = EmbSeed, maxLocalRows: Int = 1 << 20): DataFrame = {
-    val cand = embeddingCandidates(emb, nTables, nBits, seed, maxLocalRows)
+                    seed: Long = EmbSeed): DataFrame = {
+    val cand = embeddingCandidates(emb, nTables, nBits, seed)
     val verified = cand
       .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("__ea")), Seq("vec_a"))
       .join(emb.select(col("vec_id").as("vec_b"), col("embedding").as("__eb")), Seq("vec_b"))
       .filter(gf.cosine_sim(col("__ea"), col("__eb")) >= threshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val comps = connectedComponents(verified, maxLocalRows = maxLocalRows)
+    val comps = connectedComponents(verified)
       .withColumnRenamed("doc_id", "vec_id")
     emb.select(col("vec_id"))
       .join(comps, Seq("vec_id"), "left")

@@ -3,9 +3,10 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BPE training (q114/q115): the relational rounds equal a pure-Scala
-  * CLASSIC greedy trainer — pair stats with overlap, argmax with the
-  * (total DESC, s1, s2) tiebreak, sequential left-to-right rewrite. */
+/** BPE training (q114/q115): both the local trainer and the relational
+  * rounds equal a pure-Scala CLASSIC greedy trainer — pair stats with
+  * overlap, argmax with the (total DESC, s1, s2) tiebreak, sequential
+  * left-to-right rewrite. */
 class BpeSpec extends AnyFunSuite {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
@@ -35,33 +36,36 @@ class BpeSpec extends AnyFunSuite {
     (merges.toSeq, state)
   }
 
-  private def engine(freq: Map[String, Long], rounds: Int)
+  private def engine(freq: Map[String, Long], rounds: Int, maxLocalRows: Int)
       : (Seq[(Int, String, String, Long)], Map[String, Seq[String]]) = {
     // docs whose token stream realizes the frequency table exactly
     val text = freq.toSeq.sortBy(_._1)
       .flatMap { case (w, n) => Seq.fill(n.toInt)(w) }.mkString(" ")
     val docs = Seq((0L, text)).toDF("doc_id", "text")
-    val (merges, syms) = Bpe.train(docs, rounds)
+    val (merges, syms) = Bpe.train(docs, rounds, maxLocalRows)
     val tok = syms.collect().groupBy(_.getString(0)).map { case (w, rows) =>
       w -> rows.sortBy(_.getInt(2)).map(_.getString(3)).toSeq
     }
     (merges, tok)
   }
 
+  /** Both trainers against the replica: the default gate takes the local
+    * trainer, `maxLocalRows = 0` forces the relational rounds. */
+  private def agree(freq: Map[String, Long], rounds: Int, what: String = ""): Unit = {
+    val (rm, rt) = replica(freq, rounds)
+    for (gate <- Seq(1 << 20, 0)) {
+      val (em, et) = engine(freq, rounds, gate)
+      assert(em == rm, s"$what gate $gate merges differ:\n$em\n$rm")
+      assert(et == rt, s"$what gate $gate tokenizations differ:\n$et\n$rt")
+    }
+  }
+
   test("matches the textbook greedy trainer on the classic example") {
-    val freq = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
-    val (em, et) = engine(freq, 6)
-    val (rm, rt) = replica(freq, 6)
-    assert(em == rm, s"merges differ:\n$em\n$rm")
-    assert(et == rt)
+    agree(Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L), 6)
   }
 
   test("repeated-symbol runs: greedy == even-offset islands (aaa cases)") {
-    val freq = Map("aaaa" -> 3L, "aaa" -> 2L, "aa" -> 7L, "baaab" -> 1L)
-    val (em, et) = engine(freq, 3)
-    val (rm, rt) = replica(freq, 3)
-    assert(em == rm, s"merges differ:\n$em\n$rm")
-    assert(et == rt, s"tokenizations differ:\n$et\n$rt")
+    agree(Map("aaaa" -> 3L, "aaa" -> 2L, "aa" -> 7L, "baaab" -> 1L), 3)
   }
 
   test("fuzz: random small-alphabet corpora agree for 4 rounds") {
@@ -71,10 +75,7 @@ class BpeSpec extends AnyFunSuite {
         (0 until (2 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString)
       val freq = words.groupBy(identity).map { case (w, g) =>
         w -> (g.size.toLong + rnd.nextInt(3)) }
-      val (em, et) = engine(freq, 4)
-      val (rm, rt) = replica(freq, 4)
-      assert(em == rm, s"trial $trial merges:\n$em\n$rm\nfreq=$freq")
-      assert(et == rt, s"trial $trial tokenization mismatch; freq=$freq")
+      agree(freq, 4, s"trial $trial (freq=$freq)")
     }
   }
 }

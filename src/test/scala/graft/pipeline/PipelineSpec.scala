@@ -202,7 +202,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("connected components == brute union-find (random graphs + chain worst case)") {
-    def brute(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    def brute(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         val p = parent.getOrElse(x, x)
@@ -214,81 +214,39 @@ class PipelineSpec extends AnyFunSuite {
         val rx = find(x); val ry = find(y)
         if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
       }
-      edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
+      edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).sorted
     }
-    // maxLocalRows = 0 forces the RELATIONAL loop (the at-scale path);
-    // the default gate takes the r6 local union-find finish — both must
-    // equal the brute reference (and therefore each other)
-    def engine(edges: Seq[(Long, Long)], maxLocalRows: Int = 1 << 20): Map[Long, Long] =
-      Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"),
+    def engine(edges: Seq[(Long, Long)], maxIter: Int, maxLocalRows: Int): Seq[(Long, Long)] =
+      Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"), maxIter = maxIter,
           maxLocalRows = maxLocalRows).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rnd = new scala.util.Random(7)
-    for (_ <- 0 until 4) {
-      val edges = Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-        .filter(e => e._1 != e._2)
-        .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-      assert(engine(edges) == brute(edges))
-      assert(engine(edges, maxLocalRows = 0) == brute(edges))
-    }
-    // a 16-node chain: diameter 15 — min-label propagation's worst case
-    // inside the default iteration guard
-    val chain = (0L until 15L).map(i => (i, i + 1))
-    val got = engine(chain, maxLocalRows = 0)
-    assert(got.size == 16 && got.values.toSet == Set(0L))
-    assert(engine(chain) == got)
-    // guard trips rather than returning a half-converged labeling (the
-    // relational path; the local finish has no rounds to bound)
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(
-        (0L until 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"), maxIter = 5,
-        maxLocalRows = 0)
-    }
-  }
-
-  test("star-contraction components == union-find; converges where propagation's guard trips") {
-    def brute(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    // the default gate takes the driver-side union-find finish; gate 0
+    // forces the star-contraction rounds (the at-scale path). Both must
+    // equal the brute reference, row for row.
+    def agree(edges: Seq[(Long, Long)], maxIter: Int = 25): Unit =
+      for (gate <- Seq(1 << 20, 0))
+        assert(engine(edges, maxIter, gate) == brute(edges), s"gate $gate on $edges")
+    for (seed <- Seq(7, 11)) {
+      val rnd = new scala.util.Random(seed)
+      for (_ <- 0 until 4) {
+        agree(Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+          .filter(e => e._1 != e._2)
+          .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct)
       }
-      edges.foreach { case (x, y) =>
-        val rx = find(x); val ry = find(y)
-        if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
-      }
-      edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
     }
-    def engine(edges: Seq[(Long, Long)], maxIter: Int = 25,
-               maxLocalRows: Int = 1 << 20): Map[Long, Long] =
-      Dedup.connectedComponentsStar(edges.toDF("doc_a", "doc_b"), maxIter = maxIter,
-        maxLocalRows = maxLocalRows).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rnd = new scala.util.Random(11)
-    for (_ <- 0 until 4) {
-      val edges = Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-        .filter(e => e._1 != e._2)
-        .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-      // both the r6 local union-find finish (default gate) and the
-      // relational star rounds (gate 0) must equal the brute reference
-      assert(engine(edges) == brute(edges))
-      assert(engine(edges, maxLocalRows = 0) == brute(edges))
-    }
-    // a 120-node chain: diameter 119 — min-label propagation THROWS at its
-    // default 20-round guard; star contraction closes it in O(log^2 n)
-    // rounds (the maxIter = 12 below pins "single digits in practice").
-    // Both forced to their relational loops (gate 0).
+    agree((0L until 15L).map(i => (i, i + 1)))
+    // a 120-node chain, diameter 119 (q96's regime): star contraction
+    // closes it in O(log^2 n) rounds — maxIter = 12 pins "single digits
+    // in practice" — where a per-hop scheme would need 119
     val chain = (0L until 119L).map(i => (i, i + 1))
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain.toDF("doc_a", "doc_b"), maxLocalRows = 0)
-    }
-    val got = engine(chain, maxIter = 12, maxLocalRows = 0)
-    assert(got.size == 120 && got.values.toSet == Set(0L))
-    assert(engine(chain) == got)
-    // isolated self-consistency: two disjoint stars stay disjoint
-    val two = Seq((5L, 9L), (5L, 7L), (100L, 200L))
-    assert(engine(two) == brute(two))
-    assert(engine(two, maxLocalRows = 0) == brute(two))
+    agree(chain, maxIter = 12)
+    // the guard throws rather than return a half-contracted labelling
+    intercept[IllegalStateException](engine(chain, maxIter = 1, maxLocalRows = 0))
+    // two disjoint stars stay disjoint
+    agree(Seq((5L, 9L), (5L, 7L), (100L, 200L)))
+    // a self-pair carries no edge and adds no vertex, on both gates
+    for (gate <- Seq(1 << 20, 0))
+      assert(engine(Seq((1L, 1L), (2L, 3L)), 25, gate) == Seq(2L -> 2L, 3L -> 2L))
   }
 
   test("leakage-safe split: connected docs share a split; singletons covered; slices sane") {

@@ -2,9 +2,12 @@
 """Driver-style DuckDB oracle cross-check for a graft.Verify dump.
 
 Usage:
-    python3 tools/check_oracle.py [sfDir] [verifyOutDir]
+    python3 tools/check_oracle.py [sfDir] [verifyOutDir] [name ...]
 
 Defaults: sfDir=/root/testdata/sf0.01, verifyOutDir=/tmp/verify_out.
+Trailing names check only the oracles whose key starts with one of them
+(e.g. `q78 q96`); without them every oracle is checked, and every dump
+with no oracle entry gets a rows-only check (readable parquet, > 0 rows).
 Mirrors the driver's compare: for each entry in oracle_sql.json, run the
 SQL in DuckDB over the sfDir parquet tables (registered by filename
 stem), load the corresponding Spark parquet output, sort columns by name
@@ -20,18 +23,25 @@ import numpy as np
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+    wanted = sys.argv[3:]
     con = duckdb.connect()
     # register every parquet in sfDir by filename stem (table-set agnostic)
     for p in glob.glob(f"{sf}/*.parquet"):
         stem = os.path.basename(p)[: -len(".parquet")]
         con.sql(f"CREATE VIEW {stem} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out}/oracle_sql.json"))
+    ok = n_fail = 0
+    names = sorted(oracles)
+    if wanted:
+        for w in wanted:
+            if not any(k.startswith(w) for k in names):
+                print(f"{w}: no oracle entry matches (NO_ORACLE query?)")
+        names = [k for k in names if any(k.startswith(w) for w in wanted)]
     # dumps without an oracle entry: perform the actual rows-only check
     # (readable parquet, > 0 rows) instead of just listing them
     dumped = {d for d in os.listdir(out)
               if os.path.isdir(os.path.join(out, d))}
-    ok = n_fail = 0
-    for d in sorted(dumped - set(oracles)):
+    for d in [] if wanted else sorted(dumped - set(oracles)):
         try:
             files = glob.glob(f"{out}/{d}/*.parquet")
             n = sum(len(pd.read_parquet(f)) for f in files) if files else -1
@@ -43,7 +53,7 @@ def main():
         except Exception as e:
             print(f"{d}: NO_ORACLE ERR {str(e)[:120]}")
             n_fail += 1
-    for name in sorted(oracles):
+    for name in names:
         try:
             files = glob.glob(f"{out}/{name}/*.parquet")
             if not files:
@@ -86,7 +96,7 @@ def main():
         except Exception as e:
             print(f"{name}: ERR {str(e)[:200]}")
             n_fail += 1
-    print(f"{ok}/{len(oracles)} fully green")
+    print(f"{ok}/{len(names)} fully green")
     sys.exit(1 if n_fail else 0)
 
 
