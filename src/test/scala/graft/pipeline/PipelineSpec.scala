@@ -201,52 +201,62 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Brute union-find by min: every merge roots at the smaller id, so the
+    * final root of each set IS the component minimum. */
+  private def bruteComponents(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (x, y) =>
+      val rx = find(x); val ry = find(y)
+      if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).sorted
+  }
+
+  private def engineComponents(edges: Seq[(Long, Long)], maxIter: Int,
+                               maxLocalRows: Int): Seq[(Long, Long)] =
+    Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"), maxIter = maxIter,
+        maxLocalRows = maxLocalRows).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  /** The default gate takes the driver-side union-find finish; gate 0
+    * forces the star-contraction rounds (the at-scale path). Both must
+    * equal the brute reference, row for row. */
+  private def componentsAgree(edges: Seq[(Long, Long)], maxIter: Int = 25): Unit =
+    for (gate <- Seq(1 << 20, 0))
+      assert(engineComponents(edges, maxIter, gate) == bruteComponents(edges),
+        s"gate $gate on $edges")
+
+  private def randomEdges(seed: Int): Seq[Seq[(Long, Long)]] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(4)(Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+      .filter(e => e._1 != e._2)
+      .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct)
+  }
+
   test("connected components == brute union-find (random graphs + chain worst case)") {
-    def brute(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      // union by min: every merge roots at the smaller id, so the final
-      // root of each set IS the component minimum
-      edges.foreach { case (x, y) =>
-        val rx = find(x); val ry = find(y)
-        if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
-      }
-      edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).sorted
-    }
-    def engine(edges: Seq[(Long, Long)], maxIter: Int, maxLocalRows: Int): Seq[(Long, Long)] =
-      Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"), maxIter = maxIter,
-          maxLocalRows = maxLocalRows).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
-    // the default gate takes the driver-side union-find finish; gate 0
-    // forces the star-contraction rounds (the at-scale path). Both must
-    // equal the brute reference, row for row.
-    def agree(edges: Seq[(Long, Long)], maxIter: Int = 25): Unit =
-      for (gate <- Seq(1 << 20, 0))
-        assert(engine(edges, maxIter, gate) == brute(edges), s"gate $gate on $edges")
-    for (seed <- Seq(7, 11)) {
-      val rnd = new scala.util.Random(seed)
-      for (_ <- 0 until 4) {
-        agree(Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-          .filter(e => e._1 != e._2)
-          .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct)
-      }
-    }
-    agree((0L until 15L).map(i => (i, i + 1)))
-    // a 120-node chain, diameter 119 (q96's regime): star contraction
-    // closes it in O(log^2 n) rounds — maxIter = 12 pins "single digits
-    // in practice" — where a per-hop scheme would need 119
-    val chain = (0L until 119L).map(i => (i, i + 1))
-    agree(chain, maxIter = 12)
+    randomEdges(7).foreach(componentsAgree(_))
+    componentsAgree((0L until 15L).map(i => (i, i + 1)))
     // the guard throws rather than return a half-contracted labelling
-    intercept[IllegalStateException](engine(chain, maxIter = 1, maxLocalRows = 0))
-    // two disjoint stars stay disjoint
-    agree(Seq((5L, 9L), (5L, 7L), (100L, 200L)))
+    intercept[IllegalStateException](
+      engineComponents((0L until 119L).map(i => (i, i + 1)), maxIter = 1, maxLocalRows = 0))
     // a self-pair carries no edge and adds no vertex, on both gates
     for (gate <- Seq(1 << 20, 0))
-      assert(engine(Seq((1L, 1L), (2L, 3L)), 25, gate) == Seq(2L -> 2L, 3L -> 2L))
+      assert(engineComponents(Seq((1L, 1L), (2L, 3L)), 25, gate) == Seq(2L -> 2L, 3L -> 2L))
+  }
+
+  test("star-contraction components == union-find; converges where propagation's guard trips") {
+    randomEdges(11).foreach(componentsAgree(_))
+    // a 120-node chain, diameter 119 (q96's regime): a per-hop scheme such
+    // as min-label propagation needs 119 rounds, past a 20-round guard; star
+    // contraction closes it in O(log^2 n) rounds — maxIter = 12 pins
+    // "single digits in practice"
+    componentsAgree((0L until 119L).map(i => (i, i + 1)), maxIter = 12)
+    // two disjoint stars stay disjoint
+    componentsAgree(Seq((5L, 9L), (5L, 7L), (100L, 200L)))
   }
 
   test("leakage-safe split: connected docs share a split; singletons covered; slices sane") {
