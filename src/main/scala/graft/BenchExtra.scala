@@ -16,9 +16,12 @@ import org.apache.spark.sql.SparkSession
  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
  *     sbt "runMain graft.BenchExtra [--runs N] [--noop] [--explain DIR_SUFFIX] q75 q98 ..."
  *
- * Query args match by prefix (q75 -> q75_knn_boundary). With --noop the
- * timed action is a noop-sink write (every column of every row computed);
- * default is the driver's `count()` action for comparability with Bench.
+ * A query arg names the query itself or its number: `q75` or
+ * `q75_knn_boundary` both select q75_knn_boundary, and `q11` selects
+ * q11_* only, never q110_*; an arg that selects nothing is an error.
+ * With --noop the timed action is a noop-sink write (every column of
+ * every row computed); default is the driver's `count()` action for
+ * comparability with Bench.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -37,14 +40,14 @@ object BenchExtra {
         case q => names += q; i += 1
       }
     }
-    val spark = Bench.session(cpus)
     val all = SparkEntry.queries
     val selected =
       if (names.isEmpty) all.keys.toSeq.sorted
       else names.toSeq.map { n =>
-        all.keys.toSeq.sorted.find(_.startsWith(n)).getOrElse(
-          sys.error(s"no query matches prefix $n"))
+        all.keys.find(k => k == n || k.startsWith(n + "_")).getOrElse(
+          sys.error(s"no query matches $n"))
       }
+    val spark = Bench.session(cpus)
     def runOnce(name: String): Double = {
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()

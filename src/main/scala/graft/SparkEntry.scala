@@ -732,7 +732,7 @@ object SparkEntry {
       // (pipeline.Dedup.duplicatedSpans) — the cut list a curation pass
       // applies before training. 47 docs carry duplicated spans at
       // sf0.01 (the near-dup fixture docs plus self-repetition).
-      graft.pipeline.Dedup.duplicatedSpans(t(s, d, "documents"), n = 8)
+      graft.pipeline.Dedup.duplicatedSpans(t(s, d, "documents"))
     }),
 
     "q102_kmv_quantiles" -> ((s, d) => {
@@ -882,25 +882,9 @@ object SparkEntry {
     "q25_minhash_pairs" -> ((s, d) => {
       graft.functions.registerAll(s)
       // MinHash + LSH banding near-dup pairs: shingle -> 64-slot signature
-      // -> 16 bands of 4 (the shared pipeline.Dedup scheme) -> band-key
-      // equi-join -> exact jaccard >= 0.5
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        gf.word_shingles(col("text"), lit(3)).as("sh"))
-      // candidate pairs deduped on ids ONLY (never shuffle the shingle
-      // arrays), then features re-joined for exact verification
-      val banded = graft.pipeline.Dedup.banded(t(s, d, "documents"), "doc_id")
-      val a = banded.as("a"); val b = banded.as("b")
-      val pairs = a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val feat = docs.select(col("doc_id"), col("sh"))
-      pairs
-        .join(feat.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-        .join(feat.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .filter(col("jaccard") >= 0.5)
+      // -> 16 bands of 4 -> band-key equi-join -> exact jaccard >= 0.5
+      // (the shared pipeline.Dedup funnel)
+      graft.pipeline.Dedup.verifiedPairs(t(s, d, "documents"))
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
     }),
 
@@ -1161,11 +1145,7 @@ object SparkEntry {
           gf.minhash(col("sh0"), lit(graft.pipeline.Dedup.MinhashK),
             lit(graft.pipeline.Dedup.MinhashSeed)).as("sig"),
           col("sh0"))
-      val banded = graft.pipeline.Dedup.banded(docs, "doc_id")
-      val cand = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct()
-      cand
+      graft.pipeline.Dedup.candidatePairs(graft.pipeline.Dedup.banded(docs, "doc_id"))
         .join(feats.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
           col("sh0").as("sh_a")), Seq("doc_a"))
         .join(feats.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
@@ -1191,20 +1171,7 @@ object SparkEntry {
       // on real UTF-8 bytes, not just the ASCII ord()==byte shortcut —
       // the oracle folds encode()'d hex pairs (fnvSqlBytes)
       val corpus = graft.sources.Storage.localize(Utf8Corpus.toDF("doc_id", "text"))
-      val docs = corpus.select(col("doc_id"), gf.word_shingles(col("text"), lit(3)).as("sh"))
-      val banded = graft.pipeline.Dedup.banded(corpus, "doc_id")
-      val a = banded.as("a"); val b = banded.as("b")
-      val pairs = a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val feat = docs.select(col("doc_id"), col("sh"))
-      pairs
-        .join(feat.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-        .join(feat.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .filter(col("jaccard") >= 0.5)
+      graft.pipeline.Dedup.verifiedPairs(corpus)
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
     }),
 
@@ -1244,16 +1211,8 @@ object SparkEntry {
       // state as the previous run would have persisted it
       val oldBands = graft.pipeline.Dedup.banded(old, "doc_id")
       val oldSh = graft.pipeline.Dedup.shingleState(old)
-      val oldCand = oldBands.as("a").join(oldBands.as("b"),
-          col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct()
-      val oldPairs = oldCand
-        .join(oldSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-        .join(oldSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-        .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double") >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val oldLabels = graft.pipeline.Dedup.connectedComponents(oldPairs)
+      val oldLabels = graft.pipeline.Dedup.connectedComponents(
+        graft.pipeline.Dedup.verifiedPairs(old))
       graft.pipeline.Dedup.incrementalComponents(oldLabels, oldBands, oldSh, inc)
         .withColumn("kept", col("doc_id") === col("component"))
         .withColumn("is_new", col("doc_id") > lit(splitId))
@@ -1331,8 +1290,7 @@ object SparkEntry {
       // re-reading parquet + re-deriving the perturbation per branch
       // (the q62 localize discipline; measured ~5s -> ~2s in the suite)
       graft.pipeline.Dedup.embeddingKept(
-        graft.sources.Storage.localize(graft.data.Fixtures.embDupCorpus(s, d)),
-        threshold = 0.8)
+        graft.sources.Storage.localize(graft.data.Fixtures.embDupCorpus(s, d)))
     }),
 
     // ---- corpus-TRAINED n-gram LM quality filter (r4 verdict item 2):
@@ -1768,15 +1726,10 @@ object SparkEntry {
     "q30_knn_brute" -> ((s, d) => {
       graft.functions.registerAll(s)
       val emb = t(s, d, "embeddings")
-      val queriesDf = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      emb.crossJoin(broadcast(queriesDf))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", gf.cosine_sim(col("embedding"), col("qvec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      graft.pipeline.Ann.bruteTopK(emb,
+          emb.filter(col("vec_id") < 8)
+            .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
+          k = 10)
         .select(col("query_id"), col("rank"), col("vec_id"))
     }),
 
@@ -1809,13 +1762,7 @@ object SparkEntry {
       val qs = corpus.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
       val lsh = graft.pipeline.Ann.lshTopK(corpus, qs, k = 10)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      val brute = corpus.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", gf.cosine_sim(col("embedding"), col("qvec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      val brute = graft.pipeline.Ann.bruteTopK(corpus, qs, k = 10)
         .select(col("query_id"), col("rank"), col("vec_id"))
       val top1 = brute.filter(col("rank") === 1)
         .select(col("query_id"), col("vec_id").as("top1_id"))

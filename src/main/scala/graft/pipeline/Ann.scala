@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -8,15 +8,28 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.{functions => gf}
 
 /**
- * Approximate-nearest-neighbor search over an embedding column
- * (`ARRAY<FLOAT>`), IVF-style: the corpus is partitioned into `nLists`
- * inverted lists by nearest coarse centroid; a query probes only the
- * `nProbe` nearest lists and ranks exactly within them.
+ * Nearest-neighbor search over an embedding column (`ARRAY<FLOAT>`): the
+ * ONE definition of each candidate scheme and of the exact ranking they
+ * all end in. Queries are `(query_id, qvec)`; a vector never ranks as its
+ * own neighbor.
  *
- * Scale shape: the centroid set is tiny (broadcast); list assignment is a
- * map-side argmax per vector (one pass, no shuffle of the corpus beyond
- * the final per-query top-k); candidate generation is an equi-join on
- * `list_id`. Recall < 1 by construction (a neighbor whose list isn't
+ *  - [[bruteTopK]]: every vector is a candidate (the exact anchor, q30;
+ *    q93 grades the LSH funnel against it);
+ *  - [[lshTopK]]: candidates share a [[lshBuckets]] hyperplane bucket with
+ *    the query (q31, q93) — the same buckets [[Dedup.embeddingBuckets]]
+ *    uses for embedding near-dup retention (q89);
+ *  - [[ivfTopK]]: IVF-style — the corpus is partitioned into `nLists`
+ *    inverted lists by nearest coarse centroid; a query probes only the
+ *    `nProbe` nearest lists (q36, q62).
+ *
+ * Each ends in one rank tail: exact cosine `sim`, `row_number` by
+ * (`sim` desc, `vec_id`), `rank <= k`, output
+ * `(query_id, rank, vec_id, sim)`.
+ *
+ * IVF scale shape: the centroid set is tiny (broadcast); list assignment
+ * is a map-side argmax per vector (one pass, no shuffle of the corpus
+ * beyond the final per-query top-k); candidate generation is an equi-join
+ * on `list_id`. Recall < 1 by construction (a neighbor whose list isn't
  * probed is missed) — tested against the brute-force oracle.
  *
  * The deterministic "trained" quantizer — centroids are just a fixed
@@ -98,38 +111,38 @@ object Ann {
         first(col("embedding")).as("embedding"))
       .select(col("vec_id"), col("list_id"), col("embedding"))
 
-  /**
-   * Hyperplane-LSH top-k (q31's funnel as a reusable operator, shared
-   * with the q93 recall surface): candidates share any of `nTables`
-   * bucket tables with the query (bucket-keyed equi-join — candidate
-   * generation never touches non-colliding vectors), then exact cosine
-   * top-k within candidates. `queries` = (query_id, qvec). Recall < 1 by
-   * construction; q93 grades it against the brute anchor per query point.
-   */
-  def lshTopK(emb: DataFrame, queries: DataFrame, k: Int,
-              nTables: Int = 4, nBits: Int = 8, seed: Long = 100L): DataFrame = {
-    def buckets(v: org.apache.spark.sql.Column) =
-      array((0 until nTables).map(i =>
-        concat(lit(i), lit(":"), gf.hyperplane_lsh(v, lit(nBits), lit(seed + i)))): _*)
-    val flat = emb.select(col("vec_id"), col("embedding"),
-      explode(buckets(col("embedding"))).as("bucket"))
-    val qflat = queries.select(col("query_id"), col("qvec"),
-      explode(buckets(col("qvec"))).as("qbucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    flat.join(broadcast(qflat), col("bucket") === col("qbucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("embedding"), col("qvec")).distinct()
-      .withColumn("sim", gf.cosine_sim(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("sim"))
-  }
+  /** The hyperplane-LSH bucket keys of vector `v`, one per table: 4
+    * tables of 8 sign bits, table i seeded 100 + i, each key
+    * "tbl:signBits" (bit stride in `TextOps.hyperplaneLsh`). The q31 and
+    * q89 DuckDB replays publish the same hyperplane literals. */
+  def lshBuckets(v: Column): Column =
+    array((0 until 4).map(i =>
+      concat(lit(i), lit(":"), gf.hyperplane_lsh(v, lit(8), lit(100L + i)))): _*)
+
+  /** Exact cosine top-k per query over every corpus vector. */
+  def bruteTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(emb.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("query_id")), k)
 
   /**
-   * Top-k per query over the probed lists. `queries` = (query_id, qvec).
-   * Exact cosine ranking within candidates; ties broken by vec_id.
+   * Hyperplane-LSH top-k (q31's funnel as a reusable operator, shared
+   * with the q93 recall surface): candidates share any [[lshBuckets]]
+   * table with the query (bucket-keyed equi-join — candidate generation
+   * never touches non-colliding vectors), then the exact rank tail within
+   * candidates. Recall < 1 by construction; q93 grades it against
+   * [[bruteTopK]] per query point.
    */
+  def lshTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val flat = emb.select(col("vec_id"), col("embedding"),
+      explode(lshBuckets(col("embedding"))).as("bucket"))
+    val qflat = queries.select(col("query_id"), col("qvec"),
+      explode(lshBuckets(col("qvec"))).as("qbucket"))
+    rankTopK(flat.join(broadcast(qflat), col("bucket") === col("qbucket"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), col("embedding"), col("qvec")).distinct(), k)
+  }
+
+  /** Top-k per query over the probed lists. */
   def ivfTopK(emb: DataFrame, queries: DataFrame, k: Int,
               nLists: Int, nProbe: Int, trainIters: Int = 0): DataFrame = {
     val cents = if (trainIters > 0) kmeansCentroids(emb, nLists, trainIters)
@@ -142,12 +155,18 @@ object Ann {
       .withColumn("prnk", row_number().over(probeW))
       .filter(col("prnk") <= nProbe)
       .select(col("query_id"), col("qvec"), col("list_id"))
-    val rankW = Window.partitionBy(col("query_id"))
+    rankTopK(probes.join(lists, "list_id")
+      .filter(col("vec_id") =!= col("query_id")), k)
+  }
+
+  /** The exact rank tail of every top-k above: `cands` carries
+    * (query_id, vec_id, embedding, qvec). Ties break by vec_id. */
+  private def rankTopK(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    probes.join(lists, "list_id")
-      .filter(col("vec_id") =!= col("query_id"))
+    cands
       .withColumn("sim", gf.cosine_sim(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(rankW))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("sim"))
   }

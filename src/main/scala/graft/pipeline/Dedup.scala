@@ -6,11 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.{functions => gf}
 
 /**
- * The ONE definition of the engine's MinHash-LSH banding scheme, shared by
- * the batch pair query (q25), the batch first-wins retention (q63), the
- * curation funnel's near-dup stage (q65), and the streaming form
- * ([[graft.streaming.NearDup]]) — a parameter change here changes all four
- * together, so batch and stream can never silently diverge.
+ * The ONE definition of the engine's near-dup funnels, candidate -> verify
+ * -> retain:
+ *  - minhash: [[banded]] LSH bands -> [[candidatePairs]] (band-keyed
+ *    self-join) -> exact shingle jaccard >= [[JaccardThreshold]]
+ *    ([[verifiedPairs]]) -> first-wins or component retention. Shared by
+ *    the pair queries (q25, q76, q113), the retention queries (q63, q65,
+ *    q78, q86, q87, q105, q110), the estimate audit (q111) and the
+ *    streaming form ([[graft.streaming.NearDup]]);
+ *  - embedding: [[Ann.lshBuckets]] hyperplane buckets ->
+ *    [[embeddingCandidates]] -> exact cosine >= [[CosineThreshold]] ->
+ *    component retention ([[embeddingKept]], q89).
+ * Every scheme parameter is a constant here (the DuckDB oracles replay
+ * the same values), so a change here changes every caller together and
+ * batch and stream can never silently diverge.
  */
 object Dedup {
 
@@ -18,6 +27,12 @@ object Dedup {
   val MinhashK = 64
   val MinhashSeed = 7L
   val RowsPerBand = 4
+  /** Minimum word-shingle jaccard of a verified minhash pair. */
+  val JaccardThreshold = 0.5
+  /** Minimum cosine of a verified embedding pair (q89). */
+  val CosineThreshold = 0.8
+  /** Words per gram of [[duplicatedSpans]] (q101). */
+  val SpanN = 8
 
   /**
    * One row per (passthrough columns, `band`): the 16 LSH band keys of the
@@ -232,27 +247,19 @@ object Dedup {
    * by closing the FULL verified pair graph recursively.
    */
   def incrementalComponents(oldLabels: DataFrame, oldBands: DataFrame, oldSh: DataFrame,
-                            newDocs: DataFrame, threshold: Double = 0.5): DataFrame = {
+                            newDocs: DataFrame): DataFrame = {
     val nb = banded(newDocs, "doc_id")
     val nsh = shingleState(newDocs)
-    def verify(cand: DataFrame, fa: DataFrame, fb: DataFrame): DataFrame =
-      cand.join(fa.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-        .join(fb.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-        .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double") >= threshold)
-        .select(col("doc_a"), col("doc_b"))
-    val nn = verify(
-      nb.as("a").join(nb.as("b"),
-          col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct(),
-      nsh, nsh)
+    val nn = verify(candidatePairs(nb), nsh, nsh)
     val on = verify(
       oldBands.as("o").join(nb.as("n"), col("o.band") === col("n.band"))
         .select(col("o.doc_id").as("doc_a"), col("n.doc_id").as("doc_b")).distinct(),
       oldSh, nsh)
     val labelEdges = oldLabels.filter(col("doc_id") =!= col("component"))
       .select(col("doc_id").as("doc_a"), col("component").as("doc_b"))
-    connectedComponents(nn.unionByName(on).unionByName(labelEdges))
+    connectedComponents(nn.select(col("doc_a"), col("doc_b"))
+      .unionByName(on.select(col("doc_a"), col("doc_b")))
+      .unionByName(labelEdges))
   }
 
   /** The per-doc feature state [[incrementalComponents]] verifies with:
@@ -262,31 +269,44 @@ object Dedup {
     docs.withColumn("sh", gf.word_shingles(col("text"), lit(ShingleN)))
       .filter(size(col("sh")) > 0).select(col("doc_id"), col("sh"))
 
-  /**
-   * The jaccard-verified near-dup pair graph — the shared front half of
-   * q78 (component retention), q86 (leakage-safe split) and q105
-   * (best-of-cluster): [[banded]] LSH candidates (band-keyed ids-only
-   * self-join) -> exact word-[[ShingleN]]-shingle jaccard on candidates
-   * only. Deliberately LAZY (r6 measurement): the self-join evaluates the
-   * minhash kernel twice and the two verify joins the shingle kernel
-   * twice more, but materializing either frame adds a job (~0.3-0.5 s)
-   * that buys back only ~50-100 ms of kernel re-evaluation at bench
-   * scale — measured net-negative (OPTIMIZATION_r06.md "Negative
-   * results"); at production scale the caller persists the banded frame
-   * across its consumers instead.
-   */
-  def verifiedPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val bands = banded(docs, "doc_id")
-    val feat = shingleState(docs)
-    val cand = bands.as("a").join(bands.as("b"),
+  /** Distinct minhash candidate pairs `(doc_a, doc_b)`, `doc_a < doc_b`:
+    * the docs sharing any band of a `banded(…, "doc_id")` frame. The
+    * band-keyed self-join shuffles ids only, never shingle arrays. */
+  def candidatePairs(bands: DataFrame): DataFrame =
+    bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct()
+
+  /** The verify stage: candidate `(doc_a, doc_b)` joined to the shingle
+    * state of each side ([[shingleState]] frames), kept when the exact
+    * jaccard is >= [[JaccardThreshold]]. Output `(doc_a, doc_b, jaccard)`,
+    * jaccard unrounded. */
+  private def verify(cand: DataFrame, featA: DataFrame, featB: DataFrame): DataFrame =
     cand
-      .join(feat.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(feat.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))).cast("double") >= threshold)
-      .select(col("doc_a"), col("doc_b"))
+      .join(featA.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
+      .join(featB.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
+      .withColumn("jaccard",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .filter(col("jaccard") >= JaccardThreshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+
+  /**
+   * The jaccard-verified near-dup pair graph `(doc_a, doc_b, jaccard)`:
+   * [[candidatePairs]] over the [[banded]] docs -> [[verify]] against
+   * their [[shingleState]]. q25 and q76 report the jaccard, q113 counts
+   * the pairs per source pair, and the retention queries (q78, q86, q105,
+   * q110) close the graph with [[connectedComponents]]. Deliberately LAZY (r6 measurement): the
+   * self-join evaluates the minhash kernel twice and the two verify joins
+   * the shingle kernel twice more, but materializing either frame adds a
+   * job (~0.3-0.5 s) that buys back only ~50-100 ms of kernel
+   * re-evaluation at bench scale — measured net-negative
+   * (OPTIMIZATION_r06.md "Negative results"); at production scale the
+   * caller persists the banded frame across its consumers instead.
+   */
+  def verifiedPairs(docs: DataFrame): DataFrame = {
+    val feat = shingleState(docs)
+    verify(candidatePairs(banded(docs, "doc_id")), feat, feat)
   }
 
   /**
@@ -294,12 +314,11 @@ object Dedup {
    * near-dup COMPONENT id, not the doc id — near-duplicates can never
    * straddle the train/eval boundary (the contamination a doc-keyed
    * split invites at corpus scale). Docs outside every pair are their
-   * own singleton component (component = doc_id). Thresholds are
-   * percentage points of `mix64(component) pmod 100`.
+   * own singleton component (component = doc_id). The split is
+   * 90/5/5 percentage points of `mix64(component) pmod 100`.
    */
-  def leakageSafeSplit(docs: DataFrame, pairs: DataFrame,
-                       trainPct: Int = 90, valPct: Int = 5): DataFrame = {
-    require(trainPct + valPct < 100, "need a nonempty test slice")
+  def leakageSafeSplit(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val (trainPct, valPct) = (90, 5)
     val comps = connectedComponents(pairs)
     val bucket = pmod(graft.functions.mix64(col("component")), lit(100L))
     docs.select(col("doc_id"))
@@ -318,40 +337,26 @@ object Dedup {
   // instead of text shingles. No stage is all-pairs.
   // -------------------------------------------------------------------
 
-  /** q89's hyperplane-LSH table/bit/seed constants — q31's exact scheme
-    * (seed base 100, bit stride in `TextOps.hyperplaneLsh`), so the
-    * DuckDB replay reuses the same published hyperplane literals. */
-  val EmbTables = 4
-  val EmbBits = 8
-  val EmbSeed = 100L
-
-  /** One row per (vec_id, bucket): the vector's LSH bucket in each of
-    * `nTables` hyperplane tables ("tbl:signBits"). The q31 candidate
-    * scheme as a reusable frame.
+  /** One row per (vec_id, bucket): the vector's bucket in each
+    * [[Ann.lshBuckets]] hyperplane table ("tbl:signBits") — q31's
+    * candidate scheme as a reusable frame, so the DuckDB replay reuses the
+    * same published hyperplane literals.
     *
-    * Sizing at scale: expected bucket size is n / 2^nBits per table, and
-    * the candidate join below is quadratic IN THE BUCKET — `nBits` must
-    * grow with log2(corpus) (e.g. 2^40 vectors -> ~30+ bits keeps buckets
-    * ~1k) exactly as minhash band width tracks target similarity. The
-    * parameters are explicit so the 10^12-row deployment sets them; the
-    * fixture uses q31's 4x8 so the oracle's hyperplane constants are
-    * shared. */
-  def embeddingBuckets(emb: DataFrame, nTables: Int = EmbTables,
-                       nBits: Int = EmbBits, seed: Long = EmbSeed): DataFrame =
-    emb.select(col("vec_id"),
-      explode(array((0 until nTables).map(i =>
-        concat(lit(i), lit(":"),
-          gf.hyperplane_lsh(col("embedding"), lit(nBits), lit(seed + i)))): _*))
-        .as("bucket"))
+    * Sizing at scale: expected bucket size is n / 2^bits per table, and
+    * the candidate join below is quadratic IN THE BUCKET — the bit count
+    * must grow with log2(corpus) (e.g. 2^40 vectors -> ~30+ bits keeps
+    * buckets ~1k) exactly as minhash band width tracks target similarity.
+    * The fixture's 4x8 scheme is the one in use. */
+  def embeddingBuckets(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), explode(Ann.lshBuckets(col("embedding"))).as("bucket"))
 
   /** Distinct candidate pairs (vec_a < vec_b) sharing any table's bucket —
     * a bucket-keyed equi-join (shuffles ids only, never embeddings), the
     * embedding analog of minhash band collision. Recall < 1 by
-    * construction; DedupSpec pins measured candidate recall vs the brute
-    * anchor on the fixture. */
-  def embeddingCandidates(emb: DataFrame, nTables: Int = EmbTables,
-                          nBits: Int = EmbBits, seed: Long = EmbSeed): DataFrame = {
-    val b = embeddingBuckets(emb, nTables, nBits, seed)
+    * construction; EmbeddingDedupSpec pins measured candidate recall vs
+    * the brute anchor on the fixture. */
+  def embeddingCandidates(emb: DataFrame): DataFrame = {
+    val b = embeddingBuckets(emb)
     b.select(col("bucket"), col("vec_id").as("vec_a"))
       .join(b.select(col("bucket"), col("vec_id").as("vec_b")), Seq("bucket"))
       .filter(col("vec_a") < col("vec_b"))
@@ -361,9 +366,9 @@ object Dedup {
 
   /**
    * Scalable embedding near-dup retention (q89): LSH candidates ->
-   * exact-cosine verify ON CANDIDATES ONLY -> connected-component
-   * retention (keep = smallest vec_id of its component; singletons keep
-   * themselves). Returns one row per input vector:
+   * exact-cosine verify (>= [[CosineThreshold]]) ON CANDIDATES ONLY ->
+   * connected-component retention (keep = smallest vec_id of its
+   * component; singletons keep themselves). Returns one row per input vector:
    * `(vec_id, component, kept)`.
    *
    * Scale shape, stage by stage: candidate generation shuffles (bucket,
@@ -374,14 +379,12 @@ object Dedup {
    * the verified pairs fit its size gate, star-contraction rounds past it).
    * The all-pairs brute form exists only as q32's labeled anchor.
    */
-  def embeddingKept(emb: DataFrame, threshold: Double = 0.8,
-                    nTables: Int = EmbTables, nBits: Int = EmbBits,
-                    seed: Long = EmbSeed): DataFrame = {
-    val cand = embeddingCandidates(emb, nTables, nBits, seed)
+  def embeddingKept(emb: DataFrame): DataFrame = {
+    val cand = embeddingCandidates(emb)
     val verified = cand
       .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("__ea")), Seq("vec_a"))
       .join(emb.select(col("vec_id").as("vec_b"), col("embedding").as("__eb")), Seq("vec_b"))
-      .filter(gf.cosine_sim(col("__ea"), col("__eb")) >= threshold)
+      .filter(gf.cosine_sim(col("__ea"), col("__eb")) >= CosineThreshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val comps = connectedComponents(verified)
       .withColumnRenamed("doc_id", "vec_id")
@@ -409,7 +412,7 @@ object Dedup {
   /**
    * Exact-substring duplicated spans (q101) — the "dedup of repeated
    * sequences" stage (word-level analog of suffix-array substring dedup):
-   * every word `n`-gram occurring ≥ 2 times ANYWHERE in the corpus
+   * every word [[SpanN]]-gram occurring ≥ 2 times ANYWHERE in the corpus
    * (cross-doc or self-repetition) marks its span; overlapping-or-
    * adjacent marked spans merge per doc into maximal
    * `[span_start, span_end]` word ranges — the ranges a curation pass
@@ -423,8 +426,9 @@ object Dedup {
    * spans a corpus). Identical semantics replay in the DuckDB oracle via
    * the q70 tokenization parity forms + gaps-and-islands windows.
    */
-  def duplicatedSpans(docs: DataFrame, n: Int = 8): DataFrame = {
+  def duplicatedSpans(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val n = SpanN
     val grams = docs
       .select(col("doc_id"), posexplode(gf.word_shingles(col("text"), lit(n))))
       .select(col("doc_id"), col("pos"), gf.hash_text(col("col")).as("g"))

@@ -238,7 +238,7 @@ object SpatialJoin {
    * escalating stages plus a provably-tiny exact tail:
    *
    *   stage 1 (the hot path): every hole centroid expanded into its disk
-   *   of cells up to `radius` rings at `level` (broadcast); pages probe
+   *   of cells up to 3 rings at level 11 (broadcast); pages probe
    *   ONE cell (map-side, zero explode on the probe stream), candidates
    *   refine by exact haversine + per-page top-k window, and an exactness
    *   certificate keeps only pages whose kth hit is provably closer than
@@ -257,9 +257,8 @@ object SpatialJoin {
    * Exact = matches brute force at every stage, verified in tests.
    */
   def knnCourses(pagesIn: DataFrame, bounds: DataFrame, k: Int,
-                 level: Int = 11, radius: Int = 3,
                  maxLocalRows: Int = 1 << 20): DataFrame =
-    knnStaged(pagesIn, knnCentroids(bounds), k, level, radius, maxLocalRows,
+    knnStaged(pagesIn, knnCentroids(bounds), k, maxLocalRows,
       slackM = 0.0,
       dist = st_distance_m(col("lon"), col("lat"), col("clon"), col("clat")))
 
@@ -283,7 +282,6 @@ object SpatialJoin {
    * bound (r4 ADVICE item).
    */
   def knnCoursesBoundary(pagesIn: DataFrame, bounds: DataFrame, k: Int,
-                         level: Int = 11, radius: Int = 3,
                          maxLocalRows: Int = 1 << 20): DataFrame = {
     val dim = knnCentroids(bounds)
       .join(bounds.select(col("clubId"), col("courseId"), col("holeNumber"),
@@ -302,7 +300,7 @@ object SpatialJoin {
         st_distance_m(cx, cy, col("env.minx"), col("env.maxy")),
         st_distance_m(cx, cy, col("env.minx"), col("env.miny")))), lit(0.0)))
       .collect()(0).getDouble(0)
-    knnStaged(pagesIn, dim, k, level, radius, maxLocalRows,
+    knnStaged(pagesIn, dim, k, maxLocalRows,
       slackM = envRadM,
       dist = st_distance_to_shell_m(col("bflat"), col("lon"), col("lat")))
   }
@@ -322,8 +320,11 @@ object SpatialJoin {
   // leaves whole-stage codegen AND re-boxes every element_at. Same float
   // operation order, so ranks (the graded output) are unchanged.
 
-  private def knnStaged(pagesIn: DataFrame, dim: DataFrame, k: Int,
-                        level: Int, radius: Int, maxLocalRows: Int,
+  // the staged kNN's cell level and stage-1 disk radius in rings
+  private val KnnLevel = 11
+  private val KnnRadius = 3
+
+  private def knnStaged(pagesIn: DataFrame, dim: DataFrame, k: Int, maxLocalRows: Int,
                         slackM: Double, dist: Column): DataFrame = {
     // project the probe stream to the three columns the algorithm needs
     // BEFORE the first window: carrying html/text through the rank
@@ -333,7 +334,7 @@ object SpatialJoin {
     val w = Window.partitionBy(col("url"))
       .orderBy(col("dist_m"), col("clubId"), col("courseId"), col("holeNumber"))
     val urlW = Window.partitionBy(col("url"))
-    val cellDeg = 180.0 / (1L << level)
+    val cellDeg = 180.0 / (1L << KnnLevel)
     // Exactness certificate at disk radius r: a centroid OUTSIDE the
     // r-disk is >= r+1 cells away in Chebyshev terms, i.e. separated by
     // >= r full cells along some axis — at least `r * min(cell-height,
@@ -395,12 +396,12 @@ object SpatialJoin {
       }
     // stage 1: centroid-side disk broadcast, single-cell probe
     val expanded = centroids
-      .withColumn("cell", explode(disk_cells(cell_id(col("clon"), col("clat"), lit(level)), lit(radius))))
+      .withColumn("cell", explode(disk_cells(cell_id(col("clon"), col("clat"), lit(KnnLevel)), lit(KnnRadius))))
     val (cert1, cert1Rows) = matz(topkCertified(
       pagesM
-        .withColumn("cell", cell_id(col("lon"), col("lat"), lit(level)))
+        .withColumn("cell", cell_id(col("lon"), col("lat"), lit(KnnLevel)))
         .join(broadcast(expanded), "cell"),
-      radius).select(cols.map(col): _*))
+      KnnRadius).select(cols.map(col): _*))
     // uncertain sets are TINY by construction (the certificate covers the
     // dense common case) but feed two branches each — materialized (size-
     // gated: a polar-heavy slice where the certificate certifies nothing
@@ -410,9 +411,9 @@ object SpatialJoin {
 
     // stage 2: page-side disk expansion at 4x radius against the
     // single-cell centroid dim
-    val r2 = radius * 4
+    val r2 = KnnRadius * 4
     val centCells = centroids
-      .withColumn("cell", cell_id(col("clon"), col("clat"), lit(level)))
+      .withColumn("cell", cell_id(col("clon"), col("clat"), lit(KnnLevel)))
     // short-circuit (r6): stage 1 certifying EVERY page is the dense
     // common case — a provably-empty uncertain set needs no stage-2 job
     val (cert2, cert2Rows) =
@@ -422,7 +423,7 @@ object SpatialJoin {
           Some(Array.empty[org.apache.spark.sql.Row]))
       else matz(topkCertified(
         uncertain1
-          .withColumn("cell", explode(disk_cells(cell_id(col("lon"), col("lat"), lit(level)), lit(r2))))
+          .withColumn("cell", explode(disk_cells(cell_id(col("lon"), col("lat"), lit(KnnLevel)), lit(r2))))
           .join(broadcast(centCells), "cell"),
         r2).select(cols.map(col): _*))
     val (uncertain2, _) = complement(uncertain1, uncertain1Rows, cert2, cert2Rows)

@@ -14,7 +14,7 @@ class EmbeddingDedupSpec extends AnyFunSuite {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
-  private val Threshold = 0.8
+  private val Threshold = Dedup.CosineThreshold
 
   private lazy val corpus =
     graft.data.Fixtures.embDupCorpus(spark, "/root/testdata/sf0.001").cache()
@@ -72,7 +72,7 @@ class EmbeddingDedupSpec extends AnyFunSuite {
   }
 
   test("retention: originals kept, caught dups fold into their original's component") {
-    val kept = Dedup.embeddingKept(corpus, Threshold)
+    val kept = Dedup.embeddingKept(corpus)
       .select($"vec_id", $"component", $"kept")
       .as[(Long, Long, Boolean)].collect()
     val byId = kept.map(r => r._1 -> r).toMap

@@ -8,7 +8,7 @@ class SubstringDedupSpec extends AnyFunSuite {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
-  private val N = 8
+  private val N = Dedup.SpanN
 
   /** Pure-Scala replica: duplicated n-gram starts -> merged spans. */
   private def brute(docs: Seq[(Long, String)], n: Int): Set[(Long, Int, Int)] = {
@@ -32,7 +32,7 @@ class SubstringDedupSpec extends AnyFunSuite {
   }
 
   private def run(docs: Seq[(Long, String)]): Set[(Long, Int, Int)] =
-    Dedup.duplicatedSpans(docs.toDF("doc_id", "text"), N).collect()
+    Dedup.duplicatedSpans(docs.toDF("doc_id", "text")).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("span_start"), r.getAs[Int]("span_end")))
       .toSet
 

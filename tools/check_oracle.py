@@ -5,9 +5,11 @@ Usage:
     python3 tools/check_oracle.py [sfDir] [verifyOutDir] [name ...]
 
 Defaults: sfDir=/root/testdata/sf0.01, verifyOutDir=/tmp/verify_out.
-Trailing names check only the oracles whose key starts with one of them
-(e.g. `q78 q96`); without them every oracle is checked, and every dump
-with no oracle entry gets a rows-only check (readable parquet, > 0 rows).
+Trailing names check only the oracles they select: a name selects the key
+equal to it or starting with it plus "_" (`q11` selects q11_*, never
+q110_*), and a name that selects no oracle is a failure. Without names
+every oracle is checked, and every dump with no oracle entry gets a
+rows-only check (readable parquet, > 0 rows).
 Mirrors the driver's compare: for each entry in oracle_sql.json, run the
 SQL in DuckDB over the sfDir parquet tables (registered by filename
 stem), load the corresponding Spark parquet output, sort columns by name
@@ -33,10 +35,13 @@ def main():
     ok = n_fail = 0
     names = sorted(oracles)
     if wanted:
+        def picks(w, k):
+            return k == w or k.startswith(w + "_")
         for w in wanted:
-            if not any(k.startswith(w) for k in names):
-                print(f"{w}: no oracle entry matches (NO_ORACLE query?)")
-        names = [k for k in names if any(k.startswith(w) for w in wanted)]
+            if not any(picks(w, k) for k in names):
+                print(f"{w}: FAIL no oracle entry matches (NO_ORACLE query?)")
+                n_fail += 1
+        names = [k for k in names if any(picks(w, k) for w in wanted)]
     # dumps without an oracle entry: perform the actual rows-only check
     # (readable parquet, > 0 rows) instead of just listing them
     dumped = {d for d in os.listdir(out)
