@@ -17,7 +17,7 @@ object ScalingBench {
   /** Warm-up run (JIT the same generated code: identical plan constants),
     * then `repeats` timed runs of [[Bench.flagship]]: (pages, best join
     * seconds, best tile seconds). */
-  def bestFlagship(spark: SparkSession, sfDir: String, amplify: Int, repeats: Int,
+  private def bestFlagship(spark: SparkSession, sfDir: String, amplify: Int, repeats: Int,
                    parts: Int): (Long, Double, Double) = {
     Bench.flagship(spark, sfDir, amplify, parts)
     val runs = Seq.fill(repeats)(Bench.flagship(spark, sfDir, amplify, parts))
@@ -39,7 +39,7 @@ object ScalingBench {
   /** Seconds of a pure-compute (no-IO, no-shuffle, no-allocation)
     * codegen'd sin·cos fold over `n` ids in `parts` partitions, after a
     * warm-up fold over n/10. */
-  def ceilingFold(spark: SparkSession, n: Long, parts: Int): Double = {
+  private def ceilingFold(spark: SparkSession, n: Long, parts: Int): Double = {
     spark.range(0, n / 10, 1, parts)
       .selectExpr("sum(sin(id * 1e-9) * cos(id * 1e-9))").collect()
     val t0 = System.nanoTime()

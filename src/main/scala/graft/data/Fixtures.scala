@@ -5,7 +5,8 @@ import graft.sources.Warc
 
 /**
  * Deterministic on-disk fixtures for the driver-visible SOURCE queries
- * (q59 JSONL scan, q60 WARC ingest, q61 snapshot time-travel). Content is
+ * (q59 JSONL scan, q60 WARC ingest, q61 snapshot time-travel) and the
+ * flagship-family oracle inputs. Content is
  * a pure function of the seed; each builder writes once per JVM (memoized)
  * into a PROCESS-SCOPED root, so concurrent driver runs (e.g. the two
  * Verify processes of the partitioning-invariance check) can never race on
@@ -53,10 +54,32 @@ object Fixtures {
     * targeted re-dump that skipped q59/q60 would otherwise emit oracle
     * SQL naming files that were never written. */
   def ensureAll(spark: SparkSession, sfDir: String, nCourses: Int): Unit = {
+    import scala.concurrent.{Await, Future, duration}
+    // the oracle inputs share nothing with the source fixtures; their six
+    // small latency-bound write jobs overlap the source fixtures' jobs
+    // instead of adding ~3 s after them
+    val inputs = Future(oracleInputs(spark))(scala.concurrent.ExecutionContext.global)
     jsonlDir(spark, nCourses)
     warcDir()
     htmlWarcDir()
     snapshotTable(spark, sfDir)
+    Await.result(inputs, duration.Duration.Inf)
+  }
+
+  /** Directory of one flagship-family oracle input (a parquet dataset
+    * named after the oracle CTE that reads it). */
+  def oracleInputDir(name: String): String = s"$oracleInputsRoot/$name"
+  private def oracleInputsRoot = s"$Root/oracle_inputs"
+
+  /** Writes every `SparkEntry.oracleInputFrames` frame as ONE parquet file
+    * (the pure-JVM rows in Seq order), once per JVM. */
+  private def oracleInputs(spark: SparkSession): Unit = {
+    once(oracleInputsRoot) {
+      deleteRecursively(new java.io.File(oracleInputsRoot))
+      graft.SparkEntry.oracleInputFrames(spark).foreach { case (name, df) =>
+        df.coalesce(1).write.parquet(oracleInputDir(name))
+      }
+    }
   }
 
   // -------------------------------------------------------------------

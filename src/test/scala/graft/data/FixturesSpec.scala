@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Scratch placement: an override base (SPARK_GRAFT_STREAM_CKPT) that does
   * not exist yet is created; one that cannot be created fails naming the
   * knob; every scratch dir is registered for deletion at JVM exit. */
-class FixturesSpec extends AnyFunSuite {
+class FixturesSpec extends AnyFunSuite with graft.TempDirs {
 
   test("fastScratchDir creates a missing override base directory") {
-    val root = Files.createTempDirectory("graft-fixtures")
+    val root = tempDir("graft-fixtures")
     val base = root.resolve("not/yet/there")
     assert(!Files.exists(base))
     val dir = Paths.get(Fixtures.fastScratchDir("graft_t_", Some(base.toString)))
@@ -20,7 +20,7 @@ class FixturesSpec extends AnyFunSuite {
   }
 
   test("fastScratchDir fails naming SPARK_GRAFT_STREAM_CKPT when the base cannot be created") {
-    val file = Files.createTempFile("graft-fixtures", ".txt")
+    val file = Files.createFile(tempDir("graft-fixtures").resolve("base.txt"))
     val e = intercept[IllegalArgumentException](
       Fixtures.fastScratchDir("graft_t_", Some(file.resolve("sub").toString)))
     assert(e.getMessage.contains("SPARK_GRAFT_STREAM_CKPT"), e.getMessage)

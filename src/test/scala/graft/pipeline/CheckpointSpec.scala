@@ -14,7 +14,7 @@ import graft.data.{Courses, Pages}
 
 /** Bucket-manifest resume: idempotent, exact, lineage-carrying (north rule
   * "resumable from checkpoint with per-partition lineage + metrics"). */
-class CheckpointSpec extends AnyFunSuite {
+class CheckpointSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
@@ -27,7 +27,7 @@ class CheckpointSpec extends AnyFunSuite {
     .select($"url", $"clubId", $"courseId", $"holeNumber")
 
   test("preempted run resumes where it committed; result equals one-shot") {
-    val out = Files.createTempDirectory("graft-ckpt").toString
+    val out = tempDir("graft-ckpt").toString
     val nBuckets = 8
 
     // invocation 1: budget of 3 buckets, then "preempted"
@@ -62,7 +62,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("any stage checkpoints: tile-mask rasterization resumes by hole bucket") {
-    val out = Files.createTempDirectory("graft-ckpt3").toString
+    val out = tempDir("graft-ckpt3").toString
     val bexpr = pmod(xxhash64($"clubId", $"courseId", $"holeNumber"), lit(4))
     def stage(b: org.apache.spark.sql.DataFrame) =
       CourseEngine.tileMasks(b.drop("bucket"), zoom = 16).withColumn("bucket",
@@ -82,7 +82,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("a half-written (uncommitted) bucket is rewritten cleanly on retry") {
-    val out = Files.createTempDirectory("graft-ckpt2").toString
+    val out = tempDir("graft-ckpt2").toString
     val nBuckets = 4
     Checkpointed.runAssign(pages, cover, bounds, out, nBuckets)
     val expected = spark.read.parquet(s"$out/data")
@@ -113,7 +113,7 @@ class CheckpointSpec extends AnyFunSuite {
   test("a fresh run commits exactly one parquet file per bucket") {
     // the docs arrive in 4 splits, so every split holds rows of every
     // bucket: without the rebalance each bucket would get one file per split
-    val out = Files.createTempDirectory("graft-ckpt4").toString
+    val out = tempDir("graft-ckpt4").toString
     val split = Pages.pages(spark, sfDir, SparkEntry.Amp, repartitionDocs = 4)
     Checkpointed.runAssign(split, cover, bounds, out, nBuckets = 8)
     val parts = list(Paths.get(out, "data"))
@@ -127,7 +127,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("a resume over an unseen todo set compiles no new code") {
-    val out = Files.createTempDirectory("graft-ckpt5").toString
+    val out = tempDir("graft-ckpt5").toString
     val nBuckets = 8
     Checkpointed.runAssign(pages, cover, bounds, out, nBuckets) // warm-up: todo = 0..7
     Seq(2, 5).foreach(b => Files.delete(Paths.get(out, "_manifest", s"bucket-$b.json")))

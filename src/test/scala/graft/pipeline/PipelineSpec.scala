@@ -676,7 +676,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
       s"interval join fell back to a nested-loop plan:\n$plan")
     // and the naive theta join really is the bad plan we are avoiding
-    naive // (already materialized above)
     val naiveDf = ev.join(intervals, $"ts" >= $"ws" && $"ts" < $"we")
     naiveDf.collect()
     val naivePlan = naiveDf.queryExecution.executedPlan.toString

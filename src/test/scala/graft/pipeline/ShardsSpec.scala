@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * pure-Scala replica (tokenize -> vocab-rank -> encode -> pack -> concat,
  * no Spark), the UNK path, and the resumable sink's preempt/resume runs.
  */
-class ShardsSpec extends AnyFunSuite {
+class ShardsSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
@@ -77,7 +77,7 @@ class ShardsSpec extends AnyFunSuite {
   }
 
   test("writeShards resumes: a preempted run commits a prefix, the rerun completes the rest") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = tempDir("graft_shards").toString
     val first = Shards.writeShards(docs, out, Budget, NShards, MaxVocab,
       maxShardsPerRun = 3)
     assert(first.ranBuckets === Seq(0, 1, 2) && first.skippedBuckets.isEmpty)

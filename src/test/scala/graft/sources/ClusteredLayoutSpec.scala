@@ -14,7 +14,7 @@ import graft.{functions => gf}
  * read returns exactly what an unpruned filter returns. PLANS.md §12
  * documents the plan extract.
  */
-class ClusteredLayoutSpec extends AnyFunSuite {
+class ClusteredLayoutSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
@@ -25,7 +25,7 @@ class ClusteredLayoutSpec extends AnyFunSuite {
     val pages = graft.data.Pages.fromDocs(docs, amplify = 4)
       .withColumn("cell", gf.cell_id($"lon", $"lat", lit(11)))
       .select($"url", $"lon", $"lat", $"cell")
-    val dir = java.nio.file.Files.createTempDirectory("graft_clustered").toString
+    val dir = tempDir("graft_clustered").toString
     val st = Storage.writeClustered(pages, dir, "cell", NFiles)
     (dir, st)
   }

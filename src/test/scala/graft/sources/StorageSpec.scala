@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed co-located join: correct results AND a shuffle-free plan. */
-class StorageSpec extends AnyFunSuite {
+class StorageSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
   test("same-key same-bucket-count join plans with zero exchange") {
-    val dir = Files.createTempDirectory("graft-buckets").toString
+    val dir = tempDir("graft-buckets").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     Storage.writeBucketed(docs, "docs_b", s"$dir/docs_b", "doc_id", 4)
     Storage.writeBucketed(
@@ -42,7 +42,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("static partition pruning: a lang filter prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.mode("overwrite").partitionBy("lang").parquet(s"$dir/by_lang")
     val en = spark.read.parquet(s"$dir/by_lang").filter($"lang" === "en")
@@ -55,7 +55,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("dynamic partition pruning: a selective dim join prunes fact partitions") {
-    val dir = Files.createTempDirectory("graft-dpp").toString
+    val dir = tempDir("graft-dpp").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.mode("overwrite").partitionBy("lang").parquet(s"$dir/fact")
     val fact = spark.read.parquet(s"$dir/fact")
@@ -75,7 +75,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("snapshot commits race safely: no manifest is ever silently overwritten") {
-    val dir = Files.createTempDirectory("graft-snapshot-race").toString
+    val dir = tempDir("graft-snapshot-race").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     Snapshots.commit(docs.filter($"doc_id" < 5), dir)
     // two committers in parallel: both must succeed (one retries onto the
@@ -104,7 +104,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("snapshot manifest: append/overwrite commits, version + timestamp time travel") {
-    val dir = Files.createTempDirectory("graft-snapshots").toString
+    val dir = tempDir("graft-snapshots").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
     // millisecond gaps between commits so TIMESTAMP AS OF boundaries are
@@ -141,7 +141,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("merge upserts by key into a new version; diff is the exact delete+insert changelog") {
-    val dir = Files.createTempDirectory("graft-snapmerge").toString
+    val dir = tempDir("graft-snapmerge").toString
     val nation = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     val v1 = Snapshots.commit(nation.filter($"n_nationkey" < 10), dir)
     val updates = nation.filter($"n_nationkey" < 2)
@@ -169,7 +169,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("compaction: fewer files, identical data, history intact until expire+vacuum") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     val rows = (0L until 40L).map(i => (i, s"w$i")).toDF("doc_id", "w")
     (0 until 5).foreach { i =>
       Snapshots.commit(rows.where(pmod($"doc_id", lit(5)) === i).repartition(2), dir)
@@ -194,7 +194,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("snapshot maintenance: expire keeps the head readable; vacuum reaps only dead dirs") {
-    val dir = Files.createTempDirectory("graft-snapvac").toString
+    val dir = tempDir("graft-snapvac").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val v1 = Snapshots.commit(docs.filter($"doc_id" < 10), dir)
     val v2 = Snapshots.commit(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), dir) // append

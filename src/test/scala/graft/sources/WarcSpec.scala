@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** WARC ingestion: length-delimited parse, byte-exact payloads (the
   * input_hint invariant), pages-shape adapter. */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
@@ -72,7 +72,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("Dataset read + pages adapter: responses only, byte-identical html") {
-    val dir = Files.createTempDirectory("graft-warc")
+    val dir = tempDir("graft-warc")
     Files.write(dir.resolve("seg-00000.warc"), Warc.writeWarc(fixtures))
     // a second segment as .warc.gz with PER-RECORD gzip members (Common
     // Crawl's convention): TWO members, so the multi-member concatenation

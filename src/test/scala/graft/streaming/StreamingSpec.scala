@@ -13,7 +13,7 @@ import graft.pipeline.{CourseEngine, SpatialJoin}
 /** Structured-Streaming engine surface: incremental spatial join with
   * exactly-once stop/resume (T1+T2), progress events (T1 consumer side),
   * watermarked event-time windows. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.expr.SparkTestSession.spark
   import spark.implicits._
 
@@ -24,7 +24,7 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val allPages = Pages.pages(spark, sfDir, SparkEntry.Amp).cache()
 
   test("streaming assign: stop, add input, resume from checkpoint — exactly-once") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream").toString
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     Files.createDirectories(java.nio.file.Paths.get(in))
 
@@ -147,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
     // stream the same rows through the stateful operator; AvailableNow
     // drains the input, so only watermark-closed sessions emit — a strict
     // subset of the batch result, never a contradiction of it
-    val base = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val base = tempDir("graft-sess").toString
     events.select($"user_id", $"ts").write.parquet(s"$base/in")
     val stream = spark.readStream
       .schema("user_id LONG, ts TIMESTAMP_NTZ")
@@ -169,7 +169,7 @@ class StreamingSpec extends AnyFunSuite {
       .selectExpr("user_id", "unix_micros(CAST(session_start AS TIMESTAMP)) AS s",
         "unix_micros(CAST(session_end AS TIMESTAMP)) AS e", "n_events")
       .as[(Long, Long, Long, Long)].collect().toSet
-    val base = java.nio.file.Files.createTempDirectory("graft-sessb").toString
+    val base = tempDir("graft-sessb").toString
     events.select($"user_id", $"ts").write.parquet(s"$base/in")
     val stream = spark.readStream.schema(events.select($"user_id", $"ts").schema)
       .parquet(s"$base/in")
@@ -209,7 +209,7 @@ class StreamingSpec extends AnyFunSuite {
       .firstWinsKept(graft.pipeline.Dedup.banded(docs, "doc_id"))
       .filter($"kept" && $"doc_id" =!= sentinelId)
       .select($"doc_id").as[Long].collect().toSet
-    val dir = Files.createTempDirectory("graft-neardup").toString
+    val dir = tempDir("graft-neardup").toString
     docs.write.parquet(s"$dir/in")
     val stream = spark.readStream.schema(docs.schema).parquet(s"$dir/in")
     // ttl must outlive the whole doc_id range (500s) for stream == batch
@@ -248,7 +248,7 @@ class StreamingSpec extends AnyFunSuite {
         $"warc_ts" < $"issued_ts" + expr("INTERVAL 1 HOUR"))
       .select($"url", $"grant_id").as[(String, String)].collect().toSet
     assert(expected.nonEmpty, "fixture produced no batch matches")
-    val base = Files.createTempDirectory("graft-ssj").toString
+    val base = tempDir("graft-ssj").toString
     pages.write.parquet(s"$base/pages")
     grants.write.parquet(s"$base/grants")
     val q = PageStream.pagesWithBudget(
