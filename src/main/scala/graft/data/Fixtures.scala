@@ -71,12 +71,12 @@ object Fixtures {
   def oracleInputDir(name: String): String = s"$oracleInputsRoot/$name"
   private def oracleInputsRoot = s"$Root/oracle_inputs"
 
-  /** Writes every `SparkEntry.oracleInputFrames` frame as ONE parquet file
+  /** Writes every `GeoQueries.oracleInputFrames` frame as ONE parquet file
     * (the pure-JVM rows in Seq order), once per JVM. */
   private def oracleInputs(spark: SparkSession): Unit = {
     once(oracleInputsRoot) {
       deleteRecursively(new java.io.File(oracleInputsRoot))
-      graft.SparkEntry.oracleInputFrames(spark).foreach { case (name, df) =>
+      graft.queries.GeoQueries.oracleInputFrames(spark).foreach { case (name, df) =>
         df.coalesce(1).write.parquet(oracleInputDir(name))
       }
     }

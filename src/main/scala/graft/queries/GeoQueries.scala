@@ -1,0 +1,890 @@
+package graft
+package queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.data.Courses
+import graft.pipeline.{Catalog, CourseEngine, SpatialJoin}
+import graft.{functions => gf}
+import Common._
+
+/**
+ * Geo queries (tiles, cells, the flagship containment joins, clipping,
+ * rasters, markers and kNN over course boundaries), each beside its
+ * DuckDB oracle, plus the pure-JVM geometry rows those oracles read
+ * (`oracleInputFrames`, written as fixture parquet by
+ * `Fixtures.ensureAll`).
+ */
+private[graft] object GeoQueries {
+
+  /** W2 priority fixture — ONE definition feeds both the q50 query and
+    * its oracle CASE (hand-copied literals drift). */
+  private val Q50Priority = Seq(
+    ("club-0001", "course-0001", 1), ("club-0001", "course-0001", 2),
+    ("club-0003", "course-0003", 5), ("club-0002", "course-0002", 9),
+    ("club-0000", "course-0000", 3))
+
+  /** q95's PNG fill color — ONE constant (from the S2-parsed catalog, so
+    * it rides the same colors.xml path as F10) interpolated into both the
+    * Spark plan and the DuckDB oracle's scanline bytes. */
+  private lazy val Q95Rgb: Int =
+    Integer.parseInt(Catalog.colors("water_blue").stripPrefix("#"), 16)
+
+  val queries: Seq[Query] = Seq(
+    // ---- tiles / cells over the pages table (R1/R2 assignment math) ----
+    Query("q14_tile_assign", (s, d) => {
+      pages(s, d).select(col("page_id"),
+        gf.tile_x(col("lon"), lit(15)).as("tx"),
+        gf.tile_y(col("lat"), lit(15)).as("ty"))
+    }, () => (pagesCte +
+      """
+        |SELECT page_id,
+        |  CAST(floor((lon + 180.0) / 360.0 * 32768.0) AS BIGINT) AS tx,
+        |  CAST(floor((1.0 - ln(tan(radians(lat)) + 1.0 / cos(radians(lat))) / pi()) / 2.0 * 32768.0) AS BIGINT) AS ty
+        |FROM pages""".stripMargin)),
+
+    Query("q15_cell_xy", (s, d) => {
+      val cell = gf.cell_id(col("lon"), col("lat"), lit(15))
+      pages(s, d).select(col("page_id"),
+        gf.cell_x(cell).as("cx"),
+        gf.cell_y(cell).as("cy"))
+    }, () => (pagesCte +
+      """
+        |SELECT page_id,
+        |  CAST(floor((lon + 180.0) / 360.0 * 32768.0) AS BIGINT) AS cx,
+        |  CAST(floor((90.0 - lat) / 180.0 * 32768.0) AS BIGINT) AS cy
+        |FROM pages""".stripMargin)),
+
+    // ---- PIP against an axis-aligned polygon (P7 with a SQL oracle) ----
+    Query("q16_pip_rect", (s, d) => {
+      pages(s, d)
+        .filter(expr(
+          """st_contains(make_polygon(array(
+            |  struct(116.0d AS x, 39.5d AS y), struct(117.0d AS x, 39.5d AS y),
+            |  struct(117.0d AS x, 40.5d AS y), struct(116.0d AS x, 40.5d AS y))),
+            | lon, lat)""".stripMargin))
+        .select(col("page_id"), col("url"))
+    }, () => (pagesCte +
+      """
+        |SELECT page_id, url FROM pages
+        |WHERE lon > 116.0 AND lon < 117.0 AND lat > 39.5 AND lat < 40.5""".stripMargin)),
+
+    // ---- geo pipeline (J4/J1/W3/A1/F4/R1/R2/J5/J6 — scalatest-covered) ----
+    Query("q40_course_assign", (s, d) => {
+      val b = boundsDf(s)
+      SpatialJoin.assignPages(pages(s, d), b)
+        .select(col("url"), col("text"), col("clubId"), col("courseId"), col("holeNumber"))
+    },
+    // the flagship family, independently re-derived: DuckDB ray-casts the
+    // oracle boundary polygons with the engine's exact strict semantics,
+    // with NO cover index involved — a cover bug (missing cell, wrong
+    // full flag, broken parent math) shows up here as a row/hash mismatch
+    () => (pagesCte + ",\n" + pipHitsCtes + "\n" +
+      "SELECT url, text, clubId, courseId, holeNumber FROM hits")),
+
+    Query("q41_pages_in_any", (s, d) => {
+      val b = boundsDf(s)
+      SpatialJoin.pagesInAnyCourse(pages(s, d), b)
+        .select(col("url"), col("lon"), col("lat"))
+    }, () => (pagesCte + ",\n" + pipHitsCtes + "\n" +
+      "SELECT url, lon, lat FROM pages WHERE url IN (SELECT url FROM hits)")),
+
+    Query("q42_pages_outside_all", (s, d) => {
+      val b = boundsDf(s)
+      SpatialJoin.pagesOutsideAllCourses(pages(s, d), b)
+        .groupBy(col("lang")).agg(count(lit(1)).as("n"))
+    }, () => (pagesCte + ",\n" + pipHitsCtes + "\n" +
+      "SELECT lang, count(*) AS n FROM pages WHERE url NOT IN (SELECT url FROM hits) GROUP BY lang")),
+
+    // ---- the 100-TB join shape driven end-to-end (r3 verdict item #1):
+    // same containment semantics as q40 but through the salted sort-merge
+    // path that takes over when the cover outgrows broadcast (forced
+    // here by a zero broadcast budget), with the salt factor
+    // auto-derived from the cell-histogram pre-pass. The
+    // oracle is q40's independent ray-cast — a green row certifies the
+    // salt/replicate/SMJ machinery produces byte-identical pairs ----
+    Query("q72_course_assign_smj", (s, d) => {
+      val b = boundsDf(s)
+      SpatialJoin.assignPages(pages(s, d), b, budget = 0L)
+        .select(col("url"), col("text"), col("clubId"), col("courseId"), col("holeNumber"))
+    }, () => (pagesCte + ",\n" + pipHitsCtes + "\n" +
+      "SELECT url, text, clubId, courseId, holeNumber FROM hits")),
+
+    // ---- the flagship join over MULTI-PIECE boundaries (r4 verdict
+    // stretch item 9): the dim is every standard course plus the
+    // archipelago course whose hole 1 boundary is TWO disjoint pieces
+    // (the case the reference crashes on, plot_courses.py:318). Same
+    // cover + flat-PIP machinery as q40 — the (NaN,NaN)-separated
+    // multi-piece flat encoding — oracled by an independent per-piece
+    // ray cast with the containsStrict rule (on ANY piece's edge ->
+    // out; inside any piece -> in). Single-piece holes produce
+    // bit-identical boundaries to q40's dim (MultiPieceSpec pins it). ----
+    Query("q94_course_assign_multi", (s, d) => {
+      val bM = dimCache.computeIfAbsent((s, "boundsMulti"), _ =>
+        graft.sources.Storage.localize(
+          CourseEngine.boundariesMulti(Courses.itemsDfWithIslands(s, NCourses))))
+      SpatialJoin.assignPages(pages(s, d), bM)
+        .select(col("url"), col("clubId"), col("courseId"), col("holeNumber"))
+    },
+    // q72 must equal q40 row-for-row (same containment relation, different
+    // physical join) — same independent ray-cast oracle
+    () => (pagesCte + ",\n" + pipHitsMultiCtes + "\n" +
+      "SELECT url, clubId, courseId, holeNumber FROM hitsm")),
+
+    Query("q95_tile_png", (s, d) => {
+      // The raster ARTIFACT sink (r4 VERDICT missing-item 2): one real
+      // RGBA PNG per (hole, z17 tile) — opaque pixels are the tile's 8x8
+      // covered samples (q46's oracled mask bits), fully transparent
+      // elsewhere, the reference's `savefig(..., transparent=True)`
+      // analog (plot_courses.py:309-316) in the bounded-size slippy-tile
+      // form a map stack serves at 100 TB (fixed 332 bytes/artifact, no
+      // per-hole unbounded raster). Fill RGB is a sink parameter (the
+      // reference fills with texture images; pixel-texture parity is out
+      // of scope per SURVEY §1.2) — q95 uses the catalog's water_blue so
+      // the color rides the S2 XML path. The file bytes are graded
+      // END-TO-END: STORED-deflate PNG encoding is deterministic, so the
+      // DuckDB oracle rebuilds every byte (CRC-32 table generated in SQL
+      // from the polynomial, Adler-32/CRC-32 as list folds) from its own
+      // independently ray-cast masks, and both sides md5 the shared hex.
+      CourseEngine.tileMasks(boundsDf(s), zoom = 17)
+        .select(col("clubId"), col("courseId"), col("holeNumber"),
+          col("z"), col("x"), col("y"),
+          gf.png_encode(
+            expr("transform(sequence(0, 63), b -> (shiftright(mask, b) & 1) = 1)"),
+            lit(8), lit(Q95Rgb)).as("png"))
+        .select(col("clubId"), col("courseId"), col("holeNumber"),
+          col("z"), col("x"), col("y"),
+          length(col("png")).as("n_bytes"),
+          md5(hex(col("png"))).as("png_md5"))
+    },
+    // full PNG-file byte replay: every byte of each 332-byte artifact is a
+    // pure function of the (independently ray-cast) mask bits — raw RGBA
+    // scanlines, one STORED deflate block, Adler-32 and CRC-32 as list
+    // folds with the CRC table generated IN SQL from poly 0xEDB88320.
+    // Unsigned bit tests go through HUGEINT (CLAUDE.md hash-replay rules);
+    // md5 over the shared uppercase hex (the q51 pattern).
+    () => {
+      val (r, g, b) = ((Q95Rgb >> 16) & 255, (Q95Rgb >> 8) & 255, Q95Rgb & 255)
+      "WITH " + tileMaskedCtes + s""",
+        |crctab AS (
+        |  SELECT list(ent ORDER BY n) AS tab FROM (
+        |    SELECT n, list_reduce(list_prepend(CAST(n AS BIGINT), [0,0,0,0,0,0,0,0]),
+        |      (c, kk) -> CASE WHEN c & 1 = 1 THEN xor(3988292384, c >> 1) ELSE c >> 1 END) AS ent
+        |    FROM unnest(generate_series(0, 255)) AS tt(n))),
+        |ihdrc AS (
+        |  SELECT xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT),
+        |      [CAST(73 AS BIGINT),72,68,82,0,0,0,8,0,0,0,8,8,6,0,0,0]),
+        |    (c, bb) -> xor(tab[CAST(xor(c, bb) & 255 AS INT) + 1], c >> 8)), 4294967295) AS hcrc
+        |  FROM crctab),
+        |pxu AS (
+        |  SELECT clubId, courseId, holeNumber, z, x, y, CASE WHEN mask < 0
+        |    THEN CAST(mask AS HUGEINT) + CAST('18446744073709551616' AS HUGEINT)
+        |    ELSE CAST(mask AS HUGEINT) END AS mh FROM masked),
+        |rawsc AS (
+        |  SELECT clubId, courseId, holeNumber, z, x, y,
+        |    flatten(list_transform(generate_series(0, 7), i ->
+        |      list_prepend(CAST(0 AS BIGINT), flatten(list_transform(generate_series(0, 7), j ->
+        |        CASE WHEN (mh & (CAST(1 AS HUGEINT) << CAST(i * 8 + j AS INT))) != 0
+        |          THEN [CAST($r AS BIGINT), $g, $b, 255]
+        |          ELSE [CAST(0 AS BIGINT), 0, 0, 0] END))))) AS rawb
+        |  FROM pxu),
+        |idatb AS (
+        |  SELECT clubId, courseId, holeNumber, z, x, y,
+        |    [CAST(73 AS BIGINT), 68, 65, 84, 120, 1, 1, 8, 1, 247, 254] || rawb ||
+        |    [ab[2] // 256, ab[2] % 256, ab[1] // 256, ab[1] % 256] AS ibytes
+        |  FROM (SELECT *, list_reduce(list_prepend([CAST(1 AS BIGINT), CAST(0 AS BIGINT)],
+        |      list_transform(rawb, bb -> [bb, CAST(0 AS BIGINT)])),
+        |      (acc, e) -> [(acc[1] + e[1]) % 65521, (acc[2] + acc[1] + e[1]) % 65521]) AS ab
+        |    FROM rawsc)),
+        |pngb AS (
+        |  SELECT clubId, courseId, holeNumber, z, x, y,
+        |    [CAST(137 AS BIGINT), 80, 78, 71, 13, 10, 26, 10, 0, 0, 0, 13,
+        |     73, 72, 68, 82, 0, 0, 0, 8, 0, 0, 0, 8, 8, 6, 0, 0, 0] ||
+        |    [hcrc // 16777216 % 256, hcrc // 65536 % 256, hcrc // 256 % 256, hcrc % 256] ||
+        |    [CAST(0 AS BIGINT), 0, 1, 19] || ibytes ||
+        |    [icrc // 16777216 % 256, icrc // 65536 % 256, icrc // 256 % 256, icrc % 256] ||
+        |    [CAST(0 AS BIGINT), 0, 0, 0, 73, 69, 78, 68, 174, 66, 96, 130] AS pbytes
+        |  FROM (SELECT *, xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT), ibytes),
+        |      (c, bb) -> xor(tab[CAST(xor(c, bb) & 255 AS INT) + 1], c >> 8)), 4294967295) AS icrc
+        |    FROM idatb, crctab), ihdrc)
+        |SELECT clubId, courseId, holeNumber, z, x, y,
+        |  CAST(len(pbytes) AS INT) AS n_bytes,
+        |  md5(list_reduce(list_transform(pbytes, bb -> lpad(hex(bb), 2, '0')),
+        |    (a, s) -> a || s)) AS png_md5
+        |FROM pngb""".stripMargin
+    }),
+
+    Query("q43_clip_join", (s, d) => {
+      // clip_area is quantized to a fixed 1e-10 deg^2 grid (~1 m^2 — 4-5
+      // significant digits at these hole sizes) and sub-quantum rows are
+      // dropped on BOTH sides: the engine (Greiner-Hormann true boundaries
+      // / triangulated fallback) and the DuckDB oracle (signed fan
+      // decomposition x S-H triangle clipping) compute the SAME exact real
+      // area by different float decompositions, agreeing to ~1e-17..1e-16
+      // in the boundary-local frame. The quantum is chosen so every
+      // candidate sits far from a rounding boundary relative to that
+      // disagreement (measured: min distance 6.5e-4 quanta = 6.5e-14 at
+      // 1e-10, vs only 8.3e-17 at the old 1e-12 grid — same order as the
+      // disagreement, i.e. one re-roll from a red hash); the margin is
+      // PINNED by PipelineSpec's boundary-distance guard.
+      val items = itemsDf(s)
+      CourseEngine.clippedPolygons(items, CourseEngine.boundaries(items))
+        .select(col("clubId"), col("courseId"), col("holeNumber"), col("itemSeq"),
+          col("itemType"),
+          floor(col("clip_area") * lit(1e10) + lit(0.5)).cast("long").as("clip_area_e10"))
+        .filter(col("clip_area_e10") >= 1)
+    },
+    // the signature geometry operator, independently re-derived: the clip
+    // area of every surviving (item, boundary) pair is recomputed in DuckDB
+    // by a SIGNED FAN DECOMPOSITION — each ring is the signed sum of fan
+    // triangles from the local-frame origin, so area(A∩B) = Σ_ij s_i t_j
+    // area(T_i ∩ U_j), each T∩U a convex triangle pair clipped by
+    // Sutherland–Hodgman and measured by shoelace. No triangulation,
+    // piece structure, or clip algorithm is shared with the engine's
+    // Greiner–Hormann path — only the exact real value, compared on a
+    // 1e-10 quantum both sides round to (see the q43 query comment).
+    () => ("WITH " + clipCandsCtes + s""",
+      |tris AS (
+      |  SELECT clubId, courseId, holeNumber, itemSeq, itemType,
+      |    CASE WHEN ((a1[1] * a2[2] - a1[2] * a2[1]) > 0) = ((b1[1] * b2[2] - b1[2] * b2[1]) > 0)
+      |      THEN 1.0 ELSE -1.0 END AS sgn,
+      |    CASE WHEN (a1[1] * a2[2] - a1[2] * a2[1]) > 0 THEN [[0.0, 0.0], a1, a2]
+      |      ELSE [[0.0, 0.0], a2, a1] END AS t,
+      |    CASE WHEN (b1[1] * b2[2] - b1[2] * b2[1]) > 0 THEN b1 ELSE b2 END AS u1,
+      |    CASE WHEN (b1[1] * b2[2] - b1[2] * b2[1]) > 0 THEN b2 ELSE b1 END AS u2
+      |  FROM pairs
+      |  WHERE (a1[1] * a2[2] - a1[2] * a2[1]) != 0 AND (b1[1] * b2[2] - b1[2] * b2[1]) != 0),
+      |c1 AS (SELECT *, ${hpClip("t", "[0.0, 0.0]", "u1")} AS p1 FROM tris),
+      |c2 AS (SELECT *, ${hpClip("p1", "u1", "u2")} AS p2 FROM c1),
+      |c3 AS (SELECT *, ${hpClip("p2", "u2", "[0.0, 0.0]")} AS p3 FROM c2),
+      |contrib AS (
+      |  SELECT clubId, courseId, holeNumber, itemSeq, itemType,
+      |    CASE WHEN len(p3) < 3 THEN 0.0 ELSE sgn * 0.5 * list_reduce(
+      |      list_prepend(0.0, list_transform(generate_series(1, len(p3)), k ->
+      |        p3[CASE WHEN k = 1 THEN len(p3) ELSE k - 1 END][1] * p3[k][2]
+      |        - p3[k][1] * p3[CASE WHEN k = 1 THEN len(p3) ELSE k - 1 END][2])),
+      |      (acc, v) -> acc + v) END AS da
+      |  FROM c3)
+      |SELECT clubId, courseId, holeNumber, itemSeq, itemType,
+      |  CAST(floor(sum(da) * 1e10 + 0.5) AS BIGINT) AS clip_area_e10
+      |FROM contrib
+      |GROUP BY clubId, courseId, holeNumber, itemSeq, itemType
+      |HAVING CAST(floor(sum(da) * 1e10 + 0.5) AS BIGINT) >= 1""".stripMargin)),
+
+    Query("q44_drawlist", (s, d) => {
+      val items = itemsDf(s)
+      CourseEngine.drawList(items, CourseEngine.boundaries(items))
+        .select(col("clubId"), col("courseId"), col("holeNumber"), col("draw_seq"),
+          col("zorder"), col("itemType"), col("category"))
+    },
+    // the full draw list re-derived: boundary rows from the oracle dim;
+    // polygon rows kept iff the item/boundary interiors truly intersect
+    // (any proper edge crossing, or one ring's first vertex strictly
+    // inside the other — the general-position equivalence of "clip
+    // non-empty"); line rows by per-vertex strict ray cast with >= 2
+    // survivors; marker rows by the q48 containment test; then the same
+    // (zorder, itemType, itemSeq) painter's order
+    () => ("WITH " + clipCandsCtes + s""",
+      |crossed AS (
+      |  SELECT clubId, courseId, holeNumber, itemSeq, bool_or(
+      |    (((b2[1] - b1[1]) * (a1[2] - b1[2]) - (b2[2] - b1[2]) * (a1[1] - b1[1])) *
+      |     ((b2[1] - b1[1]) * (a2[2] - b1[2]) - (b2[2] - b1[2]) * (a2[1] - b1[1])) < 0)
+      |    AND
+      |    (((a2[1] - a1[1]) * (b1[2] - a1[2]) - (a2[2] - a1[2]) * (b1[1] - a1[1])) *
+      |     ((a2[1] - a1[1]) * (b2[2] - a1[2]) - (a2[2] - a1[2]) * (b2[1] - a1[1])) < 0)
+      |  ) AS any_cross
+      |  FROM pairs GROUP BY clubId, courseId, holeNumber, itemSeq),
+      |contained AS (
+      |  SELECT clubId, courseId, holeNumber, itemSeq,
+      |    (${pipExpr("iring[1][1]", "iring[1][2]", "bring")})
+      |    OR (${pipExpr("bring[1][1]", "bring[1][2]", "iring")}) AS inside
+      |  FROM cands),
+      |polys AS (
+      |  SELECT c.clubId, c.courseId, c.holeNumber, c.itemSeq, c.itemType, c.zorder,
+      |    'polygon' AS category
+      |  FROM cands c
+      |  JOIN crossed x USING (clubId, courseId, holeNumber, itemSeq)
+      |  JOIN contained n USING (clubId, courseId, holeNumber, itemSeq)
+      |  WHERE x.any_cross OR n.inside),
+      |${inputCte("bounds", materialized = true)},
+      |${inputCte("lvals")},
+      |lpts AS (
+      |  SELECT l.clubId, l.courseId, l.holeNumber, l.itemSeq, l.itemType, l.zorder,
+      |    gq.q AS q,
+      |    ${edgePairs("b.ring")} AS prs
+      |  FROM lvals l, bounds b, unnest(l.pts) AS gq(q)
+      |  WHERE l.clubId = b.clubId AND l.courseId = b.courseId AND l.holeNumber = b.holeNumber),
+      |lines AS (
+      |  SELECT clubId, courseId, holeNumber, itemSeq, itemType, zorder, 'line' AS category
+      |  FROM lpts
+      |  WHERE ${edgeHits("prs", "q[1]", "q[2]")} = 0
+      |    AND ${crossings("prs", "q[1]", "q[2]")} % 2 = 1
+      |  GROUP BY clubId, courseId, holeNumber, itemSeq, itemType, zorder
+      |  HAVING count(*) >= 2),
+      |${inputCte("markers")},
+      |mcand AS (
+      |  SELECT m.*,
+      |    ${edgePairs("b.ring")} AS prs
+      |  FROM markers m JOIN bounds b USING (clubId, courseId, holeNumber)),
+      |marks AS (
+      |  SELECT clubId, courseId, holeNumber, itemSeq, itemType,
+      |    ${Catalog.items.filter(_.category == "marker").map(_.zorder).distinct.head} AS zorder,
+      |    'marker' AS category
+      |  FROM mcand
+      |  WHERE ${edgeHits("prs", "x", "y")} = 0
+      |    AND ${crossings("prs", "x", "y")} % 2 = 1),
+      |allrows AS (
+      |  SELECT clubId, courseId, holeNumber, -1 AS itemSeq, 'HoleBoundary' AS itemType,
+      |    0 AS zorder, 'polygon' AS category FROM bounds
+      |  UNION ALL SELECT * FROM polys
+      |  UNION ALL SELECT * FROM lines
+      |  UNION ALL SELECT * FROM marks)
+      |SELECT clubId, courseId, holeNumber,
+      |  row_number() OVER (PARTITION BY clubId, courseId, holeNumber
+      |    ORDER BY zorder, itemType, itemSeq) AS draw_seq,
+      |  zorder, itemType, category
+      |FROM allrows""".stripMargin)),
+
+    Query("q45_viewports", (s, d) => {
+      // fig/aspect pass through cos(), where cross-engine libm parity is
+      // NOT guaranteed (measured: 1/763 cos calls differs by 1 ULP vs
+      // DuckDB) — rounded to 1e-6 the ULP drift is ~9 orders of magnitude
+      // inside the quantum, so the driver can hash-compare the values.
+      // Envelope coords and marker_px are exact doubles, left raw. The
+      // raw-viewport operator keeps its full-precision scalatest pin.
+      CourseEngine.viewports(boundsDf(s))
+        .select(col("clubId"), col("courseId"), col("holeNumber"),
+          col("west"), col("south"), col("east"), col("north"),
+          round(col("fig_w_in"), 6).as("fig_w_in"),
+          round(col("fig_h_in"), 6).as("fig_h_in"),
+          round(col("aspect"), 6).as("aspect"),
+          col("marker_px"))
+    },
+    // viewport math replayed on the oracle envelope bounds with the
+    // engine's exact operation order; the two cos()-dependent columns and
+    // fig_h are compared on the 1e-6 quantum (see the q45 query comment)
+    () =>
+      s"""WITH ${inputCte("bounds")}
+         |SELECT clubId, courseId, holeNumber,
+         |  minx AS west, miny AS south, maxx AS east, maxy AS north,
+         |  round((maxx - minx) * 111000.0 * cos(radians((miny + maxy) / 2.0)) / 0.2 / 300.0, 6) AS fig_w_in,
+         |  round((maxy - miny) * 111000.0 / 0.2 / 300.0, 6) AS fig_h_in,
+         |  round(1.0 / cos(radians((miny + maxy) / 2.0)), 6) AS aspect,
+         |  15.0 AS marker_px
+         |FROM bounds""".stripMargin),
+
+    Query("q46_tile_masks", (s, d) => {
+      CourseEngine.tileMasks(boundsDf(s), zoom = 17)
+    },
+    // raster family: DuckDB re-derives every tile's 64-bit coverage mask
+    // and the inverted tile index from the oracle polygons — the engine's
+    // whole rasterize pipeline cross-checked by an independent ray caster
+    () => ("WITH " + tileMaskedCtes + "\n" +
+      "SELECT clubId, courseId, holeNumber, z, x, y, qk, mask, coverage FROM masked")),
+
+    Query("q47_tile_reverse", (s, d) => {
+      SpatialJoin.tileReverseIndex(CourseEngine.tileMasks(boundsDf(s), zoom = 17))
+    }, () => ("WITH " + tileMaskedCtes +
+      """
+        |SELECT z, x, y, qk,
+        |  array_to_string(list_sort(list(clubId || '/' || courseId || '/' || holeNumber)), ',') AS features,
+        |  max(coverage) AS max_coverage, count(*) AS n_features
+        |FROM masked GROUP BY z, x, y, qk""".stripMargin)),
+
+    Query("q48_markers", (s, d) => {
+      val items = itemsDf(s)
+      CourseEngine.markers(items, CourseEngine.boundaries(items))
+    },
+    // markers: same independent ray cast, probing the planted marker
+    // points instead of pages (the generator plants one inside + one far
+    // outside per hole; the strict filter must keep at most the inside one)
+    () =>
+      s"""WITH ${inputCte("bounds")},
+         |${inputCte("markers")},
+         |cand AS (
+         |  SELECT m.*, ${edgePairs("b.ring")} AS prs
+         |  FROM markers m JOIN bounds b USING (clubId, courseId, holeNumber)
+         |)
+         |SELECT clubId, courseId, holeNumber, itemSeq, itemType,
+         |  CAST(${graft.pipeline.Catalog.items.filter(_.category == "marker").map(_.zorder).distinct.head} AS INT) AS zorder,
+         |  x, y, ${dlit(graft.geom.Geom.MarkerSizeM / graft.geom.Geom.MetersPerPixel / 200.0)} AS marker_zoom
+         |FROM cand
+         |WHERE ${edgeHits("prs", "x", "y")} = 0
+         |  AND ${crossings("prs", "x", "y")} % 2 = 1""".stripMargin),
+
+    Query("q81_tile_pyramid", (s, d) => {
+      // serving-side pyramid: leaf z17 masks rolled up to z13 in one
+      // explode + one groupBy; sum_coverage is exact (1/64 dyadics)
+      CourseEngine.tilePyramid(CourseEngine.tileMasks(boundsDf(s), zoom = 17),
+        zoom = 17, minZoom = 13)
+    },
+    // pyramid re-derived from the same independent ray-cast masks:
+    // parent = integer shift, counts + exact dyadic coverage sums
+    () => ("WITH " + tileMaskedCtes + s"""
+        |SELECT CAST(z - d AS INT) AS z,
+        |  CAST(x // CAST(power(2, d) AS BIGINT) AS BIGINT) AS x,
+        |  CAST(y // CAST(power(2, d) AS BIGINT) AS BIGINT) AS y,
+        |  count(*) AS n_entries,
+        |  count(DISTINCT clubId || '/' || courseId || '/' || holeNumber) AS n_features,
+        |  sum(coverage) AS sum_coverage
+        |FROM masked CROSS JOIN unnest([0,1,2,3,4]) AS lev(d)
+        |GROUP BY 1, 2, 3""".stripMargin)),
+
+    Query("q49_knn_courses", (s, d) => {
+      // output is (page, neighbor, rank) — the haversine VALUE is excluded
+      // (libm sin/asin ULP parity across engines isn't guaranteed; the
+      // ORDERING agrees, which is what rank checks — same policy as q36).
+      // The probe slice is a DETERMINISTIC filter, not limit(n): an
+      // unordered limit feeding a graded output is partition-order-
+      // dependent the moment the table outgrows n
+      SpatialJoin.knnCourses(pages(s, d).filter(col("page_id") < 2000),
+          boundsDf(s), k = 3)
+        .select(col("url"), col("lon"), col("lat"),
+          col("clubId"), col("courseId"), col("holeNumber"), col("rank"))
+    },
+    // kNN re-derived brute-force in DuckDB: envelope-center centroids from
+    // the oracle polygons, SQL haversine ordering, per-page top-3 —
+    // verified rank-exact (no near-ties at this scale; the certificate/
+    // ring-expansion machinery on the engine side must agree with plain
+    // brute force, which is the operator's exactness contract)
+    () => (pagesCte + s""",
+      |${inputCte("bounds")},
+      |cents AS (
+      |  SELECT clubId, courseId, holeNumber,
+      |    (minx + maxx) / 2 AS clon, (miny + maxy) / 2 AS clat
+      |  FROM bounds),
+      |scored AS (
+      |  SELECT p.url, p.lon, p.lat, c.clubId, c.courseId, c.holeNumber,
+      |    row_number() OVER (PARTITION BY p.url ORDER BY
+      |      2.0 * 6371008.8 * asin(least(1.0, sqrt(
+      |        sin((radians(c.clat) - radians(p.lat)) / 2) * sin((radians(c.clat) - radians(p.lat)) / 2) +
+      |        cos(radians(p.lat)) * cos(radians(c.clat)) *
+      |        sin(radians(c.clon - p.lon) / 2) * sin(radians(c.clon - p.lon) / 2)))),
+      |      c.clubId, c.courseId, c.holeNumber) AS rank
+      |  FROM pages p CROSS JOIN cents c WHERE p.page_id < 2000)
+      |SELECT url, lon, lat, clubId, courseId, holeNumber, rank FROM scored WHERE rank <= 3""".stripMargin)),
+
+    Query("q75_knn_boundary", (s, d) => {
+      // kNN under the boundary metric (nearest exterior-shell segment, r3
+      // verdict item #6) — rank-only output, same libm-ULP policy and
+      // deterministic probe slice as q49; the oracle brute-forces the
+      // identical clamped-projection segment distance over the literal
+      // rings (PipelineSpec pins the no-near-ties margin that makes the
+      // rank compare sound)
+      SpatialJoin.knnCoursesBoundary(pages(s, d).filter(col("page_id") < 2000),
+          boundsDf(s), k = 3)
+        .select(col("url"), col("lon"), col("lat"),
+          col("clubId"), col("courseId"), col("holeNumber"), col("rank"))
+    },
+    // boundary-metric kNN brute-forced over the oracle closed rings:
+    // per (page, hole), min clamped-projection segment distance, ranked
+    () => (pagesCte + s""",
+      |${inputCte("bounds")},
+      |scored AS (
+      |  SELECT p.url, p.lon, p.lat, b.clubId, b.courseId, b.holeNumber,
+      |    row_number() OVER (PARTITION BY p.url ORDER BY
+      |      list_aggregate(list_transform(range(1, len(b.ring)), i ->
+      |        ${segDistSql("p.lon", "p.lat", "b.ring")}), 'min'),
+      |      b.clubId, b.courseId, b.holeNumber) AS rank
+      |  FROM pages p CROSS JOIN bounds b WHERE p.page_id < 2000)
+      |SELECT url, lon, lat, clubId, courseId, holeNumber, rank FROM scored WHERE rank <= 3""".stripMargin)),
+
+    Query("q50_priority_order", (s, d) => {
+      CourseEngine.priorityOrder(boundsDf(s), Q50Priority)
+        .select(col("clubId"), col("courseId"), col("holeNumber"), col("prio"))
+        .limit(50)
+    },
+    // priority reorder over the oracle hole keys: DuckDB recomputes the
+    // CASE priorities (generated from the SAME Q50Priority the query
+    // uses), the total order, and the limit
+    () =>
+      s"""WITH ${inputCte("bounds")}
+         |SELECT clubId, courseId, holeNumber, prio FROM (
+         |  SELECT clubId, courseId, holeNumber,
+         |    CAST(CASE
+         |${Q50Priority.zipWithIndex.map { case ((cl, co, h), i) =>
+             s"      WHEN clubId = '$cl' AND courseId = '$co' AND holeNumber = $h THEN $i"
+           }.mkString("\n")}
+         |      ELSE ${Int.MaxValue} END AS INT) AS prio
+         |  FROM bounds)
+         |ORDER BY prio, clubId, courseId, holeNumber LIMIT 50""".stripMargin)
+  )
+
+  /** The boundary dim recomputed in PURE JVM (no Spark) — the same kernel
+    * calls, in the same order, as `CourseEngine.boundaries` (gaussian
+    * smooth -> close -> polygonize guards, first HoleBoundary per hole) —
+    * so the flagship-family oracles get the polygons as data and
+    * DuckDB re-derives the containment INDEPENDENTLY of the cover index.
+    * Bit-equality with the engine's boundary column is pinned in
+    * PipelineSpec. */
+  private[graft] lazy val oracleBounds: Seq[(String, String, Int, Array[Double])] =
+    Courses.courses(NCourses).flatMap { c =>
+      c.holes.zipWithIndex.flatMap { case (h, pos) =>
+        h.gpsItems.find(_.itemType == "HoleBoundary").flatMap { item =>
+          val flat = item.shape.iterator
+            .flatMap(p => Iterator(p.longitude, p.latitude)).toArray
+          val smoothed = graft.geom.Geom.gaussianSmooth(flat, 1.0)
+          val closed = graft.geom.Geom.closeRing(smoothed)
+          // the pipeline's make_polygon receives the ALREADY-closed ring
+          // (closed_ring runs first), so both of its null guards reduce to
+          // "fewer than 3 open vertices" — checked here in that form;
+          // PipelineSpec pins bit-equality with the engine's boundary dim
+          if (graft.geom.Geom.nPts(smoothed) < 3 ||
+              graft.geom.Geom.nPts(closed) - 1 < 3) None
+          else Some((c.clubId, c.courseId, pos + 1, closed))
+        }
+      }
+    }
+
+  /** The MULTI-PIECE boundary dim recomputed in pure JVM — the same
+    * kernel calls as `CourseEngine.boundariesMulti` (every HoleBoundary
+    * item cleaned like [[oracleBounds]], degenerate pieces dropped), one
+    * entry per (hole, piece). MultiPieceSpec pins bit-equality with the
+    * engine dim. */
+  private[graft] lazy val oracleBoundsMulti: Seq[(String, String, Int, Int, Array[Double])] =
+    Courses.coursesWithIslands(NCourses).flatMap { c =>
+      c.holes.zipWithIndex.flatMap { case (h, pos) =>
+        h.gpsItems.filter(_.itemType == "HoleBoundary").zipWithIndex.flatMap {
+          case (item, pi) =>
+            val flat = item.shape.iterator
+              .flatMap(p => Iterator(p.longitude, p.latitude)).toArray
+            val smoothed = graft.geom.Geom.gaussianSmooth(flat, 1.0)
+            val closed = graft.geom.Geom.closeRing(smoothed)
+            if (graft.geom.Geom.nPts(smoothed) < 3 ||
+                graft.geom.Geom.nPts(closed) - 1 < 3) None
+            else Some((c.clubId, c.courseId, pos + 1, pi, closed))
+        }
+      }
+    }
+
+  /** q75's point-to-segment distance, replayed textually over the closed
+    * `ring` ([x,y] pairs, first == last): planar clamped projection of
+    * the point onto each segment, then the q49 haversine shape to the
+    * clamped closest point — the EXACT operation order of
+    * `SpatialJoin.st_distance_to_shell_m`'s per-segment lambda. Only the
+    * ORDERING of these values is graded (rank output), per the
+    * cross-engine libm policy. */
+  private def segDistSql(px: String, py: String, ring: String): String = {
+    val ax = s"$ring[i][1]"; val ay = s"$ring[i][2]"
+    val bx = s"$ring[i+1][1]"; val by = s"$ring[i+1][2]"
+    val dx = s"($bx - $ax)"; val dy = s"($by - $ay)"
+    val d2 = s"($dx * $dx + $dy * $dy)"
+    val tRaw = s"((($px - $ax) * $dx + ($py - $ay) * $dy) / $d2)"
+    val t = s"(CASE WHEN $d2 = 0.0 THEN 0.0 ELSE least(1.0, greatest(0.0, $tRaw)) END)"
+    val cx = s"($ax + $t * $dx)"; val cy = s"($ay + $t * $dy)"
+    s"""2.0 * 6371008.8 * asin(least(1.0, sqrt(
+       |        sin((radians($cy) - radians($py)) / 2) * sin((radians($cy) - radians($py)) / 2) +
+       |        cos(radians($py)) * cos(radians($cy)) *
+       |        sin(radians($cx - $px) / 2) * sin(radians($cx - $px) / 2))))""".stripMargin
+  }
+
+  /** Marker positions recomputed in pure JVM (single-point marker-type
+    * gpsItems), `(clubId, courseId, holeNumber, itemSeq, itemType, x, y)`
+    * — the DuckDB side re-derives the strict containment decision itself. */
+  private[graft] lazy val oracleMarkers: Seq[(String, String, Int, Int, String, Double, Double)] =
+    Courses.courses(NCourses).flatMap { c =>
+      c.holes.zipWithIndex.flatMap { case (h, pos) =>
+        h.gpsItems.zipWithIndex.collect {
+          case (item, seq) if Courses.markerTypes.contains(item.itemType) &&
+            item.shape.length == 1 =>
+            (c.clubId, c.courseId, pos + 1, seq, item.itemType,
+              item.shape.head.longitude, item.shape.head.latitude)
+        }
+      }
+    }
+
+  private lazy val catalogByType: Map[String, Catalog.Item] =
+    Catalog.items.map(i => i.itemType -> i).toMap
+
+  /** Translate a flat ring by (-dx, -dy) with the EXACT float ops the
+    * engine's boundary-local projection performs (`x + (-dx)`). */
+  private def translateRing(r: Array[Double], dx: Double, dy: Double): Array[Double] = {
+    val out = new Array[Double](r.length)
+    var i = 0
+    while (i < r.length) {
+      out(i) = if (i % 2 == 0) r(i) + (-dx) else r(i) + (-dy)
+      i += 1
+    }
+    out
+  }
+
+  /**
+   * q43/q44 clip candidates recomputed in pure JVM: for every
+   * polygon-category non-boundary gpsItem the engine's exact pre-geometry
+   * gating chain is replayed with the SAME kernel calls
+   * (`CourseEngine.clippedPolygons`'s P6 size filter, make_polygon guards,
+   * `GeoOps.stIntersection`'s per-ring validity gates, the
+   * envelope quick-reject) on rings translated to the boundary-local
+   * frame — so what reaches DuckDB is exactly the set of pairs whose
+   * survival hinges on GEOMETRY (does the intersection have positive
+   * area?), which the oracle then decides independently.
+   * `(clubId, courseId, holeNumber, itemSeq, itemType, zorder,
+   *   itemRingOpen, boundaryRingOpen)`; rings open (closing dup dropped),
+   * translated by the boundary ring's first vertex.
+   */
+  private[graft] lazy val oracleClipCands
+      : Seq[(String, String, Int, Int, String, Int, Array[Double], Array[Double])] = {
+    import graft.geom.Geom
+    val boundsByKey = oracleBounds.map { case (cl, co, h, f) => (cl, co, h) -> f }.toMap
+    Courses.courses(NCourses).flatMap { c =>
+      c.holes.zipWithIndex.flatMap { case (hole, pos) =>
+        boundsByKey.get((c.clubId, c.courseId, pos + 1)).toSeq.flatMap { bClosed =>
+          val b0x = bClosed(0); val b0y = bClosed(1)
+          val bT = translateRing(bClosed, b0x, b0y)
+          hole.gpsItems.zipWithIndex.flatMap { case (item, seq) =>
+            val cat = catalogByType.get(item.itemType)
+            if (item.itemType == "HoleBoundary" || !cat.exists(_.category == "polygon") ||
+                item.shape.length <= 2) None
+            else {
+              val flat = item.shape.iterator
+                .flatMap(p => Iterator(p.longitude, p.latitude)).toArray
+              // the engine's make_polygon(closed_ring(gaussian_smooth(...)))
+              val smoothed = Geom.gaussianSmooth(flat, 1.0)
+              val closed1 = Geom.closeRing(smoothed)
+              if (Geom.nPts(closed1) < 3 || Geom.nPts(Geom.closeRing(closed1)) - 1 < 3) None
+              else {
+                val iT = translateRing(Geom.closeRing(closed1), b0x, b0y)
+                // stIntersection's validity gates, then the envelope
+                // quick-reject shared by both intersection paths
+                if (!Geom.isRingValid(iT) || !Geom.isRingValid(bT)) None
+                else {
+                  val ei = Geom.envelope(Geom.dropClosingDup(iT))
+                  val eb = Geom.envelope(Geom.dropClosingDup(bT))
+                  if (ei(2) < eb(0) || eb(2) < ei(0) || ei(3) < eb(1) || eb(3) < ei(1)) None
+                  else Some((c.clubId, c.courseId, pos + 1, seq, item.itemType,
+                    cat.get.zorder, Geom.dropClosingDup(iT), Geom.dropClosingDup(bT)))
+                }
+              }
+            }
+          }
+        }
+      }
+    }
+  }
+
+  /** Line-category items (raw coords, flat) for the q44 vertex-clip replay:
+    * `(clubId, courseId, holeNumber, itemSeq, itemType, zorder, pts)`. */
+  private[graft] lazy val oracleLines: Seq[(String, String, Int, Int, String, Int, Array[Double])] =
+    Courses.courses(NCourses).flatMap { c =>
+      c.holes.zipWithIndex.flatMap { case (h, pos) =>
+        h.gpsItems.zipWithIndex.collect {
+          case (item, seq) if catalogByType.get(item.itemType).exists(_.category == "line") =>
+            (c.clubId, c.courseId, pos + 1, seq, item.itemType, catalogByType(item.itemType).zorder,
+              item.shape.iterator.flatMap(p => Iterator(p.longitude, p.latitude)).toArray)
+        }
+      }
+    }
+
+  /** The flagship-family oracle inputs, one frame per CTE of the same
+    * name, built with `createDataFrame` from the pure-JVM Seqs above and
+    * an explicit schema — never through an engine plan, so the oracles
+    * stay independent of it. `Fixtures.ensureAll` writes each to parquet
+    * (bit-exact doubles) and the oracles read it back ([[inputCte]]).
+    * Rings and point lists are `DOUBLE[][]` `[x, y]` lists, closed or open
+    * exactly as the Seq holds them:
+    *  - `bounds`/`boundsm`: [[oracleBounds]]/[[oracleBoundsMulti]] with
+    *    their envelopes;
+    *  - `ivals`: the [[oracleClipCands]] item rings (boundary-local frame);
+    *  - `tbounds`: one translated open boundary ring per hole that has clip
+    *    candidates, so it is not repeated per item;
+    *  - `lvals`: [[oracleLines]]; `markers`: [[oracleMarkers]]. */
+  private[graft] def oracleInputFrames(spark: SparkSession): Seq[(String, DataFrame)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    def pts(flat: Array[Double]): Seq[Seq[Double]] = flat.grouped(2).map(_.toSeq).toSeq
+    def env(flat: Array[Double]): Seq[Double] = graft.geom.Geom.envelope(flat).toSeq
+    def frame(ddl: String, rows: Seq[Seq[Any]]): DataFrame =
+      spark.createDataFrame(rows.map(Row.fromSeq).asJava,
+        org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    val key = "clubId STRING, courseId STRING, holeNumber INT"
+    val envelope = "minx DOUBLE, miny DOUBLE, maxx DOUBLE, maxy DOUBLE"
+    val ring = "ARRAY<ARRAY<DOUBLE>>"
+    Seq(
+      "bounds" -> frame(s"$key, $envelope, ring $ring",
+        oracleBounds.map { case (cl, co, h, f) => Seq(cl, co, h) ++ env(f) :+ pts(f) }),
+      "boundsm" -> frame(s"$key, piece INT, $envelope, ring $ring",
+        oracleBoundsMulti.map { case (cl, co, h, pi, f) => Seq(cl, co, h, pi) ++ env(f) :+ pts(f) }),
+      "ivals" -> frame(s"$key, itemSeq INT, itemType STRING, zorder INT, iring $ring",
+        oracleClipCands.map { case (cl, co, h, seq, it, z, iring, _) => Seq(cl, co, h, seq, it, z, pts(iring)) }),
+      "tbounds" -> frame(s"$key, bring $ring",
+        oracleClipCands.groupBy(c => (c._1, c._2, c._3)).toSeq.sortBy(_._1)
+          .map { case ((cl, co, h), cs) => Seq(cl, co, h, pts(cs.head._8)) }),
+      "lvals" -> frame(s"$key, itemSeq INT, itemType STRING, zorder INT, pts $ring",
+        oracleLines.map { case (cl, co, h, seq, it, z, f) => Seq(cl, co, h, seq, it, z, pts(f)) }),
+      "markers" -> frame(s"$key, itemSeq INT, itemType STRING, x DOUBLE, y DOUBLE",
+        oracleMarkers.map(_.productIterator.toSeq)))
+  }
+
+  /** The CTE `name` over its [[oracleInputFrames]] file. `materialized`
+    * where an oracle reads the CTE more than once (q44's `bounds`), or
+    * where the parallel scan of a materialized CTE beats the one-thread
+    * scan of a one-row-group file for the lambda-heavy pipeline it drives
+    * (q43's clip candidates, the tile masks). Not everywhere: DuckDB
+    * estimates a materialized scan at one row, which flips q75's cross
+    * product onto its slow side (measured 185 s against 65 s). */
+  private def inputCte(name: String, materialized: Boolean = false): String =
+    s"$name AS ${if (materialized) "MATERIALIZED " else ""}" +
+      s"(SELECT * FROM read_parquet('${graft.data.Fixtures.oracleInputDir(name)}/*.parquet'))"
+
+  /** DuckDB Sutherland–Hodgman half-plane clip of point-list column `p`
+    * by the directed edge `e1 -> e2` (inside = left); `e1`/`e2` are SQL
+    * `[x,y]` expressions. Mirrors the textbook emit rule (entering edges
+    * emit the crossing then the vertex; leaving edges emit the crossing). */
+  private def hpClip(p: String, e1: String, e2: String): String = {
+    def side(q: String): String =
+      s"(($e2[1] - $e1[1]) * ($q[2] - $e1[2]) - ($e2[2] - $e1[2]) * ($q[1] - $e1[1]))"
+    val c = s"$p[k]"
+    val pv = s"$p[CASE WHEN k = 1 THEN len($p) ELSE k - 1 END]"
+    val sc = side(c)
+    val sp = side(pv)
+    val t = s"($sp / ($sp - $sc))"
+    val ip = s"[$pv[1] + $t * ($c[1] - $pv[1]), $pv[2] + $t * ($c[2] - $pv[2])]"
+    s"""flatten(list_transform(generate_series(1, len($p)), k ->
+       |      CASE WHEN $sc >= 0 AND $sp < 0 THEN [$ip, $c]
+       |           WHEN $sc >= 0 THEN [$c]
+       |           WHEN $sp >= 0 THEN [$ip]
+       |           ELSE CAST([] AS DOUBLE[][]) END))""".stripMargin
+  }
+
+  // ---- the strict point-in-ring ray cast, the EXACT expression shapes of
+  // `GeoOps.stContainsFlat`: a point on any edge is excluded, otherwise
+  // an odd crossing count means inside. `pr[1]` = prev vertex, `pr[2]` =
+  // cur vertex. Each caller compares the counts itself (`= 0`, `> 0`,
+  // `% 2 = 1`). ----
+
+  /** The (prev, cur) vertex pairs of `ring`, an OPEN `[[x,y],...]` list,
+    * wraparound edge included. */
+  private def edgePairs(ring: String): String =
+    s"list_zip(list_prepend($ring[len($ring)], $ring[1:len($ring)-1]), $ring)"
+
+  /** How many edges of `prs` ([[edgePairs]]) the point (`x`, `y`) lies on:
+    * zero cross product inside the edge's bounding box. */
+  private def edgeHits(prs: String, x: String, y: String): String =
+    s"""len(list_filter($prs, pr ->
+       |      (pr[2][1] - pr[1][1]) * ($y - pr[1][2]) - (pr[2][2] - pr[1][2]) * ($x - pr[1][1]) = 0
+       |      AND $x >= least(pr[1][1], pr[2][1]) AND $x <= greatest(pr[1][1], pr[2][1])
+       |      AND $y >= least(pr[1][2], pr[2][2]) AND $y <= greatest(pr[1][2], pr[2][2])))""".stripMargin
+
+  /** How many edges of `prs` ([[edgePairs]]) the ray from (`x`, `y`)
+    * towards +x crosses (even-odd rule). */
+  private def crossings(prs: String, x: String, y: String): String =
+    s"""len(list_filter($prs, pr ->
+       |      ((pr[2][2] > $y) != (pr[1][2] > $y))
+       |      AND $x < (pr[1][1] - pr[2][1]) * ($y - pr[2][2]) / (pr[1][2] - pr[2][2]) + pr[2][1]))""".stripMargin
+
+  /** Strict point-in-ring SQL (on-edge excluded), `ring` an OPEN
+    * `[[x,y],...]` list column. */
+  private def pipExpr(qx: String, qy: String, ring: String): String = {
+    val prs = edgePairs(ring)
+    s"""(${edgeHits(prs, qx, qy)} = 0
+       |    AND ${crossings(prs, qx, qy)} % 2 = 1)""".stripMargin
+  }
+
+  /** Shared CTE prefix for q43/q44: the clip candidates and their
+    * (item edge x boundary edge) pair expansion. */
+  private def clipCandsCtes: String =
+    s"""${inputCte("tbounds", materialized = true)},
+       |${inputCte("ivals", materialized = true)},
+       |cands AS (
+       |  SELECT * FROM ivals JOIN tbounds USING (clubId, courseId, holeNumber)),
+       |pairs AS (
+       |  SELECT clubId, courseId, holeNumber, itemSeq, itemType,
+       |    iring[i] AS a1, iring[CASE WHEN i = len(iring) THEN 1 ELSE i + 1 END] AS a2,
+       |    bring[j] AS b1, bring[CASE WHEN j = len(bring) THEN 1 ELSE j + 1 END] AS b2
+       |  FROM cands,
+       |    unnest(generate_series(1, len(iring))) AS gi(i),
+       |    unnest(generate_series(1, len(bring))) AS gj(j))""".stripMargin
+
+  /** Shared CTEs for the raster-family oracles: enumerate each boundary's
+    * covering z-17 tiles (same tile formulas the q14 oracle pinned), build
+    * each tile's 8x8 sample grid ONCE (DuckDB lacks sinh; `(e^x-e^-x)/2`
+    * substitutes — it feeds covers DECISIONS, not output values, and the
+    * full 5443-mask set was verified bit-identical), ray-cast every sample
+    * with the engine's exact st_covers semantics, and pack the 64-bit
+    * mask via HUGEINT (DuckDB's BIGINT `<<` overflows at bit 63). */
+  private def tileMaskedCtes: String = {
+    val n = s"${1L << 17}.0"
+    val inner = s"pi() * (1.0 - 2.0 * (CAST(ty AS DOUBLE) + (CAST(i AS DOUBLE) + 0.5) / 8.0) / $n)"
+    val latS = s"degrees(atan((exp($inner) - exp(-($inner))) / 2.0))"
+    val lonS = s"(CAST(tx AS DOUBLE) + (CAST(j AS DOUBLE) + 0.5) / 8.0) / $n * 360.0 - 180.0"
+    s"""${inputCte("bounds", materialized = true)},
+       |tiles AS (
+       |  SELECT *,
+       |    CAST(floor((minx + 180.0) / 360.0 * $n) AS BIGINT) AS tx0,
+       |    CAST(floor((maxx + 180.0) / 360.0 * $n) AS BIGINT) AS tx1,
+       |    CAST(floor((1.0 - ln(tan(radians(maxy)) + 1.0 / cos(radians(maxy))) / pi()) / 2.0 * $n) AS BIGINT) AS ty0,
+       |    CAST(floor((1.0 - ln(tan(radians(miny)) + 1.0 / cos(radians(miny))) / pi()) / 2.0 * $n) AS BIGINT) AS ty1
+       |  FROM bounds),
+       |grid AS (
+       |  SELECT t.clubId, t.courseId, t.holeNumber, gx.tx, gy.ty,
+       |    ${edgePairs("t.ring")} AS prs,
+       |    flatten(list_transform(generate_series(0, 7), i ->
+       |      list_transform(generate_series(0, 7), j ->
+       |        [$lonS, $latS, CAST(i * 8 + j AS DOUBLE)]))) AS samples
+       |  FROM tiles t, unnest(generate_series(tx0, tx1)) gx(tx), unnest(generate_series(ty0, ty1)) gy(ty)),
+       |bits AS (
+       |  SELECT clubId, courseId, holeNumber, tx, ty,
+       |    list_transform(samples, s ->
+       |      CASE WHEN (
+       |        ${edgeHits("prs", "s[1]", "s[2]")} > 0
+       |        OR
+       |        ${crossings("prs", "s[1]", "s[2]")} % 2 = 1
+       |      ) THEN (CAST(1 AS HUGEINT) << CAST(s[3] AS INT)) ELSE CAST(0 AS HUGEINT) END) AS bitvals
+       |  FROM grid),
+       |masked AS (
+       |  SELECT clubId, courseId, holeNumber, CAST(17 AS INT) AS z, tx AS x, ty AS y,
+       |    list_reduce(list_transform(generate_series(0, 16), k ->
+       |      CAST(((tx >> (16 - k)) & 1) + 2 * ((ty >> (16 - k)) & 1) AS VARCHAR)),
+       |      (a, b) -> a || b) AS qk,
+       |    CAST(CASE WHEN mh >= CAST('9223372036854775808' AS HUGEINT)
+       |      THEN mh - CAST('18446744073709551616' AS HUGEINT) ELSE mh END AS BIGINT) AS mask,
+       |    CAST(n_set AS DOUBLE) / 64.0 AS coverage
+       |  FROM (SELECT *, list_reduce(list_prepend(CAST(0 AS HUGEINT), bitvals), (a, b) -> a | b) AS mh,
+       |          len(list_filter(bitvals, b -> b != 0)) AS n_set FROM bits)
+       |  WHERE mh != 0)""".stripMargin
+  }
+
+  /** The multi-piece containment replay: per-piece envelope prefilter,
+    * per-piece on-edge + even-odd ray cast ([[edgeHits]], [[crossings]]),
+    * then the containsStrict rule aggregated per (page, hole): on ANY
+    * piece's edge -> excluded, inside any piece -> hit. Ends in
+    * `hitsm(url, lon, lat, clubId, courseId, holeNumber)`. */
+  private def pipHitsMultiCtes: String =
+    s"""${inputCte("boundsm")},
+       |candm AS (
+       |  SELECT p.url, p.lon, p.lat, b.clubId, b.courseId, b.holeNumber, b.piece,
+       |    ${edgePairs("b.ring")} AS prs
+       |  FROM pages p JOIN boundsm b
+       |    ON p.lon >= b.minx AND p.lon <= b.maxx AND p.lat >= b.miny AND p.lat <= b.maxy
+       |),
+       |relm AS (
+       |  SELECT url, lon, lat, clubId, courseId, holeNumber, piece,
+       |    (${edgeHits("prs", "lon", "lat")} > 0) AS onedge,
+       |    (${crossings("prs", "lon", "lat")} % 2 = 1) AS inside
+       |  FROM candm
+       |),
+       |hitsm AS (
+       |  SELECT url, lon, lat, clubId, courseId, holeNumber
+       |  FROM relm GROUP BY url, lon, lat, clubId, courseId, holeNumber
+       |  HAVING sum(CASE WHEN onedge THEN 1 ELSE 0 END) = 0
+       |     AND sum(CASE WHEN inside THEN 1 ELSE 0 END) > 0
+       |)""".stripMargin
+
+  /** Shared CTE tail: strict shapely-`contains` ray cast in DuckDB SQL
+    * ([[edgeHits]], [[crossings]]), evaluated on the oracle boundary
+    * coordinates; the inclusive envelope pre-join only ADDS candidates (a
+    * strictly interior point is never outside the envelope). */
+  private def pipHitsCtes: String =
+    s"""${inputCte("bounds")},
+       |cand AS (
+       |  SELECT p.*, b.clubId, b.courseId, b.holeNumber,
+       |    ${edgePairs("b.ring")} AS prs
+       |  FROM pages p JOIN bounds b
+       |    ON p.lon >= b.minx AND p.lon <= b.maxx AND p.lat >= b.miny AND p.lat <= b.maxy
+       |),
+       |hits AS (
+       |  SELECT * FROM cand
+       |  WHERE ${edgeHits("prs", "lon", "lat")} = 0
+       |    AND ${crossings("prs", "lon", "lat")} % 2 = 1
+       |)""".stripMargin
+}

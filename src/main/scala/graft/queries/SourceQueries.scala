@@ -1,0 +1,336 @@
+package graft
+package queries
+
+import org.apache.spark.sql.functions._
+import graft.data.Courses
+import Common._
+
+/**
+ * Source and sink queries (media and binary scans, JSONL/WARC/crawl
+ * readers, snapshots, merges and compaction), each beside its DuckDB
+ * oracle.
+ */
+private[graft] object SourceQueries {
+
+  val queries: Seq[Query] = Seq(
+    // ---- multimodal binary columns (stub decode; scalatest-covered) ----
+    Query("q33_media_features", (s, d) => {
+      import graft.pipeline.Multimodal
+      Multimodal.decodeFeatures(Multimodal.withMedia(t(s, d, "documents")))
+        .select(col("doc_id"), col("media_type"),
+          round(element_at(col("feature"), 1).cast("double"), 6).as("f0"))
+    },
+    // StubDecoder dim-0 rolling hash replayed exactly: payload bytes are
+    // md5 blocks of text, dim 0 folds bytes at i % 8 = 0 through
+    // acc*1000003 + b + 1 (mod 2^64, via HUGEINT); f0 = (acc & 0xffffff)
+    // / 2^24 is exactly representable in float32 AND float64, so the
+    // engine's float feature equals the oracle's double bit-for-bit
+    () =>
+      """WITH m AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS media_type,
+        |    CASE WHEN doc_id % 3 = 0 THEN 4 WHEN doc_id % 3 = 1 THEN 8 ELSE 16 END AS nb,
+        |    text
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id, media_type,
+        |    list_reduce(
+        |      list_prepend(CAST(0 AS HUGEINT),
+        |        list_transform(generate_series(0, nb * 16 - 8, 8), i ->
+        |          CAST(strpos('0123456789abcdef', substring(md5(text || ':' || CAST(i // 16 AS BIGINT)), (i % 16) * 2 + 1, 1)) - 1 AS HUGEINT) * 16
+        |          + CAST(strpos('0123456789abcdef', substring(md5(text || ':' || CAST(i // 16 AS BIGINT)), (i % 16) * 2 + 2, 1)) - 1 AS HUGEINT))),
+        |      (acc, b) -> (acc * 1000003 + b + 1) % CAST('18446744073709551616' AS HUGEINT)) AS v
+        |  FROM m)
+        |SELECT doc_id, media_type,
+        |  round(CAST(v % 16777216 AS DOUBLE) / 16777216.0, 6) AS f0
+        |FROM f""".stripMargin),
+
+    Query("q34_frame_sample", (s, d) => {
+      import graft.pipeline.Multimodal
+      // frame_hex pins the actual frame BYTES to the oracle (each sampled
+      // frame is one md5-derived block of the synthetic payload, so DuckDB
+      // reproduces it as upper(md5(text || ':' || frame_idx)))
+      Multimodal.sampleFrames(Multimodal.withMedia(t(s, d, "documents")), everyN = 2)
+        .select(col("doc_id"), col("frame_idx"), length(col("frame_bytes")).as("n_bytes"),
+          hex(col("frame_bytes")).as("frame_hex"))
+    },
+    // sampled video frame = one 16-byte md5 block of the synthetic payload
+    () =>
+      """SELECT doc_id, frame_idx, CAST(16 AS INT) AS n_bytes,
+        |  upper(md5(text || ':' || frame_idx)) AS frame_hex
+        |FROM documents, unnest([0,2,4,6,8,10,12,14]) AS t(frame_idx)
+        |WHERE doc_id % 3 = 2""".stripMargin),
+
+    // ---- S3: REAL binary-file scan over the reference's raster resources
+    // (fixed read-only path, deterministic 11-file set) with PNG header
+    // dims decoded by expression math; DuckDB oracles it via read_blob ----
+    Query("q51_binary_scan", (s, d) => {
+      import graft.pipeline.Multimodal
+      // one-level glob, matching the oracle's read_blob('.../*/*.png')
+      // file set exactly (the reference layout is icons/ + textures/)
+      Multimodal.readBinaryDir(s, Multimodal.DefaultResourcesDir + "/*")
+        .select(col("file_name"),
+          col("media_meta.n_bytes").cast("long").as("n_bytes"),
+          col("media_meta.width").as("width"),
+          col("media_meta.height").as("height"),
+          md5(hex(col("media"))).as("payload_md5"))
+    },
+    // read_blob = DuckDB's binaryFile; PNG IHDR width/height parsed from
+    // the hex string (bytes 17-20 / 21-24 big-endian); payload pinned by
+    // md5 over the full hex dump (DuckDB's md5 only takes VARCHAR)
+    () =>
+      """SELECT regexp_extract(filename, '[^/]+$') AS file_name,
+        |  CAST(size AS BIGINT) AS n_bytes,
+        |  CAST(list_reduce(list_transform(string_split(substring(hex(content), 33, 8), ''),
+        |    c -> CAST(strpos('0123456789ABCDEF', c) - 1 AS BIGINT)), (a, d) -> a * 16 + d) AS INT) AS width,
+        |  CAST(list_reduce(list_transform(string_split(substring(hex(content), 41, 8), ''),
+        |    c -> CAST(strpos('0123456789ABCDEF', c) - 1 AS BIGINT)), (a, d) -> a * 16 + d) AS INT) AS height,
+        |  md5(hex(content)) AS payload_md5
+        |FROM read_blob('/root/reference/resources/*/*.png')""".stripMargin),
+
+    Query("q35_media_meta", (s, d) => {
+      import graft.pipeline.Multimodal
+      Multimodal.withMedia(t(s, d, "documents"))
+        .select(col("doc_id"), col("media_type"),
+          col("media_meta.width").as("width"), col("media_meta.height").as("height"),
+          col("media_meta.sample_rate").as("sample_rate"),
+          col("media_meta.n_frames").as("n_frames"),
+          col("media_meta.n_bytes").as("n_bytes"))
+    }, () =>
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS media_type,
+        |  CAST(CASE WHEN doc_id % 3 = 0 THEN (doc_id % 4 + 1) * 64 END AS INT) AS width,
+        |  CAST(CASE WHEN doc_id % 3 = 0 THEN (doc_id % 3 + 1) * 64 END AS INT) AS height,
+        |  CAST(CASE WHEN doc_id % 3 = 1 THEN 16000 END AS INT) AS sample_rate,
+        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 16 END AS INT) AS n_frames,
+        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 64 WHEN doc_id % 3 = 1 THEN 128 ELSE 256 END AS INT) AS n_bytes
+        |FROM documents""".stripMargin),
+
+    // ---- S1: the JSONL course-layout scan driven end-to-end (write the
+    // reference-shaped fixture, read it back through the explicit-schema
+    // scan, flatten, aggregate per hole; DuckDB re-reads the same files
+    // with its own JSON reader) ----
+    Query("q59_jsonl_scan", (s, d) => {
+      val path = graft.data.Fixtures.jsonlDir(s, NCourses)
+      val xs = transform(col("shape"), p => p("x"))
+      val ys = transform(col("shape"), p => p("y"))
+      Courses.itemsFromLayouts(Courses.readLayouts(s, path))
+        .groupBy(col("clubId"), col("courseId"), col("holeNumber"))
+        .agg(count(lit(1)).as("n_items"),
+          sum(size(col("shape")).cast("long")).as("n_points"),
+          min(array_min(xs)).as("min_x"), max(array_max(xs)).as("max_x"),
+          min(array_min(ys)).as("min_y"), max(array_max(ys)).as("max_y"))
+    },
+    // S1 JSONL scan: DuckDB's own JSON reader over the same fixture files
+    () =>
+      s"""WITH t AS (
+         |  SELECT * FROM read_json('${graft.data.Fixtures.Root}/layouts_jsonl_$NCourses/*.json')),
+         |h AS (
+         |  SELECT clubId, courseId, g.hn AS holeNumber, t.holes[g.hn] AS hole
+         |  FROM t, unnest(generate_series(1, len(t.holes))) AS g(hn))
+         |SELECT clubId, courseId, CAST(holeNumber AS INT) AS holeNumber,
+         |  CAST(len(hole.gpsItems) AS BIGINT) AS n_items,
+         |  CAST(list_reduce(list_prepend(0, list_transform(hole.gpsItems,
+         |    it -> len(it.shape))), (a, b) -> a + b) AS BIGINT) AS n_points,
+         |  list_aggregate(flatten(list_transform(hole.gpsItems,
+         |    it -> list_transform(it.shape, p -> p.longitude))), 'min') AS min_x,
+         |  list_aggregate(flatten(list_transform(hole.gpsItems,
+         |    it -> list_transform(it.shape, p -> p.longitude))), 'max') AS max_x,
+         |  list_aggregate(flatten(list_transform(hole.gpsItems,
+         |    it -> list_transform(it.shape, p -> p.latitude))), 'min') AS min_y,
+         |  list_aggregate(flatten(list_transform(hole.gpsItems,
+         |    it -> list_transform(it.shape, p -> p.latitude))), 'max') AS max_y
+         |FROM h""".stripMargin),
+
+    // ---- WARC ingest driven end-to-end: parse the fixture segment and
+    // fingerprint every payload; the oracle slices the RAW FILE BYTES at
+    // serializer-derived offsets (a CDX-style index), so each record
+    // boundary the parser found is checked against an independent read ----
+    Query("q60_warc_scan", (s, d) => {
+      val dir = graft.data.Fixtures.warcDir()
+      graft.sources.Warc.read(s, dir).toDF()
+        .select(col("warcType").as("warc_type"), col("targetUri").as("url"),
+          col("recordId").as("record_id"),
+          length(col("payload")).cast("long").as("n_bytes"),
+          md5(hex(col("payload"))).as("payload_md5"))
+    },
+    // WARC ingest: slice the raw file bytes at the serializer-derived
+    // offsets and fingerprint — every parser-found record boundary is
+    // cross-checked against an independent byte read
+    () =>
+      s"""WITH idx AS (
+         |  SELECT * FROM (VALUES $oracleWarcIndexValues)
+         |    AS i(warc_type, url, record_id, payload_off, len_b)),
+         |blob AS (
+         |  SELECT content FROM read_blob('${graft.data.Fixtures.Root}/warc/seg-00000.warc'))
+         |SELECT warc_type, url, record_id, CAST(len_b AS BIGINT) AS n_bytes,
+         |  md5(substring(hex(b.content), payload_off * 2 + 1, len_b * 2)) AS payload_md5
+         |FROM idx, blob b""".stripMargin),
+
+    // ---- crawl -> corpus driven end-to-end from the wire format (r3
+    // verdict item #3): WARC response records -> HTTP body bytes
+    // (Warc.toPages) -> expression-only HTML text extraction
+    // (TextExtract.fromHtml) -> q54 gate metrics + q24 langid, one
+    // dataflow. The oracle re-derives EVERYTHING (body slice, header
+    // strip, extraction, gate, prediction) from the raw segment bytes at
+    // serializer-derived offsets ----
+    Query("q73_crawl_to_corpus", (s, d) => {
+      val dir = graft.data.Fixtures.htmlWarcDir()
+      val p = graft.sources.Warc.toPages(graft.sources.Warc.read(s, dir))
+      // localize the extracted tiny dim: five downstream expressions
+      // reference `text`, and CollapseProject would otherwise inline the
+      // regex-chain extraction once per reference (CLAUDE.md Catalyst
+      // rule; at corpus scale this materialization point is the corpus
+      // table the extraction stage writes anyway)
+      val extracted = graft.sources.Storage.localize(
+        p.select(col("url"),
+          graft.pipeline.TextExtract.fromHtml(col("html").cast("string")).as("text")))
+      val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
+      val toks = split(trim(col("text")), "\\s+")
+      val nToks = size(toks)
+      extracted.select(
+          col("url"),
+          md5(col("text")).as("text_md5"),
+          nToks.cast("long").as("n_toks"),
+          round(size(filter(toks, tk => tk.isInCollection(stop))).cast("double") /
+            nToks.cast("double"), 6).as("stop_ratio"),
+          round(size(array_distinct(toks)).cast("double") /
+            nToks.cast("double"), 6).as("distinct_ratio"),
+          graft.pipeline.LangId.predict(col("text")).as("pred_lang"))
+        .withColumn("passed", col("n_toks") >= 20 && col("n_toks") <= 1000 &&
+          col("stop_ratio") >= 0.01 && col("distinct_ratio") >= 0.3)
+    },
+    // crawl -> corpus replayed from the raw segment bytes: the file is
+    // pure ASCII so decode() + CHARACTER offsets == the serializer's BYTE
+    // offsets; body = payload past the first CRLFCRLF (the fixture's
+    // bodies are '\n'-newline-only, so that terminator is unique); the
+    // extraction chain is GENERATED from TextExtract's pattern constants
+    // and the langid CASE from LangId's profiles — single definition,
+    // both engines
+    () =>
+      s"""WITH idx AS (
+         |  SELECT * FROM (VALUES $oracleCrawlIndexValues) AS i(url, payload_off, len_b)),
+         |raw AS (
+         |  SELECT decode(content) AS f
+         |  FROM read_blob('${graft.data.Fixtures.Root}/crawl/crawl-00000.warc')),
+         |pay AS (SELECT url, substring(f, payload_off + 1, len_b) AS payload FROM idx, raw),
+         |bod AS (
+         |  SELECT url, substring(payload,
+         |    strpos(payload, chr(13)||chr(10)||chr(13)||chr(10)) + 4) AS body FROM pay),
+         |ext AS (SELECT url, ${graft.pipeline.TextExtract.fromHtmlSql("body")} AS text FROM bod),
+         |scored AS (
+         |  SELECT url, text,
+         |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
+         |    round(CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
+         |      t -> t IN ('the','a','and','of','to','in','is','it','for','on'))) AS DOUBLE)
+         |      / len(string_split_regex(trim(text), '\\s+')), 6) AS stop_ratio,
+         |    round(CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS DOUBLE)
+         |      / len(string_split_regex(trim(text), '\\s+')), 6) AS distinct_ratio,
+         |    ${graft.pipeline.LangId.scoreSql("text")}
+         |  FROM ext)
+         |SELECT url, md5(text) AS text_md5, n_toks, stop_ratio, distinct_ratio,
+         |  (n_toks >= 20 AND n_toks <= 1000 AND stop_ratio >= 0.01
+         |    AND distinct_ratio >= 0.3) AS passed,
+         |  ${graft.pipeline.LangId.predCaseSql} AS pred_lang
+         |FROM scored""".stripMargin),
+
+    // ---- MERGE INTO + CDC driven end-to-end: v1 = nation, v2 = merge
+    // of 5 updated comments + 1 new key (overwrite snapshot); the diff
+    // between versions is the changelog, re-derived by the oracle from
+    // the nation table alone ----
+    Query("q85_snapshot_merge_diff", (s, d) => {
+      val dir = graft.data.Fixtures.mergeTable(s, d)
+      graft.sources.Snapshots.diff(s, dir, 1L, 2L)
+        .select(col("op"), col("n_nationkey").cast("long").as("n_nationkey"),
+          col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
+    },
+    // the merge changelog re-derived from nation: updates appear as
+    // delete+insert pairs, the new key as a bare insert
+    () =>
+      """SELECT 'insert' AS op, CAST(n_nationkey AS BIGINT) AS n_nationkey,
+        |  'updated-' || n_nationkey AS n_name,
+        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
+        |FROM nation WHERE n_nationkey < 5
+        |UNION ALL
+        |SELECT 'insert', 99, 'ZZTOP', 0
+        |UNION ALL
+        |SELECT 'delete', CAST(n_nationkey AS BIGINT), n_name,
+        |  CAST(n_regionkey AS BIGINT)
+        |FROM nation WHERE n_nationkey < 5""".stripMargin),
+
+    // ---- snapshot time-travel driven end-to-end: rebuild a two-commit
+    // table (full nation, then a fast-append of the <10 slice) and read
+    // BOTH versions; the oracle recomputes each version's expected live
+    // set from the nation table itself ----
+    Query("q121_compaction", (s, d) => {
+      // snapshot-table COMPACTION: five append commits fragment the live
+      // set into small files; compact rewrites the current rows as one
+      // overwrite commit. Graded: the data is IDENTICAL before and after
+      // (both versions re-read via time travel and reduced to the same
+      // aggregates the oracle derives from the logical table), proving
+      // compaction changes layout, never content — and that pre-compact
+      // versions stay readable. File-count reduction and history
+      // integrity are pinned in StorageSpec (physical layout is not a
+      // cross-engine-gradable value).
+      // r6: the table is rebuilt from scratch on EVERY run (6 commits +
+      // 2 time-travel reads of real files — filesystem-bound by design);
+      // its location is immaterial to the graded aggregates, so use the
+      // fastest local scratch (tmpfs when present)
+      val dir = graft.data.Fixtures.fastScratchDir("graft_q121_")
+      val nation = t(s, d, "nation")
+      (0 until 5).foreach { i =>
+        graft.sources.Snapshots.commit(
+          nation.filter(pmod(col("n_nationkey"), lit(5)) === i).repartition(2), dir)
+      }
+      val compacted = graft.sources.Snapshots.compact(s, dir, targetFiles = 2)
+      def at(v: Long) = graft.sources.Snapshots.readVersionAsOf(s, dir, v)
+        .groupBy().agg(count(lit(1)).as("n_rows"),
+          sum(col("n_nationkey").cast("long")).as("sum_keys"))
+        .withColumn("version", lit(v))
+      at(5L).unionByName(at(compacted))
+        .select(col("version"), col("n_rows"), col("sum_keys"))
+    },
+    // snapshot time-travel: each version's live set recomputed from the
+    // source table (v1 = full nation; v2 = v1 + the appended <10 slice)
+    // compaction replay: version 5 (all five appends) and version 6
+    // (the compacted overwrite) are both the WHOLE logical table — the
+    // identity the operator must preserve
+    () =>
+      """SELECT CAST(5 AS BIGINT) AS version, count(*) AS n_rows,
+        |  CAST(sum(n_nationkey) AS BIGINT) AS sum_keys FROM nation
+        |UNION ALL
+        |SELECT CAST(6 AS BIGINT), count(*), CAST(sum(n_nationkey) AS BIGINT)
+        |FROM nation""".stripMargin),
+
+    Query("q61_snapshots", (s, d) => {
+      val dir = graft.data.Fixtures.snapshotTable(s, d)
+      def at(v: Long) = graft.sources.Snapshots.readVersionAsOf(s, dir, v)
+        .groupBy().agg(count(lit(1)).as("n_rows"),
+          sum(col("n_nationkey").cast("long")).as("sum_keys"))
+        .withColumn("version", lit(v))
+      at(1L).unionByName(at(2L))
+        .select(col("version"), col("n_rows"), col("sum_keys"))
+    }, () =>
+      """SELECT CAST(1 AS BIGINT) AS version, count(*) AS n_rows,
+        |  CAST(sum(n_nationkey) AS BIGINT) AS sum_keys FROM nation
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT), count(*), CAST(sum(n_nationkey) AS BIGINT) FROM (
+        |  SELECT n_nationkey FROM nation
+        |  UNION ALL SELECT n_nationkey FROM nation WHERE n_nationkey < 10)""".stripMargin)
+  )
+
+  /** q60's CDX-style payload index as VALUES literals — offsets come from
+    * the fixture SERIALIZER ([[graft.data.Fixtures.warcPayloadIndex]]),
+    * never from the parser under test. */
+  private lazy val oracleWarcIndexValues: String =
+    graft.data.Fixtures.warcPayloadIndex().map { case (r, off, len) =>
+      s"('${r.warcType}','${r.targetUri}','${r.recordId}',$off,$len)"
+    }.mkString(",")
+
+  /** q73's crawl-segment payload index (responses only — the records
+    * `Warc.toPages` keeps), serializer-derived like q60's. */
+  private lazy val oracleCrawlIndexValues: String =
+    graft.data.Fixtures.warcPayloadIndex(graft.data.Fixtures.htmlCrawlRecords())
+      .filter(_._1.warcType == "response")
+      .map { case (r, off, len) => s"('${r.targetUri}',$off,$len)" }.mkString(",")
+}

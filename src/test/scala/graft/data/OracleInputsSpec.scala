@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
 import graft.geom.Geom
+import graft.queries.GeoQueries
 
 /** The flagship-family oracle inputs travel as parquet: what
   * `Fixtures.ensureAll` writes must read back as the pure-JVM Seqs row for
@@ -30,21 +31,21 @@ class OracleInputsSpec extends AnyFunSuite {
     Fixtures.ensureAll(spark, "/root/testdata/sf0.001", SparkEntry.NCourses)
     val expected: Seq[(String, Seq[(String, String)], Seq[Seq[Any]])] = Seq(
       ("bounds", keyCols ++ envCols :+ ("ring" -> rng),
-        SparkEntry.oracleBounds.map { case (cl, co, h, f) => Seq(cl, co, h) ++ env(f) :+ ring(f) }),
+        GeoQueries.oracleBounds.map { case (cl, co, h, f) => Seq(cl, co, h) ++ env(f) :+ ring(f) }),
       ("boundsm", (keyCols :+ ("piece" -> int)) ++ envCols :+ ("ring" -> rng),
-        SparkEntry.oracleBoundsMulti.map { case (cl, co, h, pi, f) =>
+        GeoQueries.oracleBoundsMulti.map { case (cl, co, h, pi, f) =>
           Seq(cl, co, h, pi) ++ env(f) :+ ring(f) }),
       ("ivals", keyCols ++ itemCols ++ Seq("zorder" -> int, "iring" -> rng),
-        SparkEntry.oracleClipCands.map { case (cl, co, h, seq, it, z, iring, _) =>
+        GeoQueries.oracleClipCands.map { case (cl, co, h, seq, it, z, iring, _) =>
           Seq(cl, co, h, seq, it, z, ring(iring)) }),
       ("tbounds", keyCols :+ ("bring" -> rng),
-        SparkEntry.oracleClipCands.map(c => (c._1, c._2, c._3) -> ring(c._8)).distinct
+        GeoQueries.oracleClipCands.map(c => (c._1, c._2, c._3) -> ring(c._8)).distinct
           .sortBy(_._1).map { case ((cl, co, h), b) => Seq(cl, co, h, b) }),
       ("lvals", keyCols ++ itemCols ++ Seq("zorder" -> int, "pts" -> rng),
-        SparkEntry.oracleLines.map { case (cl, co, h, seq, it, z, f) =>
+        GeoQueries.oracleLines.map { case (cl, co, h, seq, it, z, f) =>
           Seq(cl, co, h, seq, it, z, ring(f)) }),
       ("markers", keyCols ++ itemCols ++ Seq("x" -> dbl, "y" -> dbl),
-        SparkEntry.oracleMarkers.map { case (cl, co, h, seq, it, x, y) =>
+        GeoQueries.oracleMarkers.map { case (cl, co, h, seq, it, x, y) =>
           Seq(cl, co, h, seq, it, bits(x), bits(y)) }))
     val oracles = SparkEntry.oracleSql.values.toSeq
     expected.foreach { case (name, cols, rows) =>

@@ -79,7 +79,7 @@ class MultiPieceSpec extends AnyFunSuite {
         ((r.getString(0), r.getString(1), r.getInt(2)),
           rings.map(_.flatMap(p => Seq(p.getDouble(0), p.getDouble(1))).toVector).toVector)
       }.toMap
-    val replica = graft.SparkEntry.oracleBoundsMulti
+    val replica = graft.queries.GeoQueries.oracleBoundsMulti
       .groupBy { case (cl, co, h, _, _) => (cl, co, h) }
       .view.mapValues(_.sortBy(_._4).map { case (_, _, _, _, flat) =>
         flat.toVector }.toVector).toMap
@@ -103,7 +103,7 @@ class MultiPieceSpec extends AnyFunSuite {
   }
 
   test("the graded q94 output has hits strictly inside BOTH archipelago pieces") {
-    val pieces = graft.SparkEntry.oracleBoundsMulti
+    val pieces = graft.queries.GeoQueries.oracleBoundsMulti
       .filter(b => b._1 == "club-9000" && b._3 == 1).sortBy(_._4).map(_._5)
     assert(pieces.length === 2)
     val hits = graft.SparkEntry.queries("q94_course_assign_multi")(

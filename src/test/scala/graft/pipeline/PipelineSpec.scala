@@ -6,6 +6,7 @@ import graft.SparkEntry
 import graft.data.{Courses, Pages}
 import graft.expr.GeoOps
 import graft.geom.Geom
+import graft.queries.GeoQueries
 
 /** End-to-end geo pipeline correctness against in-JVM brute force —
   * the oracle for the operators DuckDB can't express (SURVEY.md §5.3-5.5). */
@@ -326,7 +327,7 @@ class PipelineSpec extends AnyFunSuite {
     val engine = bounds.collect().map { r =>
       (r.getString(0), r.getString(1), r.getInt(2)) -> polyAt(r, 3)(0).toSeq
     }.toMap
-    val oracle = SparkEntry.oracleBounds
+    val oracle = GeoQueries.oracleBounds
       .map { case (cl, co, h, flat) => (cl, co, h) -> flat.toSeq }.toMap
     assert(oracle.keySet == engine.keySet,
       s"hole sets differ: onlyOracle=${(oracle.keySet -- engine.keySet).take(3)} " +
@@ -345,7 +346,7 @@ class PipelineSpec extends AnyFunSuite {
       .select($"clubId", $"courseId", $"holeNumber", $"itemSeq", $"clip_area").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap
-    val candSurvivors = SparkEntry.oracleClipCands.flatMap {
+    val candSurvivors = GeoQueries.oracleClipCands.flatMap {
       case (cl, co, h, seq, _, _, iring, bring) =>
         val pieces = Geom.intersectionPieces(iring, bring)
         if (pieces == null) None

@@ -1,15 +1,25 @@
 #!/usr/bin/env python3
-"""Bit-exact comparison of two graft.Verify dumps (partitioning invariance).
+"""Bit-exact comparison of two graft.Verify dumps and of their oracle maps.
 
-Usage: python3 tools/compare_dumps.py OUT_A OUT_B
+Usage: python3 tools/compare_dumps.py OUT_A OUT_B [ORACLE ...]
 
 For each query directory present in both dumps, loads all parquet parts,
 sorts columns by name and rows by every column, and compares values
-exactly (NaN == NaN, bytes compared as bytes). Exits nonzero on any
-difference — the property under test is that no query output depends on
-partition count, task order, or parallelism level.
+exactly (NaN == NaN, bytes compared as bytes). The property under test is
+that no query output depends on partition count, task order, parallelism
+level, or a refactor that should not change behaviour.
+
+Then compares the two dumps' oracle_sql.json key for key, after replacing
+each run's fixture root (/tmp/graft_fixtures_<pid>) with one placeholder.
+Each oracle is reported as identical, whitespace-only (equal once
+whitespace runs are collapsed) or changed. A trailing ORACLE name allows
+the oracles it selects to change: the key equal to it or starting with it
+plus `_`, as in check_oracle.py.
+
+Exits nonzero on any output mismatch, on oracle key sets that differ, or
+on a changed oracle that no ORACLE name allows.
 """
-import glob, os, sys
+import glob, json, os, re, sys
 import pandas as pd
 import numpy as np
 
@@ -38,8 +48,41 @@ def eq(a, b):
     return True
 
 
+FIXTURE_ROOT = re.compile(r"/tmp/graft_fixtures_\d+")
+
+
+def oracles(outdir):
+    with open(f"{outdir}/oracle_sql.json") as f:
+        return {k: FIXTURE_ROOT.sub("<fixture_root>", v) for k, v in json.load(f).items()}
+
+
+def compare_oracles(out_a, out_b, allowed):
+    """Prints one line per oracle; returns the number of failures."""
+    a, b = oracles(out_a), oracles(out_b)
+    n_bad = 0
+    for k in sorted(a.keys() - b.keys()) + sorted(b.keys() - a.keys()):
+        n_bad += 1
+        print(f"oracle {k}: only in {out_a if k in a else out_b}")
+    counts = {"identical": 0, "whitespace-only": 0, "changed": 0}
+    for k in sorted(a.keys() & b.keys()):
+        if a[k] == b[k]:
+            kind = "identical"
+        elif a[k].split() == b[k].split():
+            kind = "whitespace-only"
+        else:
+            kind = "changed"
+            if not any(k == w or k.startswith(w + "_") for w in allowed):
+                n_bad += 1
+                kind += " (not allowed)"
+        counts[kind.split()[0]] += 1
+        print(f"oracle {k}: {kind}")
+    print(f"oracles: {len(a.keys() & b.keys())} common keys, " +
+          ", ".join(f"{n} {kind}" for kind, n in counts.items()))
+    return n_bad
+
+
 def main():
-    out_a, out_b = sys.argv[1], sys.argv[2]
+    out_a, out_b, allowed = sys.argv[1], sys.argv[2], sys.argv[3:]
     qs = sorted(
         {d for d in os.listdir(out_a) if os.path.isdir(os.path.join(out_a, d))}
         & {d for d in os.listdir(out_b) if os.path.isdir(os.path.join(out_b, d))})
@@ -51,8 +94,9 @@ def main():
         else:
             n_bad += 1
             print(f"{q}: MISMATCH (rows {len(a)} vs {len(b)})")
+    n_bad_oracles = compare_oracles(out_a, out_b, allowed)
     print(f"{len(qs) - n_bad}/{len(qs)} bit-identical")
-    sys.exit(1 if n_bad else 0)
+    sys.exit(1 if n_bad or n_bad_oracles else 0)
 
 
 if __name__ == "__main__":
