@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.expr.Kernel
 
 /**
  * Session-extension entry point: ship the whole function surface into any
@@ -18,10 +19,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    functions.builders.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
-        builder))
+    Kernel.all.foreach { k =>
+      ext.injectFunction((FunctionIdentifier(k.name), new ExpressionInfo("graft", k.name), k.apply))
     }
 }

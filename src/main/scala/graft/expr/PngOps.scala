@@ -1,9 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /**
  * From-scratch PNG byte encoder for the raster sink — the artifact-parity
@@ -156,24 +153,4 @@ object PngOps {
     while (k < 12) { out(p + k) = iend(k).toByte; k += 1 }
     out
   }
-}
-
-/** png_encode(pixels ARRAY<BOOLEAN>, width INT, rgb INT) -> BINARY.
-  * Sink-side, rows = holes (not pages): evaluated once per output
-  * artifact, never on a scan/join hot path — CodegenFallback by design
-  * (the codegen'd kernels are reserved for per-page work). */
-case class PngEncode(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  // containsNull = true: a `transform(...)`-built array types as nullable
-  // elements even when the lambda can't return null, and implicit casts
-  // never narrow containsNull — a null element throws in encode() instead.
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(BooleanType), IntegerType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "png_encode"
-  override protected def nullSafeEval(px: Any, w: Any, rgb: Any): Any =
-    PngOps.encode(px.asInstanceOf[ArrayData], w.asInstanceOf[Int], rgb.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): PngEncode =
-    copy(f, s, t)
 }

@@ -101,15 +101,11 @@ object TrigramLangId {
     * measured 15.3s over sf0.1 vs sub-second for the kernel, same
     * arithmetic). Ties (<3-char docs, all scores 0) go to the first
     * profile — same first-max rule as [[LangId.predict]]. */
-  def predict(text: Column): Column =
-    org.apache.spark.sql.graftShim.column(
-      graft.expr.TrigramLangPredict(org.apache.spark.sql.graftShim.expression(text)))
+  def predict(text: Column): Column = graft.functions.trigram_lang_predict(text)
 
   /** Best-language mean trigram log-prob — the q79 fluency/quality score
     * (same kernel fold + one division; bit-exact cross-engine). */
-  def fluency(text: Column): Column =
-    org.apache.spark.sql.graftShim.column(
-      graft.expr.TrigramFluency(org.apache.spark.sql.graftShim.expression(text)))
+  def fluency(text: Column): Column = graft.functions.trigram_fluency(text)
 
   private def dlit(d: Double): String = {
     val s = d.toString

@@ -30,10 +30,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
           |    struct(4.0d AS x, 4.0d AS y), struct(0.0d AS x, 4.0d AS y))),
           |    2.0d, 2.0d) AS inside""".stripMargin).head()
       assert(r.getLong(0) > 0 && r.getLong(1) > 0 && r.getBoolean(2))
-      // every builder is resolvable by name
-      functions.builders.foreach { case (name, _) =>
+      // every kernel in the table is resolvable by name
+      graft.expr.Kernel.all.foreach { k =>
         assert(spark.sessionState.functionRegistry
-          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)), name)
+          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(k.name)), k.name)
       }
     } finally {
       SparkSession.clearActiveSession()
@@ -43,5 +43,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
         SparkSession.setActiveSession(s)
       }
     }
+  }
+
+  test("the function surface is the 50 kernels of the table, each named once") {
+    val names = graft.expr.Kernel.all.map(_.name)
+    assert(names.size == 50 && names.distinct.size == 50)
+    assert(names.sorted == Seq(
+      "bm25_fold", "cell_center", "cell_id", "cell_level", "cell_min_distance_m",
+      "cell_parent", "cell_x", "cell_y", "char_shingles", "closed_ring", "cosine_sim",
+      "cover_cells", "disk_cells", "dot_sim", "fingerprint", "flatten_shell",
+      "gaussian_smooth", "gear_cuts", "hamming_dist", "hash_text", "hashed_char_shingles",
+      "hashed_word_shingles", "hyperplane_lsh", "keyed_dot", "leading_zeros", "lsh_bands",
+      "make_polygon", "minhash", "mix64", "nfc_normalize", "png_encode", "quadkey",
+      "ring_cells", "simhash", "sorted_jaccard", "st_area", "st_contains", "st_contains_flat",
+      "st_covers", "st_distance_m", "st_distance_to_shell_m", "st_envelope", "st_intersection",
+      "st_isvalid", "tile_x", "tile_y", "trigram_fluency", "trigram_lang_predict", "viewport",
+      "word_shingles"))
   }
 }

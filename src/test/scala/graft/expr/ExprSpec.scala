@@ -323,11 +323,8 @@ class ExprSpec extends AnyFunSuite {
     assert(math.abs(r.getDouble(3) -
       graft.geom.Geom.haversineM(2.0, 0.5, 1.0, 0.5)) == 0.0)
     // trigram predict/fluency == direct kernel calls
-    val t = df.select(
-      org.apache.spark.sql.graftShim.column(TrigramLangPredict(
-        org.apache.spark.sql.graftShim.expression($"s"))).as("p"),
-      org.apache.spark.sql.graftShim.column(TrigramFluency(
-        org.apache.spark.sql.graftShim.expression($"s"))).as("f")).collect()(0)
+    val t = df.select(trigram_lang_predict($"s").as("p"), trigram_fluency($"s").as("f"))
+      .collect()(0)
     assert(t.getString(0) == TrigramModel.predict(
       org.apache.spark.unsafe.types.UTF8String.fromString("café test")).toString)
     assert(t.getDouble(1) == TrigramModel.bestAvgLogProb(
@@ -474,14 +471,33 @@ class ExprSpec extends AnyFunSuite {
   }
 
   test("expressions survive codegen AND interpreted paths identically") {
-    // force interpreted path by wrapping in a non-codegen context: compare
-    // wholestage-on collect vs wholestage-off collect
-    val q = ringDf.filter($"id" === 1)
-      .select(make_polygon(gaussian_smooth(closed_ring($"ring"), lit(1.0))).as("poly"))
-      .select(st_area($"poly").as("a"), st_contains($"poly", lit(2.0), lit(2.0)).as("c"))
-    val on = q.collect()(0)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    val off = try q.collect()(0) finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    assert(on.getDouble(0) == off.getDouble(0) && on.getBoolean(1) == off.getBoolean(1))
+    // every kernel in the table, over non-foldable input (a Range, so no
+    // LocalRelation folding): row 0 carries the kernel's sample arguments,
+    // row 1 nulls them all. Column n reads nullable arguments, column nn the
+    // same values through non-nullable ones, so both codegen shapes run.
+    val id = col("id")
+    def frame(k: Kernel) = {
+      val args = KernelSamples.args(k.name)
+      spark.range(2).select(
+        KernelSamples.call(k, args.map(a => when(id === 0, a))).as("n"),
+        KernelSamples.call(k, args.map(a => coalesce(when(id === 0, a), a))).as("nn"))
+    }
+    def run(mode: String): Seq[Seq[(String, String)]] = KernelSamples.withConf(spark,
+        "spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString,
+        "spark.sql.codegen.fallback" -> "false") {
+      Kernel.all.map(k => frame(k).collect().toSeq.map(r =>
+        (KernelSamples.canon(r.get(0)), KernelSamples.canon(r.get(1)))))
+    }
+    val codegen = run("CODEGEN_ONLY")
+    val interpreted = run("NO_CODEGEN")
+    Kernel.all.zip(codegen.zip(interpreted)).foreach { case (k, (c, i)) =>
+      assert(c == i, s"${k.name}: codegen $c != interpreted $i")
+      val Seq((sample, nonNull0), (nullIn, nonNull1)) = c
+      assert(sample != "null", s"${k.name}: sample arguments evaluated to null")
+      assert(nullIn == "null", s"${k.name}: null arguments gave $nullIn")
+      assert(nonNull0 == sample && nonNull1 == sample,
+        s"${k.name}: non-nullable arguments gave $nonNull0 / $nonNull1, not $sample")
+    }
   }
 }

@@ -818,4 +818,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$plan")
     assert(plan.contains("st_contains_flat"), "exact PIP refine missing from the plan")
   }
+
+  test("flagship refine calls the PIP kernel directly from generated code") {
+    // the hot path must stay a static call inside whole-stage codegen, not
+    // a generic eval through the expression object (AQE off: its stages
+    // are only planned when the query runs)
+    val src = graft.expr.KernelSamples.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      SpatialJoin.assignPagesFlat(Pages.pages(spark, sfDir, SparkEntry.Amp),
+        SpatialJoin.coverDfFlat(bounds), bounds)
+        .queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    }
+    assert(src.contains("graft.expr.GeoOps.stContainsFlat("), "no direct refine call")
+    assert("""references\[\d+\][^;]*\.eval\(""".r.findFirstIn(src).isEmpty,
+      "an expression fell back to eval in the flagship stages")
+  }
 }
