@@ -21,7 +21,9 @@ import org.apache.spark.sql.SparkSession
  * q11_* only, never q110_*; an arg that selects nothing is an error.
  * With --noop the timed action is a noop-sink write (every column of
  * every row computed); default is the driver's `count()` action for
- * comparability with Bench.
+ * comparability with Bench. A query that throws prints
+ * `[benchextra] <name> FAILED: <message>`, is left out of `total_min`,
+ * and the run goes on; the exit status is nonzero if any query failed.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -55,7 +57,7 @@ object BenchExtra {
       if (noop) df.write.format("noop").mode("overwrite").save() else df.count()
       (System.nanoTime() - t0) / 1e9
     }
-    val results = selected.map { name =>
+    def measure(name: String): Double = {
       explainDir.foreach { dir =>
         val df = all(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
@@ -67,9 +69,15 @@ object BenchExtra {
       }
       val times = (1 to runs).map(_ => runOnce(name))
       println(f"[benchextra] $name%-32s min=${times.min}%8.3f  med=${times.sorted.apply(times.length / 2)}%8.3f  all=${times.map(t => f"$t%.3f").mkString(",")}")
-      name -> times.min
+      times.min
+    }
+    val results = selected.flatMap { name =>
+      try Some(name -> measure(name)) catch {
+        case e: Exception => println(s"[benchextra] $name FAILED: ${e.getMessage}"); None
+      }
     }
     println("[benchextra] total_min=" + f"${results.map(_._2).sum}%.3f")
     spark.stop()
+    if (results.size < selected.size) sys.exit(1)
   }
 }

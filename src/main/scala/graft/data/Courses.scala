@@ -114,14 +114,7 @@ object Courses {
 
   def itemsDfWithIslands(spark: SparkSession, nCourses: Int, seed: Long = 42L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val ds = spark.createDataset(coursesWithIslands(nCourses, seed))
-    ds.select($"clubId", $"courseId", posexplode($"holes").as(Seq("pos", "hole")))
-      .select($"clubId", $"courseId", ($"pos" + 1).as("holeNumber"),
-        posexplode($"hole.gpsItems").as(Seq("itemSeq", "item")))
-      .select($"clubId", $"courseId", $"holeNumber", $"itemSeq",
-        $"item.itemType".as("itemType"),
-        expr("transform(item.shape, p -> struct(p.longitude AS x, p.latitude AS y))").as("shape"))
+    itemsFromLayouts(spark.createDataset(coursesWithIslands(nCourses, seed)).toDF())
   }
 
   /** Deterministic course set clustered around the Pages city centers. */
@@ -148,14 +141,7 @@ object Courses {
     * ARRAY<STRUCT<x,y>> in (lon,lat) order (reference :220-222). */
   def itemsDf(spark: SparkSession, nCourses: Int, seed: Long = 42L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val ds = spark.createDataset(courses(nCourses, seed))
-    ds.select($"clubId", $"courseId", posexplode($"holes").as(Seq("pos", "hole")))
-      .select($"clubId", $"courseId", ($"pos" + 1).as("holeNumber"),
-        posexplode($"hole.gpsItems").as(Seq("itemSeq", "item")))
-      .select($"clubId", $"courseId", $"holeNumber", $"itemSeq",
-        $"item.itemType".as("itemType"),
-        expr("transform(item.shape, p -> struct(p.longitude AS x, p.latitude AS y))").as("shape"))
+    itemsFromLayouts(spark.createDataset(courses(nCourses, seed)).toDF())
   }
 
   /** Writes the reference-shaped JSONL fixture (the file missing from the

@@ -272,8 +272,10 @@ object Geom {
   // A ring is valid when: >=3 distinct vertices, nonzero area, and no
   // two non-adjacent edges intersect (O(n^2); rings are small).
   // ---------------------------------------------------------------------
-  private def segIntersects(ax: Double, ay: Double, bx: Double, by: Double,
-                            cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
+  /** Closed segments ab and cd intersect (touching counts). Also
+    * `index.Cover`'s segment-vs-rectangle edge test. */
+  private[graft] def segIntersects(ax: Double, ay: Double, bx: Double, by: Double,
+                                   cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
     def orient(ox: Double, oy: Double, px: Double, py: Double, qx: Double, qy: Double): Double =
       (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
     val d1 = orient(cx, cy, dx, dy, ax, ay)

@@ -66,22 +66,10 @@ object Cover {
     if (ay > n && by > n) return false
     // segment vs each rect edge
     Geom.onSegment(ax, ay, bx, by, w, s) || Geom.onSegment(ax, ay, bx, by, e, n) ||
-      segSeg(ax, ay, bx, by, w, s, e, s) || segSeg(ax, ay, bx, by, e, s, e, n) ||
-      segSeg(ax, ay, bx, by, e, n, w, n) || segSeg(ax, ay, bx, by, w, n, w, s)
-  }
-
-  private def segSeg(ax: Double, ay: Double, bx: Double, by: Double,
-                     cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
-    def o(ox: Double, oy: Double, px: Double, py: Double, qx: Double, qy: Double): Double =
-      (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
-    val d1 = o(cx, cy, dx, dy, ax, ay); val d2 = o(cx, cy, dx, dy, bx, by)
-    val d3 = o(ax, ay, bx, by, cx, cy); val d4 = o(ax, ay, bx, by, dx, dy)
-    if (((d1 > 0 && d2 < 0) || (d1 < 0 && d2 > 0)) &&
-        ((d3 > 0 && d4 < 0) || (d3 < 0 && d4 > 0))) return true
-    (d1 == 0 && Geom.onSegment(cx, cy, dx, dy, ax, ay)) ||
-      (d2 == 0 && Geom.onSegment(cx, cy, dx, dy, bx, by)) ||
-      (d3 == 0 && Geom.onSegment(ax, ay, bx, by, cx, cy)) ||
-      (d4 == 0 && Geom.onSegment(ax, ay, bx, by, dx, dy))
+      Geom.segIntersects(ax, ay, bx, by, w, s, e, s) ||
+      Geom.segIntersects(ax, ay, bx, by, e, s, e, n) ||
+      Geom.segIntersects(ax, ay, bx, by, e, n, w, n) ||
+      Geom.segIntersects(ax, ay, bx, by, w, n, w, s)
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,13 +26,22 @@ import org.apache.spark.sql.functions._
  */
 object Packing {
 
-  /** The replayable shard hash: first 15 hex chars of md5(id) mod
-    * nShards (15 chars = 60 bits, fits a positive long; same machinery
-    * as the q53 sampling buckets, replayed verbatim in the DuckDB
-    * oracle). Shared with [[Shards.writeShards]]'s resume bucketing so
-    * the sink's resume unit IS the packing shard. */
-  def shardOf(id: org.apache.spark.sql.Column, nShards: Int): org.apache.spark.sql.Column =
-    conv(substring(md5(id.cast("string")), 1, 15), 16, 10).cast("long") % nShards
+  /** The replayable 60-bit content key: the first 15 hex chars of
+    * md5(`s`) as a non-negative long (15 chars = 60 bits). It keys the
+    * packing shards, the q53/q65 sampling buckets and the q39 hamming
+    * keys; [[md5KeySql]] is its DuckDB replay. `s` must be a string. */
+  def md5Key(s: Column): Column = conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+
+  /** [[md5Key]] in DuckDB: the same 15 hex digits folded base 16. */
+  def md5KeySql(s: String): String =
+    s"""list_reduce(list_transform(string_split(substring(md5($s), 1, 15), ''),
+       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
+       |      (acc, d) -> acc * 16 + d)""".stripMargin
+
+  /** The shard of `id`: its [[md5Key]] mod nShards. Shared with
+    * [[Shards.writeShards]]'s resume bucketing so the sink's resume unit
+    * IS the packing shard. */
+  def shardOf(id: Column, nShards: Int): Column = md5Key(id.cast("string")) % nShards
 
   /** Per-doc batch assignment: (doc_id, n_toks, shard, batch_id).
     * `nShards <= 0` means "use spark.sql.shuffle.partitions". */

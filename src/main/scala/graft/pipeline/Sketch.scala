@@ -81,18 +81,23 @@ object Sketch {
   val HllNumeratorScale: Double = HllAlpha * HllM.toDouble * HllM.toDouble *
     math.pow(2.0, HllMaxRank.toDouble)
 
-  /**
-   * HLL registers of `key`: (idx, m) where idx = top-p bits of the mixed
-   * hash, m = max(rank) with rank = leading zeros of (h << p) + 1 (the
-   * classic observable; h << p == 0 caps at MaxRank). One groupBy of at
-   * most m rows — the whole 10^12-row cardinality summary is 64 ints.
-   */
-  def hllRegisters(df: DataFrame, key: Column): DataFrame = {
+  /** Register index (top p bits of the mixed hash) and rank (leading
+    * zeros of h << p, plus one; h << p == 0 caps at MaxRank) of `key`. */
+  private def hllIdxRank(key: Column): (Column, Column) = {
     val h = gf.hash_text(key) // FNV-fold + splitmix finalizer — already mixed
     val w = shiftleft(h, HllP)
-    val rank = when(w === 0L, lit(HllMaxRank))
-      .otherwise(gf.leading_zeros(w) + lit(1))
-    df.select(shiftrightunsigned(h, 64 - HllP).as("idx"), rank.as("rank"))
+    (shiftrightunsigned(h, 64 - HllP),
+      when(w === 0L, lit(HllMaxRank)).otherwise(gf.leading_zeros(w) + lit(1)))
+  }
+
+  /**
+   * HLL registers of `key`: (idx, m) with m = max(rank) per register —
+   * the classic observable. One groupBy of at most m rows — the whole
+   * 10^12-row cardinality summary is 64 ints.
+   */
+  def hllRegisters(df: DataFrame, key: Column): DataFrame = {
+    val (idx, rank) = hllIdxRank(key)
+    df.select(idx.as("idx"), rank.as("rank"))
       .groupBy(col("idx")).agg(max(col("rank")).as("m"))
   }
 
@@ -102,11 +107,8 @@ object Sketch {
    * slice of 100 TB. One groupBy, ≤ m rows per group.
    */
   def hllRegistersBy(df: DataFrame, grp: Column, key: Column): DataFrame = {
-    val h = gf.hash_text(key)
-    val w = shiftleft(h, HllP)
-    val rank = when(w === 0L, lit(HllMaxRank))
-      .otherwise(gf.leading_zeros(w) + lit(1))
-    df.select(grp.as("grp"), shiftrightunsigned(h, 64 - HllP).as("idx"), rank.as("rank"))
+    val (idx, rank) = hllIdxRank(key)
+    df.select(grp.as("grp"), idx.as("idx"), rank.as("rank"))
       .groupBy(col("grp"), col("idx")).agg(max(col("rank")).as("m"))
   }
 
@@ -129,17 +131,7 @@ object Sketch {
       .crossJoin(spark.range(0, HllM).select(col("id").cast("long").as("idx")))
     val full = grid.join(regs, Seq("grp", "idx"), "left")
       .select(col("grp"), coalesce(col("m"), lit(0)).as("m"))
-    val raw = lit(HllNumeratorScale) / col("num").cast("double")
-    val empties = lit(HllM.toLong) - col("occupied")
-    val corrected = when(raw <= lit(2.5 * HllM) && empties > 0,
-        round(lit(HllM.toDouble) * log(lit(HllM.toDouble) / empties.cast("double")), 6))
-      .otherwise(round(raw, 6))
-    full.groupBy(col("grp")).agg(
-        sum(expr(s"shiftleft(1L, $HllMaxRank - m)")
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("num"),
-        sum(when(col("m") > 0, 1).otherwise(0)).cast("long").as("occupied"))
-      .select(col("grp"), raw.as("hll_estimate"), corrected.as("hll_corrected"),
-        col("occupied"))
+    estimated(full, col("grp"))
   }
 
   /**
@@ -158,6 +150,11 @@ object Sketch {
     val full = spark.range(0, HllM).select(col("id").cast("long").as("idx"))
       .join(regs, Seq("idx"), "left")
       .select(coalesce(col("m"), lit(0)).as("m"))
+    estimated(full)
+  }
+
+  /** The estimate columns over every register's `m`, grouped by `keys`. */
+  private def estimated(full: DataFrame, keys: Column*): DataFrame = {
     val raw = lit(HllNumeratorScale) / col("num").cast("double")
     val empties = lit(HllM.toLong) - col("occupied")
     // standard small-range correction: linear counting m*ln(m/V) when the
@@ -168,10 +165,42 @@ object Sketch {
     val corrected = when(raw <= lit(2.5 * HllM) && empties > 0,
         round(lit(HllM.toDouble) * log(lit(HllM.toDouble) / empties.cast("double")), 6))
       .otherwise(round(raw, 6))
-    full.agg(
+    full.groupBy(keys: _*).agg(
         sum(expr(s"shiftleft(1L, $HllMaxRank - m)")
           .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("num"),
         sum(when(col("m") > 0, 1).otherwise(0)).cast("long").as("occupied"))
-      .select(raw.as("hll_estimate"), corrected.as("hll_corrected"), col("occupied"))
+      .select(keys ++ Seq(raw.as("hll_estimate"), corrected.as("hll_corrected"),
+        col("occupied")): _*)
+  }
+
+  // ---- the rank and estimator in DuckDB SQL, over the oracles' unsigned
+  // HUGEINT hash `h` in [0, 2^64) ----
+  private val TwoTo64Sql = s"${BigInt(1) << 64}::HUGEINT"
+
+  /** `idx, rank` select items for hash `h`: leading zeros of the
+    * shifted hash w = (h << p) mod 2^64 are 64 - len(bin(w)). */
+  def hllIdxRankSql(h: String): String =
+    s"""CAST($h // ${1L << (64 - HllP)} AS BIGINT) AS idx,
+       |    CASE WHEN ($h * $HllM) % $TwoTo64Sql = 0 THEN $HllMaxRank
+       |         ELSE CAST(65 - length(bin(($h * $HllM) % $TwoTo64Sql)) AS INT) END AS rank""".stripMargin
+
+  /** `num, occupied` aggregates over every register's `m` (the integer
+    * harmonic numerator in HUGEINT). */
+  val hllSumsSql: String =
+    s"""sum(CAST(CAST(1 AS BIGINT) << ($HllMaxRank - m) AS HUGEINT)) AS num,
+       |    sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS occupied""".stripMargin
+
+  /** `hll_estimate, hll_corrected, occupied` over [[hllSumsSql]]'s
+    * columns. Both double constants print with an exponent, which DuckDB
+    * types DOUBLE (a bare decimal would be DECIMAL). */
+  val hllEstimateSql: String = {
+    val raw = s"$HllNumeratorScale / CAST(num AS DOUBLE)"
+    s"""$raw AS hll_estimate,
+       |  CASE WHEN $raw
+       |         <= ${2.5 * HllM}E0 AND ($HllM - occupied) > 0
+       |       THEN round($HllM.0 * ln($HllM.0 / CAST($HllM - occupied AS DOUBLE)), 6)
+       |       ELSE round($raw, 6)
+       |  END AS hll_corrected,
+       |  CAST(occupied AS BIGINT) AS occupied""".stripMargin
   }
 }

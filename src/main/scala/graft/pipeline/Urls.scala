@@ -27,6 +27,15 @@ object Urls {
 
   private val SchemePat = "^([A-Za-z][A-Za-z0-9+.-]*)://"
 
+  /** The raw authority (userinfo and port kept, not [[canonicalize]]d)
+    * after a lowercase scheme: the host key of q56, q82, q83, q97, q100,
+    * q107 and the streaming budget join. */
+  private val HostPat = "^[a-z]+://([^/]+)"
+
+  def host(url: Column): Column = regexp_extract(url, HostPat, 1)
+
+  def hostSql(u: String): String = s"regexp_extract($u, '$HostPat', 1)"
+
   def canonicalize(url: Column): Column = {
     val scheme = lower(regexp_extract(url, SchemePat, 1))
     val rest = regexp_replace(url, SchemePat, "")

@@ -8,7 +8,8 @@ import graft.pipeline.CourseEngine
 /**
  * What several query families share: the correctness-scale constants,
  * the table, pages and course-dim readers, and the oracle-side SQL
- * replays of the engine's hashes (FNV-1a 64, splitmix64, MinHash banding).
+ * replays of the engine's hashes (FNV-1a 64, splitmix64, MinHash banding)
+ * and of the minhash verify and first-wins rules.
  * A leaf: it reads no family module and no `SparkEntry` member, so any
  * thread may initialise it first.
  */
@@ -159,4 +160,40 @@ private[graft] object Common {
          |    list_reduce(list_prepend(h, list_transform(range(0, 8), s -> (v // power(256, s)::HUGEINT) % 256)),
          |      (h2, byte) -> ${mulmod64("xor(h2, byte)", "1099511628211::HUGEINT")}))""".stripMargin)} // 256) AS bk
        |  FROM bands)""".stripMargin
+
+  // ---- the minhash verify and first-wins rules over the `keys` and `sh`
+  // CTEs of [[minhashBandCtes]] ----
+
+  /** `cand(doc_a, doc_b)`: distinct pairs sharing a band key, and
+    * `feat(doc_id, sh, n)`: each doc's distinct shingles and their count. */
+  val candFeatCtes: String =
+    """cand AS (
+      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |  FROM keys a JOIN keys b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+      |feat AS (SELECT doc_id, list_distinct(list(s)) AS sh, count(DISTINCT s) AS n
+      |         FROM sh GROUP BY doc_id)""".stripMargin
+
+  /** Exact shingle jaccard of the `feat` rows aliased `fa` and `fb`. */
+  val jaccardSql: String =
+    """CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
+      |      (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh)))""".stripMargin
+
+  /** The verify stage as a FROM/WHERE tail: `cand` joined to `feat` on
+    * both sides, kept at jaccard >= `Dedup.JaccardThreshold`. */
+  val verifySql: String =
+    s"""FROM cand
+       |  JOIN feat fa ON fa.doc_id = doc_a JOIN feat fb ON fb.doc_id = doc_b
+       |  WHERE $jaccardSql >= ${graft.pipeline.Dedup.JaccardThreshold}""".stripMargin
+
+  /** [[candFeatCtes]] plus `pairs(doc_a, doc_b)`, the verified pairs. */
+  val verifiedPairsCtes: String =
+    s"""$candFeatCtes,
+       |pairs AS (
+       |  SELECT doc_a, doc_b $verifySql)""".stripMargin
+
+  /** First-wins `own(bk, owner)`: the smallest doc id holding each band
+    * key. Over `keys k JOIN own o USING (bk)` grouped by `k.doc_id`,
+    * [[ownsAllSql]] holds iff no earlier doc shares any of its bands. */
+  val ownCte = "own AS (SELECT bk, min(doc_id) AS owner FROM keys GROUP BY bk)"
+  val ownsAllSql = "min(CASE WHEN o.owner = k.doc_id THEN 1 ELSE 0 END) = 1"
 }

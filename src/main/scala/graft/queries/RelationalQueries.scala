@@ -326,13 +326,13 @@ private[graft] object RelationalQueries {
       // authority-with-userinfo/port or exotic schemes, parse_url and a
       // naive regex disagree — the two sides must share one definition)
       pages(s, d)
-        .groupBy(regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("host"))
+        .groupBy(graft.pipeline.Urls.host(col("url")).as("host"))
         .agg(count(lit(1)).as("n_pages"),
           countDistinct(col("lang")).as("n_langs"),
           sum(length(col("text")).cast("long")).as("sum_chars"))
     }, () => (pagesCte +
-      """
-        |SELECT regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host,
+      s"""
+        |SELECT ${graft.pipeline.Urls.hostSql("url")} AS host,
         |  count(*) AS n_pages,
         |  count(DISTINCT lang) AS n_langs,
         |  CAST(sum(CAST(length(text) AS BIGINT)) AS BIGINT) AS sum_chars

@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.functions._
 import graft.{functions => gf}
 import Common._
+import graft.pipeline.{Packing, Sketch, Urls}
 
 /**
  * Sketch and sampling queries (count-min, HLL, Bloom, KMV, bottom-k,
@@ -18,17 +19,13 @@ private[graft] object SketchQueries {
       // (md5 -> 60-bit int -> mod 1000) gates each doc against its
       // language's quota — reproducible at any parallelism, no RNG state,
       // and the dominant language is downsampled 4x
-      val bucket = conv(substring(md5(col("text")), 1, 15), 16, 10)
-        .cast("long") % 1000
+      val bucket = Packing.md5Key(col("text")) % 1000
       t(s, d, "documents")
         .filter(bucket < when(col("lang") === "en", lit(250)).otherwise(lit(1000)))
         .select(col("doc_id"), col("lang"))
     }, () =>
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    list_reduce(list_transform(string_split(substring(md5(text), 1, 15), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-        |      (acc, d) -> acc * 16 + d) % 1000 AS bucket
+      s"""WITH h AS (
+        |  SELECT doc_id, lang, ${Packing.md5KeySql("text")} % 1000 AS bucket
         |  FROM documents)
         |SELECT doc_id, lang FROM h
         |WHERE bucket < CASE WHEN lang = 'en' THEN 250 ELSE 1000 END""".stripMargin),
@@ -39,7 +36,7 @@ private[graft] object SketchQueries {
       // one-sided guarantee (never under-estimates) is ASSERTED per key
       // in the graded output, not just claimed
       val hosts = pages(s, d).select(
-        regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("k"))
+        Urls.host(col("url")).as("k"))
       val counters = graft.pipeline.Sketch.countMin(hosts, col("k"))
       val exact = hosts.groupBy(col("k")).agg(count(lit(1)).as("exact_n"))
       graft.pipeline.Sketch.cmsEstimates(counters, exact.select(col("k")))
@@ -50,7 +47,7 @@ private[graft] object SketchQueries {
     // the full sketch replayed: every slot hash (FNV + splitmix64 over
     // HUGEINT), every counter cell, every min-estimate re-derived
     () => (pagesCte + s""",
-      |hosts AS (SELECT regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS k FROM pages),
+      |hosts AS (SELECT ${Urls.hostSql("url")} AS k FROM pages),
       |hh AS (SELECT k, ${fnvSql("k")} AS h FROM hosts),
       |b AS (SELECT k, j,
       |    CAST(${mix64Sql("xor(h, CAST(j AS HUGEINT))")} % 1024 AS BIGINT) AS bucket
@@ -72,9 +69,8 @@ private[graft] object SketchQueries {
       // cell-identical to the sketch built directly on all rows
       // (n_counter_mismatch = 0 graded), and estimates from the MERGED
       // sketch keep the one-sided guarantee per key (never_under).
-      import graft.pipeline.Sketch
       val hosts = pages(s, d).select(col("url"),
-        regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("k"))
+        Urls.host(col("url")).as("k"))
       val byShard = Sketch.countMinBy(hosts,
         pmod(gf.hash_text(col("url")), lit(4L)), col("k"))
       val merged = Sketch.cmsMerge(byShard)
@@ -96,7 +92,7 @@ private[graft] object SketchQueries {
     // direct table (exact-additive identity -> mismatch recomputed in
     // SQL), estimates from the MERGED counters
     () => (pagesCte + s""",
-      |hosts AS (SELECT url, regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS k FROM pages),
+      |hosts AS (SELECT url, ${Urls.hostSql("url")} AS k FROM pages),
       |hh AS (SELECT k, CAST(${fnvSql("url")} % 4 AS BIGINT) AS grp, ${fnvSql("k")} AS h FROM hosts),
       |b AS (SELECT k, grp, j,
       |    CAST(${mix64Sql("xor(h, CAST(j AS HUGEINT))")} % 1024 AS BIGINT) AS bucket
@@ -123,7 +119,7 @@ private[graft] object SketchQueries {
       // harmonic numerator, one rounding + one division) — output carries
       // the true distinct count for the accuracy story
       val hosts = pages(s, d).select(
-        regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("k"))
+        Urls.host(col("url")).as("k"))
       val est = graft.pipeline.Sketch.hllEstimate(
         graft.pipeline.Sketch.hllRegisters(hosts, col("k")))
       est.crossJoin(hosts.agg(countDistinct(col("k")).as("exact_distinct")))
@@ -133,26 +129,17 @@ private[graft] object SketchQueries {
     // integer harmonic numerator in HUGEINT, the identical scale
     // constant divided in DOUBLE
     () => (pagesCte + s""",
-      |hosts AS (SELECT regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS k FROM pages),
+      |hosts AS (SELECT ${Urls.hostSql("url")} AS k FROM pages),
       |hh AS (SELECT ${fnvSql("k")} AS h FROM hosts),
       |rr AS (
-      |  SELECT CAST(h // 288230376151711744 AS BIGINT) AS idx,
-      |    CASE WHEN (h * 64) % $Wrap64 = 0 THEN ${graft.pipeline.Sketch.HllMaxRank}
-      |         ELSE CAST(65 - length(bin((h * 64) % $Wrap64)) AS INT) END AS rank
+      |  SELECT ${Sketch.hllIdxRankSql("h")}
       |  FROM hh),
       |regs AS (SELECT idx, max(rank) AS m FROM rr GROUP BY idx),
-      |allreg AS (SELECT t.range AS idx FROM range(0, ${graft.pipeline.Sketch.HllM}) t),
+      |allreg AS (SELECT t.range AS idx FROM range(0, ${Sketch.HllM}) t),
       |jm AS (SELECT coalesce(m, 0) AS m FROM allreg LEFT JOIN regs USING (idx)),
       |agg AS (SELECT
-      |    sum(CAST(CAST(1 AS BIGINT) << (${graft.pipeline.Sketch.HllMaxRank} - m) AS HUGEINT)) AS num,
-      |    sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS occupied FROM jm)
-      |SELECT ${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE) AS hll_estimate,
-      |  CASE WHEN ${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE)
-      |         <= ${dlit(2.5 * graft.pipeline.Sketch.HllM)} AND (64 - occupied) > 0
-      |       THEN round(64.0 * ln(64.0 / CAST(64 - occupied AS DOUBLE)), 6)
-      |       ELSE round(${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE), 6)
-      |  END AS hll_corrected,
-      |  CAST(occupied AS BIGINT) AS occupied,
+      |    ${Sketch.hllSumsSql} FROM jm)
+      |SELECT ${Sketch.hllEstimateSql},
       |  (SELECT count(DISTINCT k) FROM hosts) AS exact_distinct
       |FROM agg""".stripMargin)),
 
@@ -166,9 +153,8 @@ private[graft] object SketchQueries {
       // executors each hold O(m) state over their slice of 100 TB and
       // combine in any reduce tree with no re-read. grp = -1 is the
       // merged row; its estimate is the global q83 estimate.
-      import graft.pipeline.Sketch
       val hosts = pages(s, d).select(col("url"),
-        regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("k"))
+        Urls.host(col("url")).as("k"))
       val regsBy = Sketch.hllRegistersBy(hosts,
         pmod(gf.hash_text(col("url")), lit(4L)), col("k"))
       val mergedRegs = Sketch.hllMerge(regsBy)
@@ -186,12 +172,10 @@ private[graft] object SketchQueries {
     // identity vs the direct sketch as a graded count, then q83's exact
     // estimate arithmetic per (shard ∪ merged) row
     () => (pagesCte + s""",
-      |hosts AS (SELECT url, regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS k FROM pages),
+      |hosts AS (SELECT url, ${Urls.hostSql("url")} AS k FROM pages),
       |hh AS (SELECT CAST(${fnvSql("url")} % 4 AS BIGINT) AS grp, ${fnvSql("k")} AS h FROM hosts),
       |rr AS (SELECT grp,
-      |    CAST(h // 288230376151711744 AS BIGINT) AS idx,
-      |    CASE WHEN (h * 64) % $Wrap64 = 0 THEN ${graft.pipeline.Sketch.HllMaxRank}
-      |         ELSE CAST(65 - length(bin((h * 64) % $Wrap64)) AS INT) END AS rank
+      |    ${Sketch.hllIdxRankSql("h")}
       |  FROM hh),
       |regsby AS (SELECT grp, idx, max(rank) AS m FROM rr GROUP BY grp, idx),
       |merged AS (SELECT CAST(-1 AS BIGINT) AS grp, idx, max(m) AS m FROM regsby GROUP BY idx),
@@ -202,20 +186,13 @@ private[graft] object SketchQueries {
       |  FROM merged a FULL JOIN direct b USING (idx)),
       |allregs AS (SELECT * FROM regsby UNION ALL SELECT * FROM merged),
       |grid AS (SELECT g.grp, t.range AS idx
-      |  FROM (SELECT DISTINCT grp FROM allregs) g, range(0, ${graft.pipeline.Sketch.HllM}) t),
+      |  FROM (SELECT DISTINCT grp FROM allregs) g, range(0, ${Sketch.HllM}) t),
       |jm AS (SELECT grid.grp, coalesce(ar.m, 0) AS m
       |  FROM grid LEFT JOIN allregs ar ON ar.grp = grid.grp AND ar.idx = grid.idx),
       |agg AS (SELECT grp,
-      |    sum(CAST(CAST(1 AS BIGINT) << (${graft.pipeline.Sketch.HllMaxRank} - m) AS HUGEINT)) AS num,
-      |    sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS occupied FROM jm GROUP BY grp)
+      |    ${Sketch.hllSumsSql} FROM jm GROUP BY grp)
       |SELECT grp,
-      |  ${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE) AS hll_estimate,
-      |  CASE WHEN ${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE)
-      |         <= ${dlit(2.5 * graft.pipeline.Sketch.HllM)} AND (64 - occupied) > 0
-      |       THEN round(64.0 * ln(64.0 / CAST(64 - occupied AS DOUBLE)), 6)
-      |       ELSE round(${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE), 6)
-      |  END AS hll_corrected,
-      |  CAST(occupied AS BIGINT) AS occupied,
+      |  ${Sketch.hllEstimateSql},
       |  (SELECT n_register_mismatch FROM mis) AS n_register_mismatch
       |FROM agg""".stripMargin)),
 
@@ -238,7 +215,7 @@ private[graft] object SketchQueries {
       val words = Bloom.buildWords(block, col("url"), bits = 2048, k = 3)
       val probed = Bloom.mightContain(
         p.select(col("url"),
-          regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("host")),
+          Urls.host(col("url")).as("host")),
         col("url"), words, bits = 2048, k = 3, out = "bloom_pass")
       probed.join(broadcast(block.withColumn("in_block", lit(1))), Seq("url"), "left")
         .groupBy(col("host")).agg(
@@ -263,7 +240,7 @@ private[graft] object SketchQueries {
       |  ORDER BY hs, url LIMIT 256),
       |bset AS (SELECT DISTINCT CAST(${mix64Sql("xor(hu, CAST(j AS HUGEINT))")} % 2048 AS BIGINT) AS idx
       |  FROM block, (VALUES (0), (1), (2)) jj(j)),
-      |probe AS (SELECT url, regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host,
+      |probe AS (SELECT url, ${Urls.hostSql("url")} AS host,
       |    CAST(${mix64Sql("xor(hu, 0::HUGEINT)")} % 2048 AS BIGINT) AS i0,
       |    CAST(${mix64Sql("xor(hu, 1::HUGEINT)")} % 2048 AS BIGINT) AS i1,
       |    CAST(${mix64Sql("xor(hu, 2::HUGEINT)")} % 2048 AS BIGINT) AS i2
@@ -350,7 +327,6 @@ private[graft] object SketchQueries {
       // re-reading old rows. Grades the q97 pattern: per-source
       // estimates (grp 1 = v1, 2 = increment, 3 = v2 direct, 4 = v1 +
       // increment merged) + n_register_mismatch = 0 between 3 and 4.
-      import graft.pipeline.Sketch
       val dir = graft.data.Fixtures.snapshotTable(s, d)
       val v1 = graft.sources.Snapshots.readVersionAsOf(s, dir, 1L)
       val v2 = graft.sources.Snapshots.readVersionAsOf(s, dir, 2L)
@@ -381,9 +357,7 @@ private[graft] object SketchQueries {
       |  UNION ALL SELECT n_name, 3 FROM nation WHERE n_nationkey < 10),
       |hh AS (SELECT CAST(grp AS BIGINT) AS grp, ${fnvSql("k")} AS h FROM allrows),
       |rr AS (SELECT grp,
-      |    CAST(h // 288230376151711744 AS BIGINT) AS idx,
-      |    CASE WHEN (h * 64) % $Wrap64 = 0 THEN ${graft.pipeline.Sketch.HllMaxRank}
-      |         ELSE CAST(65 - length(bin((h * 64) % $Wrap64)) AS INT) END AS rank
+      |    ${Sketch.hllIdxRankSql("h")}
       |  FROM hh),
       |regsby AS (SELECT grp, idx, max(rank) AS m FROM rr GROUP BY grp, idx),
       |merged AS (SELECT CAST(4 AS BIGINT) AS grp, idx, max(m) AS m
@@ -395,20 +369,13 @@ private[graft] object SketchQueries {
       |  FROM merged a FULL JOIN direct b USING (idx)),
       |allregs AS (SELECT * FROM regsby UNION ALL SELECT * FROM merged),
       |grid AS (SELECT g.grp, t.range AS idx
-      |  FROM (SELECT DISTINCT grp FROM allregs) g, range(0, ${graft.pipeline.Sketch.HllM}) t),
+      |  FROM (SELECT DISTINCT grp FROM allregs) g, range(0, ${Sketch.HllM}) t),
       |jm AS (SELECT grid.grp, coalesce(ar.m, 0) AS m
       |  FROM grid LEFT JOIN allregs ar ON ar.grp = grid.grp AND ar.idx = grid.idx),
       |agg AS (SELECT grp,
-      |    sum(CAST(CAST(1 AS BIGINT) << (${graft.pipeline.Sketch.HllMaxRank} - m) AS HUGEINT)) AS num,
-      |    sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS occupied FROM jm GROUP BY grp)
+      |    ${Sketch.hllSumsSql} FROM jm GROUP BY grp)
       |SELECT grp,
-      |  ${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE) AS hll_estimate,
-      |  CASE WHEN ${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE)
-      |         <= ${dlit(2.5 * graft.pipeline.Sketch.HllM)} AND (64 - occupied) > 0
-      |       THEN round(64.0 * ln(64.0 / CAST(64 - occupied AS DOUBLE)), 6)
-      |       ELSE round(${dlit(graft.pipeline.Sketch.HllNumeratorScale)} / CAST(num AS DOUBLE), 6)
-      |  END AS hll_corrected,
-      |  CAST(occupied AS BIGINT) AS occupied,
+      |  ${Sketch.hllEstimateSql},
       |  (SELECT n_register_mismatch FROM mis) AS n_register_mismatch
       |FROM agg""".stripMargin)),
 

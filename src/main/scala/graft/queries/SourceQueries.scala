@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.functions._
 import graft.data.Courses
 import Common._
+import graft.pipeline.Quality
 
 /**
  * Source and sink queries (media and binary scans, JSONL/WARC/crawl
@@ -185,20 +186,16 @@ private[graft] object SourceQueries {
       val extracted = graft.sources.Storage.localize(
         p.select(col("url"),
           graft.pipeline.TextExtract.fromHtml(col("html").cast("string")).as("text")))
-      val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
-      val toks = split(trim(col("text")), "\\s+")
-      val nToks = size(toks)
+      val toks = Quality.tokens(col("text"))
       extracted.select(
           col("url"),
           md5(col("text")).as("text_md5"),
-          nToks.cast("long").as("n_toks"),
-          round(size(filter(toks, tk => tk.isInCollection(stop))).cast("double") /
-            nToks.cast("double"), 6).as("stop_ratio"),
-          round(size(array_distinct(toks)).cast("double") /
-            nToks.cast("double"), 6).as("distinct_ratio"),
+          size(toks).cast("long").as("n_toks"),
+          Quality.stopRatio(toks).as("stop_ratio"),
+          Quality.distinctRatio(toks).as("distinct_ratio"),
           graft.pipeline.LangId.predict(col("text")).as("pred_lang"))
-        .withColumn("passed", col("n_toks") >= 20 && col("n_toks") <= 1000 &&
-          col("stop_ratio") >= 0.01 && col("distinct_ratio") >= 0.3)
+        .withColumn("passed",
+          Quality.passes(col("n_toks"), col("stop_ratio"), col("distinct_ratio")))
     },
     // crawl -> corpus replayed from the raw segment bytes: the file is
     // pure ASCII so decode() + CHARACTER offsets == the serializer's BYTE
@@ -220,17 +217,13 @@ private[graft] object SourceQueries {
          |ext AS (SELECT url, ${graft.pipeline.TextExtract.fromHtmlSql("body")} AS text FROM bod),
          |scored AS (
          |  SELECT url, text,
-         |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
-         |    round(CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-         |      t -> t IN ('the','a','and','of','to','in','is','it','for','on'))) AS DOUBLE)
-         |      / len(string_split_regex(trim(text), '\\s+')), 6) AS stop_ratio,
-         |    round(CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS DOUBLE)
-         |      / len(string_split_regex(trim(text), '\\s+')), 6) AS distinct_ratio,
+         |    CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_toks,
+         |    ${Quality.stopRatioSql("text")} AS stop_ratio,
+         |    ${Quality.distinctRatioSql("text")} AS distinct_ratio,
          |    ${graft.pipeline.LangId.scoreSql("text")}
          |  FROM ext)
          |SELECT url, md5(text) AS text_md5, n_toks, stop_ratio, distinct_ratio,
-         |  (n_toks >= 20 AND n_toks <= 1000 AND stop_ratio >= 0.01
-         |    AND distinct_ratio >= 0.3) AS passed,
+         |  (${Quality.passesSql("n_toks", "stop_ratio", "distinct_ratio")}) AS passed,
          |  ${graft.pipeline.LangId.predCaseSql} AS pred_lang
          |FROM scored""".stripMargin),
 

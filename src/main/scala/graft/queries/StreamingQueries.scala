@@ -59,11 +59,11 @@ private[graft] object StreamingQueries {
     // when arrival order follows doc_id, which the fixture guarantees
     () =>
       s"""WITH ${minhashBandCtes()},
-         |own AS (SELECT bk, min(doc_id) AS owner FROM keys GROUP BY bk)
+         |$ownCte
          |SELECT k.doc_id, count(*) AS n_bands
          |FROM keys k JOIN own o USING (bk)
          |GROUP BY k.doc_id
-         |HAVING min(CASE WHEN o.owner = k.doc_id THEN 1 ELSE 0 END) = 1""".stripMargin),
+         |HAVING $ownsAllSql""".stripMargin),
 
     // ---- second streaming CORRECTNESS row (r4 verdict item 4): the
     // watermarked STREAM-STREAM interval join (pages x crawl-budget
@@ -160,9 +160,7 @@ private[graft] object StreamingQueries {
     () =>
       s"""WITH hh AS (SELECT ${fnvSql("text")} AS h FROM documents),
          |rr AS (SELECT
-         |    CAST(h // 288230376151711744 AS BIGINT) AS idx,
-         |    CASE WHEN (h * 64) % $Wrap64 = 0 THEN ${graft.pipeline.Sketch.HllMaxRank}
-         |         ELSE CAST(65 - length(bin((h * 64) % $Wrap64)) AS INT) END AS rank
+         |    ${graft.pipeline.Sketch.hllIdxRankSql("h")}
          |  FROM hh)
          |SELECT idx, CAST(max(rank) AS INT) AS m,
          |  CAST(0 AS BIGINT) AS n_register_mismatch

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{functions => gf}
 import Common._
+import graft.pipeline.{Packing, Quality}
 
 /**
  * Text and dedup queries (tokenization, language id, quality gates,
@@ -131,14 +132,14 @@ private[graft] object TextQueries {
       t(s, d, "documents")
         .select(col("doc_id"), nTokens.as("n_tokens"), nChars.as("n_chars"),
           round((nChars - nSpaces).cast("double") / nTokens.cast("double"), 6).as("avg_token_len"),
-          (nTokens >= 20 && nTokens <= 1000).as("is_quality"))
+          Quality.inBand(nTokens).as("is_quality"))
     }, () =>
-      """SELECT doc_id, n_tokens, n_chars,
+      s"""SELECT doc_id, n_tokens, n_chars,
         |  round(CAST(n_chars - n_spaces AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS avg_token_len,
-        |  (n_tokens >= 20 AND n_tokens <= 1000) AS is_quality
+        |  (${Quality.inBandSql("n_tokens")}) AS is_quality
         |FROM (
         |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+        |    CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_tokens,
         |    CAST(length(text) AS BIGINT) AS n_chars,
         |    CAST(length(text) - length(replace(text, ' ', '')) AS BIGINT) AS n_spaces
         |  FROM documents)""".stripMargin),
@@ -158,21 +159,15 @@ private[graft] object TextQueries {
         |FROM documents""".stripMargin),
 
     Query("q29_stopword_ratio", (s, d) => {
-      val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
-      val toks = split(trim(col("text")), "\\s+")
-      val nStop = size(filter(toks, tk => tk.isInCollection(stop))).cast("long")
+      val toks = Quality.tokens(col("text"))
+      val nStop = Quality.nStop(toks).cast("long")
       t(s, d, "documents").select(col("doc_id"),
         nStop.as("n_stop"),
         round(nStop.cast("double") / size(toks).cast("double"), 6).as("stop_ratio"))
     }, () =>
-      """SELECT doc_id, n_stop,
-        |  round(CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS stop_ratio
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |      t -> t IN ('the','a','and','of','to','in','is','it','for','on'))) AS BIGINT) AS n_stop,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents)""".stripMargin),
+      s"""SELECT doc_id, CAST(${Quality.nStopSql("text")} AS BIGINT) AS n_stop,
+        |  ${Quality.stopRatioSql("text")} AS stop_ratio
+        |FROM documents""".stripMargin),
 
     // ---- training-data curation: repetition / sampling / gating /
     // per-domain stats (the Gopher/C4-style rule family) ----
@@ -227,29 +222,20 @@ private[graft] object TextQueries {
       // C4/Gopher-style rule-chain filter: token-count band, minimum
       // stopword ratio, minimum distinct-token ratio — the composed
       // keep/drop gate a curation pipeline runs before training
-      val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
-      val toks = split(trim(col("text")), "\\s+")
-      val nToks = size(toks)
+      val toks = Quality.tokens(col("text"))
       val scored = t(s, d, "documents").select(col("doc_id"),
-        nToks.cast("long").as("n_toks"),
-        round(size(filter(toks, tk => tk.isInCollection(stop))).cast("double") /
-          nToks.cast("double"), 6).as("stop_ratio"),
-        round(size(array_distinct(toks)).cast("double") /
-          nToks.cast("double"), 6).as("distinct_ratio"))
-      scored.filter(col("n_toks") >= 20 && col("n_toks") <= 1000 &&
-        col("stop_ratio") >= 0.01 && col("distinct_ratio") >= 0.3)
+        size(toks).cast("long").as("n_toks"),
+        Quality.stopRatio(toks).as("stop_ratio"),
+        Quality.distinctRatio(toks).as("distinct_ratio"))
+      scored.filter(Quality.passes(col("n_toks"), col("stop_ratio"), col("distinct_ratio")))
     }, () =>
-      """SELECT * FROM (
+      s"""SELECT * FROM (
         |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_toks,
-        |    round(CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |      t -> t IN ('the','a','and','of','to','in','is','it','for','on'))) AS DOUBLE)
-        |      / len(string_split_regex(trim(text), '\s+')), 6) AS stop_ratio,
-        |    round(CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS DOUBLE)
-        |      / len(string_split_regex(trim(text), '\s+')), 6) AS distinct_ratio
+        |    CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_toks,
+        |    ${Quality.stopRatioSql("text")} AS stop_ratio,
+        |    ${Quality.distinctRatioSql("text")} AS distinct_ratio
         |  FROM documents)
-        |WHERE n_toks >= 20 AND n_toks <= 1000
-        |  AND stop_ratio >= 0.01 AND distinct_ratio >= 0.3""".stripMargin),
+        |WHERE ${Quality.passesSql("n_toks", "stop_ratio", "distinct_ratio")}""".stripMargin),
 
     // ---- embeddings: exact cosine near-dup pairs (brute force = the
     // correctness anchor; q31's LSH buckets are the 10^12-row scale path) ----
@@ -526,16 +512,9 @@ private[graft] object TextQueries {
     // every candidate the banding admits is independently re-derived
     () =>
       s"""WITH ${minhashBandCtes()},
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM keys a JOIN keys b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |feat AS (SELECT doc_id, list_distinct(list(s)) AS sh, count(DISTINCT s) AS n
-         |         FROM sh GROUP BY doc_id)
-         |SELECT doc_a, doc_b, round(CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |    (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))), 6) AS jaccard
-         |FROM pairs JOIN feat fa ON fa.doc_id = doc_a JOIN feat fb ON fb.doc_id = doc_b
-         |WHERE CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |    (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))) >= 0.5""".stripMargin),
+         |$candFeatCtes
+         |SELECT doc_a, doc_b, round($jaccardSql, 6) AS jaccard
+         |$verifySql""".stripMargin),
 
     Query("q116_adaptive_gate", (s, d) => {
       import org.apache.spark.sql.expressions.Window
@@ -813,16 +792,7 @@ private[graft] object TextQueries {
     // join; pair orientation normalized by least/greatest on the source
     () =>
       s"""WITH ${minhashBandCtes()},
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM keys a JOIN keys b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |feat AS (SELECT doc_id, list_distinct(list(s)) AS sh, count(DISTINCT s) AS n
-         |         FROM sh GROUP BY doc_id),
-         |pairs AS (
-         |  SELECT doc_a, doc_b FROM cand
-         |  JOIN feat fa ON fa.doc_id = doc_a JOIN feat fb ON fb.doc_id = doc_b
-         |  WHERE CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |      (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))) >= 0.5),
+         |$verifiedPairsCtes,
          |ps AS (
          |  SELECT least(sa.source, sb.source) AS src_a,
          |    greatest(sa.source, sb.source) AS src_b,
@@ -876,25 +846,19 @@ private[graft] object TextQueries {
     // identical double ops (n/64 is dyadic-exact; one division each)
     () =>
       s"""WITH ${minhashBandCtes()},
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM keys a JOIN keys b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |$candFeatCtes,
          |agree AS (
          |  SELECT c.doc_a, c.doc_b,
          |    sum(CASE WHEN sa.g = sb.g THEN 1 ELSE 0 END) AS n_agree
          |  FROM cand c
          |  JOIN sig sa ON sa.doc_id = c.doc_a
          |  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.j = sa.j
-         |  GROUP BY c.doc_a, c.doc_b),
-         |feat AS (SELECT doc_id, list_distinct(list(s)) AS sh, count(DISTINCT s) AS n
-         |         FROM sh GROUP BY doc_id)
+         |  GROUP BY c.doc_a, c.doc_b)
          |SELECT g.doc_a, g.doc_b, CAST(g.n_agree AS BIGINT) AS n_agree,
          |  round(CAST(g.n_agree AS DOUBLE) / 64.0E0, 6) AS est_jaccard,
-         |  round(CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |    (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))), 6) AS exact_jaccard,
+         |  round($jaccardSql, 6) AS exact_jaccard,
          |  round(abs(CAST(g.n_agree AS DOUBLE) / 64.0E0 -
-         |    CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |    (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh)))), 6) AS est_err
+         |    $jaccardSql), 6) AS est_err
          |FROM agree g JOIN feat fa ON fa.doc_id = g.doc_a
          |JOIN feat fb ON fb.doc_id = g.doc_b""".stripMargin),
 
@@ -913,17 +877,10 @@ private[graft] object TextQueries {
     () =>
       s"""WITH docs AS (SELECT * FROM (VALUES ${valuesRows(Utf8Corpus)}) d(doc_id, text)),
          |${minhashBandCtes("docs", byteTrueFnv = true)},
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM keys a JOIN keys b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |feat AS (SELECT doc_id, list_distinct(list(s)) AS sh, count(DISTINCT s) AS n
-         |         FROM sh GROUP BY doc_id)
+         |$candFeatCtes
          |SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b,
-         |  round(CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |    (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))), 6) AS jaccard
-         |FROM pairs JOIN feat fa ON fa.doc_id = doc_a JOIN feat fb ON fb.doc_id = doc_b
-         |WHERE CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-         |    (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))) >= 0.5""".stripMargin),
+         |  round($jaccardSql, 6) AS jaccard
+         |$verifySql""".stripMargin),
 
     Query("q78_neardup_components", (s, d) => {
       // cluster-level near-dup retention: connected components of the
@@ -1068,9 +1025,8 @@ private[graft] object TextQueries {
     // independent derivation that certifies the band-state shortcut
     () =>
       s"""WITH ${minhashBandCtes()},
-         |own AS (SELECT bk, min(doc_id) AS owner FROM keys GROUP BY bk)
-         |SELECT k.doc_id,
-         |  (min(CASE WHEN o.owner = k.doc_id THEN 1 ELSE 0 END) = 1) AS kept
+         |$ownCte
+         |SELECT k.doc_id, ($ownsAllSql) AS kept
          |FROM keys k JOIN own o USING (bk)
          |WHERE k.doc_id >= $Q87Boundary
          |GROUP BY k.doc_id""".stripMargin),
@@ -1170,9 +1126,8 @@ private[graft] object TextQueries {
     // kept iff the doc is the min-id claimant of every band it occupies
     () =>
       s"""WITH ${minhashBandCtes()},
-         |own AS (SELECT bk, min(doc_id) AS owner FROM keys GROUP BY bk)
-         |SELECT k.doc_id,
-         |  (min(CASE WHEN o.owner = k.doc_id THEN 1 ELSE 0 END) = 1) AS kept
+         |$ownCte
+         |SELECT k.doc_id, ($ownsAllSql) AS kept
          |FROM keys k JOIN own o USING (bk)
          |GROUP BY k.doc_id""".stripMargin),
 
@@ -1299,10 +1254,7 @@ private[graft] object TextQueries {
       s"""WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
-        |    list_reduce(list_transform(
-        |      string_split(substring(md5(CAST(doc_id AS VARCHAR)), 1, 15), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-        |      (acc, d) -> acc * 16 + d) % $Q123Shards AS shard
+        |    ${Packing.md5KeySql("CAST(doc_id AS VARCHAR)")} % $Q123Shards AS shard
         |  FROM documents),
         |b AS (
         |  SELECT shard, doc_id, n_toks,
@@ -1332,10 +1284,7 @@ private[graft] object TextQueries {
       s"""WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
-        |    list_reduce(list_transform(
-        |      string_split(substring(md5(CAST(doc_id AS VARCHAR)), 1, 15), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-        |      (acc, d) -> acc * 16 + d) % $Q69Shards AS shard
+        |    ${Packing.md5KeySql("CAST(doc_id AS VARCHAR)")} % $Q69Shards AS shard
         |  FROM documents),
         |b AS (
         |  SELECT shard, doc_id, n_toks,
@@ -1382,10 +1331,7 @@ private[graft] object TextQueries {
          |  FROM toks t JOIN vocab v USING (tok) GROUP BY t.doc_id),
          |shards AS (
          |  SELECT doc_id,
-         |    list_reduce(list_transform(
-         |      string_split(substring(md5(CAST(doc_id AS VARCHAR)), 1, 15), ''),
-         |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-         |      (acc, x) -> acc * 16 + x) % $Q69Shards AS shard
+         |    ${Packing.md5KeySql("CAST(doc_id AS VARCHAR)")} % $Q69Shards AS shard
          |  FROM documents),
          |asg AS (
          |  SELECT s.shard, d.doc_id, d.n_toks,
@@ -1410,9 +1356,7 @@ private[graft] object TextQueries {
       // (q53's content-hash quota). Output: the per-source funnel. Every
       // stage keys on doc/text/band hashes — no all-pairs, no driver
       // state; the funnel aggregation is one map-side-partial groupBy.
-      val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
-      val toks = split(trim(col("text")), "\\s+")
-      val nToks = size(toks)
+      val toks = Quality.tokens(col("text"))
       val docs = t(s, d, "documents")
       // each stage feeds BOTH the next stage and its own funnel join, so
       // stages re-evaluate once per consumer. MEASURED at sf0.1 (same
@@ -1424,11 +1368,8 @@ private[graft] object TextQueries {
       // gated/exact/near before the funnel and unpersist after the
       // action (the caller owns the lifetime), or run the funnel as a
       // multi-stage checkpointed pipeline (pipeline.Checkpointed).
-      val gated = docs
-        .filter(nToks >= 20 && nToks <= 1000 &&
-          size(filter(toks, tk => tk.isInCollection(stop))).cast("double") /
-            nToks.cast("double") >= 0.01 &&
-          size(array_distinct(toks)).cast("double") / nToks.cast("double") >= 0.3)
+      val gated = docs.filter(
+        Quality.passes(size(toks), Quality.stopRatio(toks), Quality.distinctRatio(toks)))
       val wText = org.apache.spark.sql.expressions.Window
         .partitionBy(col("text")).orderBy(col("doc_id"))
       val exact = gated.withColumn("rn", row_number().over(wText))
@@ -1440,7 +1381,7 @@ private[graft] object TextQueries {
         .firstWinsKept(graft.pipeline.Dedup.banded(exact, "doc_id"))
         .filter(col("kept")).select(col("doc_id"))
       val near = exact.join(nearIds, Seq("doc_id"))
-      val bucket = conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long") % 1000
+      val bucket = Packing.md5Key(col("text")) % 1000
       val sampled = near.filter(
         bucket < when(col("lang") === "en", lit(250)).otherwise(lit(1000)))
       def ids(df: org.apache.spark.sql.DataFrame, flag: String) =
@@ -1463,35 +1404,24 @@ private[graft] object TextQueries {
     // quota — then the same per-source funnel counts
     () =>
       s"""WITH gated AS (
-         |  SELECT doc_id, text, lang, source FROM (
-         |    SELECT doc_id, text, lang, source,
-         |      len(string_split_regex(trim(text), '\\s+')) AS n_toks,
-         |      CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-         |        t -> t IN ('the','a','and','of','to','in','is','it','for','on'))) AS DOUBLE)
-         |        / len(string_split_regex(trim(text), '\\s+')) AS stop_ratio,
-         |      CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS DOUBLE)
-         |        / len(string_split_regex(trim(text), '\\s+')) AS distinct_ratio
-         |    FROM documents)
-         |  WHERE n_toks >= 20 AND n_toks <= 1000
-         |    AND stop_ratio >= 0.01 AND distinct_ratio >= 0.3),
+         |  SELECT doc_id, text, lang, source FROM documents
+         |  WHERE ${Quality.passesSql(s"len(${Quality.tokensSql("text")})",
+                    Quality.stopRatioSql("text"), Quality.distinctRatioSql("text"))}),
          |exact AS (
          |  SELECT doc_id, text, lang, source FROM (
          |    SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
          |    FROM gated) WHERE rn = 1),
          |${minhashBandCtes("exact")},
-         |own AS (SELECT bk, min(doc_id) AS owner FROM keys GROUP BY bk),
+         |$ownCte,
          |near AS (
          |  SELECT e.doc_id, e.text, e.lang, e.source FROM exact e JOIN (
          |    SELECT k.doc_id FROM keys k JOIN own o USING (bk)
          |    GROUP BY k.doc_id
-         |    HAVING min(CASE WHEN o.owner = k.doc_id THEN 1 ELSE 0 END) = 1) kk
+         |    HAVING $ownsAllSql) kk
          |  ON kk.doc_id = e.doc_id),
          |sampled AS (
          |  SELECT doc_id FROM (
-         |    SELECT doc_id, lang,
-         |      list_reduce(list_transform(string_split(substring(md5(text), 1, 15), ''),
-         |        c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-         |        (acc, d) -> acc * 16 + d) % 1000 AS bucket
+         |    SELECT doc_id, lang, ${Packing.md5KeySql("text")} % 1000 AS bucket
          |    FROM near)
          |  WHERE bucket < CASE WHEN lang = 'en' THEN 250 ELSE 1000 END)
          |SELECT d.source, count(*) AS n_docs,
@@ -1748,7 +1678,7 @@ private[graft] object TextQueries {
       // q26's verify stage: hamming_dist over 60-bit keys derived from
       // md5(text) identically on both sides (15 hex chars -> int), so the
       // custom popcount-xor expression itself is oracle-checked
-      val h = conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long")
+      val h = Packing.md5Key(col("text"))
       val docs = t(s, d, "documents").select(col("doc_id"), h.as("h"))
       bruteAnchorJoin(docs.filter(col("doc_id") < 100).select(col("doc_id").as("doc_a"), col("h").as("ha")),
         docs.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_a", "doc_b")
@@ -1756,11 +1686,8 @@ private[graft] object TextQueries {
         .filter(col("hamming") <= 22)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
     }, () =>
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    list_reduce(list_transform(string_split(substring(md5(text), 1, 15), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-        |      (acc, d) -> acc * 16 + d) AS h
+      s"""WITH h AS (
+        |  SELECT doc_id, ${Packing.md5KeySql("text")} AS h
         |  FROM documents)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
@@ -1898,16 +1825,7 @@ private[graft] object TextQueries {
     * after a `WITH RECURSIVE`. */
   private def neardupClosureCtes: String =
     s"""${minhashBandCtes()},
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM keys a JOIN keys b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-       |feat AS (SELECT doc_id, list_distinct(list(s)) AS sh, count(DISTINCT s) AS n
-       |         FROM sh GROUP BY doc_id),
-       |pairs AS (
-       |  SELECT doc_a, doc_b FROM cand
-       |  JOIN feat fa ON fa.doc_id = doc_a JOIN feat fb ON fb.doc_id = doc_b
-       |  WHERE CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE) /
-       |      (fa.n + fb.n - len(list_intersect(fa.sh, fb.sh))) >= 0.5),
+       |$verifiedPairsCtes,
        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
        |          UNION SELECT doc_b, doc_a FROM pairs),
        |r(a, b) AS (

@@ -91,7 +91,7 @@ object PageStream {
                       watermark: String = "2 hours",
                       validFor: String = "1 hour"): DataFrame = {
     val p = pages
-      .select(regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("p_host"),
+      .select(graft.pipeline.Urls.host(col("url")).as("p_host"),
         col("url"), col("warc_ts"))
       .withWatermark("warc_ts", watermark)
     val b = budgets
@@ -116,15 +116,6 @@ object PageStream {
       .groupBy(window(col("warc_ts"), width), col("lang"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("lang"), col("n"))
-
-  /**
-   * Materialize a (small) batch-built dimension — the cover index, the
-   * boundary dim — into a local relation so it can join a streaming frame.
-   * Production-shaped: the cover is a built-once artifact broadcast to the
-   * join, not a live sub-query re-planned per micro-batch; collapsing its
-   * build lineage is exactly what "publish the index" means.
-   */
-  def localizeDim(df: DataFrame): DataFrame = graft.sources.Storage.localize(df)
 
   /** One progress event per completed micro-batch — the analog of the
     * reference's `"Generated image: <path>"` lines. */

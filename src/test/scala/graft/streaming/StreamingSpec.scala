@@ -18,9 +18,9 @@ class StreamingSpec extends AnyFunSuite with graft.TempDirs {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val bounds = PageStream.localizeDim(
+  private lazy val bounds = graft.sources.Storage.localize(
     CourseEngine.boundaries(Courses.itemsDf(spark, SparkEntry.NCourses)))
-  private lazy val cover = PageStream.localizeDim(SpatialJoin.coverDfFlat(bounds))
+  private lazy val cover = graft.sources.Storage.localize(SpatialJoin.coverDfFlat(bounds))
   private lazy val allPages = Pages.pages(spark, sfDir, SparkEntry.Amp).cache()
 
   test("streaming assign: stop, add input, resume from checkpoint — exactly-once") {
