@@ -51,9 +51,8 @@ object Pages {
     val pid = col("doc_id") * amplify + col("rep")
     val m1 = pid * Mult1
     val m2 = pid * Mult2 + 9973L
-    // compact expressions (array-literal lookup, not a CASE chain): these
-    // get duplicated by filter pushdown into join-key null checks, so they
-    // must stay small enough for whole-stage codegen
+    // compact expressions (array-literal lookup, not a CASE chain), small
+    // enough to stay inside whole-stage codegen
     val cityIdx = when(m1 % 16 < 8, lit(0)).otherwise((m1 % 16).cast("int") - 7)
     val lonBase = element_at(typedLit(cityLon), cityIdx + 1)
     val latBase = element_at(typedLit(cityLat), cityIdx + 1)

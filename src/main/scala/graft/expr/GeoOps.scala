@@ -228,6 +228,95 @@ object GeoOps {
     inside
   }
 
+  /** Equal-height y-slab directory of a flattened shell ([[flattenShell]]),
+    * built once per hole for [[stContainsSlab]]. Layout, all doubles:
+    * `[K, ymin, ymax, K / (ymax - ymin), off_0 .. off_K, edges]`, where
+    * slab s holds the edges at `[off_s, off_{s+1})` as `(xj, yj, xi, yi)`
+    * quadruples, in [[stContainsFlat]]'s order and orientation. An edge is
+    * listed in every slab its closed y-span meets, the slab of a y being
+    * `min(K - 1, floor((y - ymin) * scale))`: that map is monotone in y, so
+    * a point's slab holds every edge whose y-span contains the point's y,
+    * the only edges that can touch the point or cross its ray. K is the
+    * vertex count (1 for a flat ring or a non-finite extent, which then
+    * spans all of y). A multi-piece flat is returned as it is, and a ring
+    * of under 3 vertices as an empty array: [[stContainsSlab]] gives both
+    * the answer [[stContainsFlat]] gives. */
+  def slabShell(flat: ArrayData): ArrayData = {
+    val n = flat.numElements() / 2
+    if (n > 0 && java.lang.Double.isNaN(flat.getDouble(0))) return flat
+    if (n < 3) return new GenericArrayData(Array.emptyDoubleArray)
+    var y0 = Double.PositiveInfinity; var y1 = Double.NegativeInfinity
+    var i = 0
+    while (i < n) {
+      val y = flat.getDouble(2 * i + 1)
+      y0 = Math.min(y0, y); y1 = Math.max(y1, y)
+      i += 1
+    }
+    val span = y1 - y0
+    val k = if (span > 0.0 && span < Double.PositiveInfinity) n else 1
+    if (!(span < Double.PositiveInfinity)) { y0 = Double.NegativeInfinity; y1 = Double.PositiveInfinity }
+    val scale = if (k == 1) 0.0 else k / span
+    def slabOf(y: Double): Int = if (k == 1) 0 else Math.min(k - 1, ((y - y0) * scale).toInt)
+    // edge e runs from vertex (e + n - 1) % n to vertex e, as in stContainsFlat
+    def lo(e: Int) = slabOf(Math.min(flat.getDouble(2 * ((e + n - 1) % n) + 1), flat.getDouble(2 * e + 1)))
+    def hi(e: Int) = slabOf(Math.max(flat.getDouble(2 * ((e + n - 1) % n) + 1), flat.getDouble(2 * e + 1)))
+    val fill = new Array[Int](k + 1)
+    var e = 0
+    while (e < n) { var s = lo(e); val h = hi(e); while (s <= h) { fill(s + 1) += 1; s += 1 }; e += 1 }
+    var s = 0
+    while (s < k) { fill(s + 1) += fill(s); s += 1 }
+    val base = 5 + k
+    val out = new Array[Double](base + 4 * fill(k))
+    out(0) = k; out(1) = y0; out(2) = y1; out(3) = scale
+    s = 0
+    while (s <= k) { out(4 + s) = base + 4 * fill(s); s += 1 }
+    e = 0
+    while (e < n) {
+      val j = (e + n - 1) % n
+      var t = lo(e); val h = hi(e)
+      while (t <= h) {
+        val o = base + 4 * fill(t)
+        out(o) = flat.getDouble(2 * j); out(o + 1) = flat.getDouble(2 * j + 1)
+        out(o + 2) = flat.getDouble(2 * e); out(o + 3) = flat.getDouble(2 * e + 1)
+        fill(t) += 1
+        t += 1
+      }
+      e += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** [[stContainsFlat]] over a [[slabShell]] directory: the same per-edge
+    * on-edge test and crossing toggle, run over the edges of the point's
+    * slab only, and false outside the shell's y-extent. Same answer as
+    * [[stContainsFlat]] for every point; a multi-piece flat takes its
+    * piece walk. */
+  def stContainsSlab(dir: ArrayData, px: Double, py: Double): Boolean = {
+    if (dir.numElements() == 0) return false
+    val k = dir.getDouble(0)
+    if (java.lang.Double.isNaN(k)) return stContainsFlat(dir, px, py)
+    val y0 = dir.getDouble(1)
+    if (!(py >= y0 && py <= dir.getDouble(2))) return false
+    val s = if (k == 1.0) 0 else Math.min(k.toInt - 1, ((py - y0) * dir.getDouble(3)).toInt)
+    var o = dir.getDouble(4 + s).toInt
+    val end = dir.getDouble(5 + s).toInt
+    var inside = false
+    while (o < end) {
+      val xj = dir.getDouble(o); val yj = dir.getDouble(o + 1)
+      val xi = dir.getDouble(o + 2); val yi = dir.getDouble(o + 3)
+      val cross = (xi - xj) * (py - yj) - (yi - yj) * (px - xj)
+      if (cross == 0.0 &&
+          px >= Math.min(xj, xi) && px <= Math.max(xj, xi) &&
+          py >= Math.min(yj, yi) && py <= Math.max(yj, yi)) return false // on edge
+      if ((yi > py) != (yj > py)) {
+        val xCross = (xj - xi) * (py - yi) / (yj - yi) + xi
+        if (px < xCross) inside = !inside
+      }
+      o += 4
+    }
+    inside
+  }
+
   /** Multi-ring = disjoint pieces (see [[graft.geom.Geom.containsStrict]]):
     * strictly inside any piece and on no piece's boundary. */
   def stContains(poly: ArrayData, x: Double, y: Double): Boolean = {

@@ -123,6 +123,9 @@ object Kernel {
     Kernel("flatten_shell", Geo, "flattenShell", Seq(Poly), Flat),
     Kernel("st_contains_flat", Geo, "stContainsFlat", Seq(Flat, DoubleType, DoubleType),
       BooleanType),
+    Kernel("slab_shell", Geo, "slabShell", Seq(Flat), Flat),
+    Kernel("st_contains_slab", Geo, "stContainsSlab", Seq(Flat, DoubleType, DoubleType),
+      BooleanType),
     Kernel("st_distance_to_shell_m", Geo, "stDistanceToShellM",
       Seq(Flat, DoubleType, DoubleType), DoubleType),
     Kernel("st_isvalid", Geo, "stIsValid", Seq(Poly), BooleanType),

@@ -34,9 +34,16 @@ object functions {
   /** Shell ring flattened to ARRAY<DOUBLE> (zero-alloc probe form). */
   def flatten_shell(poly: Column): Column = call("flatten_shell", poly)
   /** Strict PIP against a flattened shell ring (exterior-only, like the
-    * reference's rendering path) — the join refine hot path. */
+    * reference's rendering path). */
   def st_contains_flat(flat: Column, x: Column, y: Column): Column =
     call("st_contains_flat", flat, x, y)
+  /** Equal-height y-slab directory of a flattened shell, built once per
+    * hole: the probe form of [[st_contains_slab]]. */
+  def slab_shell(flat: Column): Column = call("slab_shell", flat)
+  /** [[st_contains_flat]]'s answer from the edges of the point's y-slab
+    * only — the join refine hot path. */
+  def st_contains_slab(slabs: Column, x: Column, y: Column): Column =
+    call("st_contains_slab", slabs, x, y)
   /** Ring/polygon validity — reference utils.py:57-62 (`is_valid` gates). */
   def st_isvalid(poly: Column): Column = call("st_isvalid", poly)
   /** Polygon intersection — reference utils.py:55-66 (None on invalid/empty,

@@ -114,8 +114,12 @@ object Checkpointed {
 
     // one literal for any todo set: identical generated code on every resume
     val inTodo = array_contains(typedLit(todo.toArray), col("bucket"))
+    // the bucket is a one-element explode's output: Catalyst keeps a filter
+    // on a generator's output above the Generate, so each row is hashed
+    // once (under a plain projection the todo filter is pushed below it,
+    // with the whole bucket expression substituted into the Filter)
     val bucketed = input
-      .withColumn("bucket", bucketExpr.cast("int"))
+      .withColumn("bucket", explode(array(bucketExpr.cast("int"))))
       .filter(inTodo)
 
     val t0 = System.nanoTime()

@@ -29,16 +29,21 @@ import graft.index.Cells
  *
  * The rule: a shape fits when its cell count × [[BytesPerCoverEntry]] is
  * at most `budget`; the first shape that fits wins. Every shape ends in
- * the same refine (`full` cells skip it, the rest run st_contains_flat)
- * and returns the page columns plus the hole key. [[assignPagesFlat]]
- * is the flat shape for callers that hold one localized flat cover
- * ([[coverDfFlat]]) across many calls.
+ * the same refine (`full` cells skip it, the rest run st_contains_slab
+ * over the hole's y-slab directory) and returns the page columns plus
+ * the hole key. [[assignPagesFlat]] is the flat shape for callers that
+ * hold one localized flat cover ([[coverDfFlat]]) across many calls.
  *
  * Plan shape of the broadcast shapes (what .explain must show):
- *   pages scan (pruned cols) -> cell_id (codegen'd)
+ *   pages scan (pruned cols)
+ *     -> Project coalesce(cell_id(lon, lat, 17), -1) AS probe_cell
  *     -> BroadcastHashJoin with the cover (equi on cell)
- *     -> Filter full OR st_contains_flat(bflat, lon, lat)   [codegen'd]
- * No shuffle touches the pages side, so skew is irrelevant to them.
+ *     -> BroadcastHashJoin with the refine dim (equi on hole_id,
+ *        condition full OR st_contains_slab(bslab, lon, lat))
+ * all in one codegen'd stage. The probe key is never null, so no Filter
+ * below the projection re-derives the geocode or the cell (multires and
+ * smj likewise derive the page's cell, and smj its url salt, once). No
+ * shuffle touches the pages side, so skew is irrelevant to them.
  */
 object SpatialJoin {
 
@@ -119,7 +124,7 @@ object SpatialJoin {
   def assignPagesFlat(pages: DataFrame, flatCover: DataFrame, bounds: DataFrame): DataFrame =
     refine(pages,
       pages
-        .withColumn("probe_cell", cell_id(col("lon"), col("lat"), lit(MaxLevel)))
+        .withColumn("probe_cell", probeCell)
         .join(broadcast(flatCover), col("probe_cell") === flatCover("cell")),
       bounds)
 
@@ -144,20 +149,31 @@ object SpatialJoin {
     cover.sparkSession.createDataFrame(java.util.Arrays.asList(flat: _*), cover.schema)
   }
 
-  /** Probe cells for a page: its cell at MaxLevel plus ancestors down to
-    * MinLevel (MaxLevel-MinLevel+1 probes, pure bit-shift math). */
-  private def probeCells: Column = {
-    val fine = cell_id(col("lon"), col("lat"), lit(MaxLevel))
-    array((MinLevel to MaxLevel).map(l => cell_parent(fine, lit(l))): _*)
-  }
+  /** The key of a page without a geocode. Every cell id is at least 1
+    * (the level's sentinel bit) and the ancestors of -1 are -1, so it
+    * joins no cover cell. */
+  private val NoCell = -1L
+
+  /** A page's [[MaxLevel]] cell, never null: a null-intolerant key would
+    * make Catalyst infer `isnotnull(key)` and push it below the projection
+    * that derives the key, computing the page's geocode and cell twice. */
+  private def probeCell: Column =
+    coalesce(cell_id(col("lon"), col("lat"), lit(MaxLevel)), lit(NoCell))
+
+  /** Pages with their probe cells exploded: the page's [[probeCell]],
+    * derived once in a projection below the explode, and its ancestors
+    * down to [[MinLevel]] (MaxLevel-MinLevel+1 probes, pure bit-shift
+    * math). */
+  private def withProbeCells(pages: DataFrame): DataFrame =
+    pages.withColumn("probe_fine", probeCell)
+      .withColumn("probe_cell",
+        explode(array((MinLevel to MaxLevel).map(l => cell_parent(col("probe_fine"), lit(l))): _*)))
 
   /** Multires shape: probe-side ancestor explode against the broadcast
     * multi-res cover. */
   private def multiResJoin(pages: DataFrame, cover: DataFrame, bounds: DataFrame): DataFrame =
     refine(pages,
-      pages
-        .withColumn("probe_cell", explode(probeCells))
-        .join(broadcast(cover), col("probe_cell") === cover("cell")),
+      withProbeCells(pages).join(broadcast(cover), col("probe_cell") === cover("cell")),
       bounds)
 
   /** Smj shape, for covers too large to broadcast (the 10^12-row /
@@ -166,9 +182,10 @@ object SpatialJoin {
     * per salt. */
   private def sortMergeJoin(pages: DataFrame, cover: DataFrame, bounds: DataFrame): DataFrame = {
     val nSalts = autoSalts(pages)
-    val saltedPages = pages
-      .withColumn("probe_cell", explode(probeCells))
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(nSalts)))
+    // the salt is derived once per page, before the explode, and is never
+    // null (pmod is nullable), for the reason [[probeCell]] is not
+    val saltedPages = withProbeCells(
+      pages.withColumn("salt", coalesce(pmod(xxhash64(col("url")), lit(nSalts)), lit(0L))))
     val saltedCover = cover
       .withColumn("salt", explode(array((0 until nSalts).map(lit(_)): _*)))
     refine(pages,
@@ -185,16 +202,18 @@ object SpatialJoin {
   private def refine(pages: DataFrame, candidates: DataFrame, bounds: DataFrame): DataFrame =
     candidates
       .join(broadcast(refineDim(bounds)), Seq("hole_id"))
-      .filter(col("full") || st_contains_flat(col("bflat"), col("lon"), col("lat")))
+      .filter(col("full") || st_contains_slab(col("bslab"), col("lon"), col("lat")))
       .select((pages.columns.toIndexedSeq ++ holeKeyCols).map(col): _*)
 
-  /** Geometry + key dim in the zero-allocation probe form (flattened
-    * shells; exterior-only, matching the reference's `.exterior`
-    * rendering), long-keyed by hole_id. */
+  /** Geometry + key dim in the zero-allocation probe form, long-keyed by
+    * hole_id: each flattened shell (exterior-only, matching the
+    * reference's `.exterior` rendering) as its y-slab directory, built
+    * once per hole, so the refine walks only the edges in the page's
+    * slab. */
   private def refineDim(bounds: DataFrame): DataFrame =
     bounds.select(holeId.as("hole_id"),
       col("clubId"), col("courseId"), col("holeNumber"),
-      flatten_shell(col("boundary")).as("bflat"))
+      slab_shell(flatten_shell(col("boundary"))).as("bslab"))
 
   /**
    * Salt factor from a cheap cell-histogram pre-pass (SURVEY §7): a

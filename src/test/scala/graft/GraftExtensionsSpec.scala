@@ -45,9 +45,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("the function surface is the 50 kernels of the table, each named once") {
+  test("the function surface is the 52 kernels of the table, each named once") {
     val names = graft.expr.Kernel.all.map(_.name)
-    assert(names.size == 50 && names.distinct.size == 50)
+    assert(names.size == 52 && names.distinct.size == 52)
     assert(names.sorted == Seq(
       "bm25_fold", "cell_center", "cell_id", "cell_level", "cell_min_distance_m",
       "cell_parent", "cell_x", "cell_y", "char_shingles", "closed_ring", "cosine_sim",
@@ -55,8 +55,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
       "gaussian_smooth", "gear_cuts", "hamming_dist", "hash_text", "hashed_char_shingles",
       "hashed_word_shingles", "hyperplane_lsh", "keyed_dot", "leading_zeros", "lsh_bands",
       "make_polygon", "minhash", "mix64", "nfc_normalize", "png_encode", "quadkey",
-      "ring_cells", "simhash", "sorted_jaccard", "st_area", "st_contains", "st_contains_flat",
-      "st_covers", "st_distance_m", "st_distance_to_shell_m", "st_envelope", "st_intersection",
+      "ring_cells", "simhash", "slab_shell", "sorted_jaccard", "st_area", "st_contains",
+      "st_contains_flat", "st_contains_slab", "st_covers", "st_distance_m", "st_distance_to_shell_m", "st_envelope", "st_intersection",
       "st_isvalid", "tile_x", "tile_y", "trigram_fluency", "trigram_lang_predict", "viewport",
       "word_shingles"))
   }

@@ -14,7 +14,11 @@ object KernelSamples {
     array((square :+ square.head).map { case (x, y) => pt(x + dx, y + dx) }: _*)
   private val ring = array(square.map { case (x, y) => pt(x, y) }: _*)
   private val poly = array(shell(0.0))
-  private val flat = array(Seq(0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 4.0, 0.0, 0.0).map(lit): _*)
+  private val flatVals = Seq(0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 4.0, 0.0, 0.0)
+  private val flat = array(flatVals.map(lit): _*)
+  private val slabs = array(GeoOps.slabShell(
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(flatVals.toArray))
+    .toDoubleArray().toSeq.map(lit): _*)
   private val cell = lit(graft.index.Cells.cellId(116.4, 39.9, 15))
   private val text = lit("the quick brown fox jumps over the lazy dog")
   private val toks = array(struct(lit("a").as("tok"), lit(1L).as("c")),
@@ -29,6 +33,8 @@ object KernelSamples {
     "st_covers" -> Seq(poly, lit(0.0), lit(2.0)),
     "flatten_shell" -> Seq(poly),
     "st_contains_flat" -> Seq(flat, lit(2.0), lit(2.0)),
+    "slab_shell" -> Seq(flat),
+    "st_contains_slab" -> Seq(slabs, lit(2.0), lit(2.0)),
     "st_distance_to_shell_m" -> Seq(flat, lit(5.0), lit(2.0)),
     "st_isvalid" -> Seq(poly),
     "st_intersection" -> Seq(poly, array(shell(2.0))),

@@ -126,6 +126,25 @@ class CheckpointSpec extends AnyFunSuite with graft.TempDirs {
     }
   }
 
+  test("the bucketed input hashes each url once; the stage re-derives nothing in a Filter") {
+    // a plain `bucket` projection let Catalyst push the todo filter below
+    // it, so each url was built and hashed in the Filter and again above it
+    val out = tempDir("graft-ckpt6").toString
+    var input: org.apache.spark.sql.DataFrame = null
+    var staged: org.apache.spark.sql.DataFrame = null
+    Checkpointed.runStage(Pages.pages(spark, sfDir, SparkEntry.Amp),
+        pmod(xxhash64($"url"), lit(4)), out, nBuckets = 4) { b =>
+      input = b
+      staged = SpatialJoin.assignPagesFlat(b, cover, bounds)
+      staged
+    }
+    val plan = input.queryExecution.optimizedPlan.toString
+    assert("xxhash64\\(".r.findAllMatchIn(plan).size === 1, plan)
+    staged.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.toString
+    }.foreach(c => assert(!c.contains("xxhash64(") && !c.contains("cell_id("), c))
+  }
+
   test("a resume over an unseen todo set compiles no new code") {
     val out = tempDir("graft-ckpt5").toString
     val nBuckets = 8

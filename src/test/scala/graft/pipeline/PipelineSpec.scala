@@ -133,6 +133,60 @@ class PipelineSpec extends AnyFunSuite {
     assert(pairs(nCells * per - 1) == flat, "smj path diverges from flat")
   }
 
+  /** The conditions of an optimized plan's Filter nodes, as text. */
+  private def filters(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.toString
+    }
+
+  /** The three join shapes over `p`: flat (the entry's default budget),
+    * multires (the fixture plus the big square, one byte below its flat
+    * cover) and smj (budget 0). */
+  private def allShapes(p: org.apache.spark.sql.DataFrame) = {
+    val b = bounds.unionByName(bigSquare)
+    val (_, flatCells) = coverSizes(b)
+    val joins = Seq(
+      "flat" -> SpatialJoin.assignPages(p, bounds),
+      "multires" -> SpatialJoin.assignPages(p, b,
+        budget = flatCells * SpatialJoin.BytesPerCoverEntry - 1),
+      "smj" -> SpatialJoin.assignPages(p, bounds, budget = 0L))
+    joins.foreach { case (want, j) => assert(shape(j) == want) }
+    joins
+  }
+
+  test("every join shape derives a page's probe columns once: no Filter computes cell_id or a hash") {
+    // a nullable join key makes Catalyst infer isnotnull(key) and push it
+    // below the projection deriving the key, so the geocode, the cell and
+    // the url salt were computed once in a Filter and again above it
+    allShapes(Pages.pages(spark, sfDir, SparkEntry.Amp)).foreach { case (name, j) =>
+      filters(j).foreach { c =>
+        assert(!c.contains("cell_id(") && !c.contains("xxhash64("), s"$name re-derives in $c")
+      }
+    }
+  }
+
+  test("pages without a geocode join no hole in any shape, and lie outside every course") {
+    val p = Pages.pages(spark, sfDir, SparkEntry.Amp)
+    val hits = SpatialJoin.assignPages(p, bounds).select($"page_id").as[Long].collect().toSet
+    // null the lon of one third of the pages and the lat of another third
+    val nulled = p
+      .withColumn("lon", when($"page_id" % 3 === 0, lit(null).cast("double")).otherwise($"lon"))
+      .withColumn("lat", when($"page_id" % 3 === 1, lit(null).cast("double")).otherwise($"lat"))
+    assert(hits.exists(_ % 3 == 0) && hits.exists(_ % 3 == 1) && hits.exists(_ % 3 == 2),
+      "no nulled page would have joined a hole — vacuous")
+    val kept = hits.filter(_ % 3 == 2)
+    allShapes(nulled).foreach { case (name, j) =>
+      assert(j.filter($"clubId" =!= "bigclub").select($"page_id").as[Long].collect().toSet == kept,
+        name)
+    }
+    val inside = SpatialJoin.pagesInAnyCourse(nulled, bounds).select($"page_id").as[Long]
+      .collect().toSet
+    assert(inside == kept)
+    val outside = SpatialJoin.pagesOutsideAllCourses(nulled, bounds)
+      .filter($"lon".isNull || $"lat".isNull).count()
+    assert(outside == nulled.filter($"lon".isNull || $"lat".isNull).count() && outside > 0)
+  }
+
   test("an empty polygon set: no assignments, no neighbours, every page outside") {
     val p = Pages.pages(spark, sfDir, SparkEntry.Amp)
     val none = bounds.limit(0)
@@ -816,7 +870,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange hashpartitioning"),
       s"probe-side shuffle appeared:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$plan")
-    assert(plan.contains("st_contains_flat"), "exact PIP refine missing from the plan")
+    assert(plan.contains("st_contains_slab"), "exact PIP refine missing from the plan")
   }
 
   test("flagship refine calls the PIP kernel directly from generated code") {
@@ -828,7 +882,7 @@ class PipelineSpec extends AnyFunSuite {
         SpatialJoin.coverDfFlat(bounds), bounds)
         .queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
     }
-    assert(src.contains("graft.expr.GeoOps.stContainsFlat("), "no direct refine call")
+    assert(src.contains("graft.expr.GeoOps.stContainsSlab("), "no direct refine call")
     assert("""references\[\d+\][^;]*\.eval\(""".r.findFirstIn(src).isEmpty,
       "an expression fell back to eval in the flagship stages")
   }
