@@ -1,7 +1,10 @@
 package graft.data
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.SparkSession
 import graft.sources.Warc
+import graft.sources.Storage.deleteRecursively
 
 /**
  * Deterministic on-disk fixtures for the driver-visible SOURCE queries
@@ -75,7 +78,7 @@ object Fixtures {
     * (the pure-JVM rows in Seq order), once per JVM. */
   private def oracleInputs(spark: SparkSession): Unit = {
     once(oracleInputsRoot) {
-      deleteRecursively(new java.io.File(oracleInputsRoot))
+      deleteRecursively(Paths.get(oracleInputsRoot))
       graft.queries.GeoQueries.oracleInputFrames(spark).foreach { case (name, df) =>
         df.coalesce(1).write.parquet(oracleInputDir(name))
       }
@@ -175,7 +178,7 @@ object Fixtures {
   def htmlWarcDir(): String = {
     val dir = java.nio.file.Paths.get(Root, "crawl")
     once(dir.toString) {
-      deleteRecursively(dir.toFile)
+      deleteRecursively(dir)
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.write(dir.resolve("crawl-00000.warc"),
         Warc.writeWarc(htmlCrawlRecords()))
@@ -192,7 +195,7 @@ object Fixtures {
       // would be parsed while the oracle reads only seg-00000.warc at
       // fixed offsets (the per-process Root makes this a fresh dir in
       // practice; the delete is belt-and-braces)
-      deleteRecursively(dir.toFile)
+      deleteRecursively(dir)
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.write(dir.resolve("seg-00000.warc"),
         Warc.writeWarc(warcRecords()))
@@ -232,7 +235,7 @@ object Fixtures {
     import org.apache.spark.sql.functions.{col, expr}
     val dir = s"$Root/stream_docs_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
     once(dir) {
-      deleteRecursively(new java.io.File(dir))
+      deleteRecursively(Paths.get(dir))
       import spark.implicits._
       val base = java.sql.Timestamp.valueOf("2025-03-01 00:00:00").getTime
       // ONE part file, deliberately: q74's correctness needs the far-future
@@ -276,7 +279,7 @@ object Fixtures {
     val pagesDir = s"$Root/budget_pages_$tag"
     val grantsDir = s"$Root/budget_grants_$tag"
     once(pagesDir) {
-      deleteRecursively(new java.io.File(pagesDir))
+      deleteRecursively(Paths.get(pagesDir))
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id").cast("long").as("doc_id"))
         .select(
@@ -286,7 +289,7 @@ object Fixtures {
         .coalesce(1).write.parquet(pagesDir)
     }
     once(grantsDir) {
-      deleteRecursively(new java.io.File(grantsDir))
+      deleteRecursively(Paths.get(grantsDir))
       spark.range(0, 200)
         .select(
           concat(lit("host"), (col("id") / 10).cast("long").cast("string"),
@@ -343,7 +346,7 @@ object Fixtures {
     // references this path, so it can vary freely
     val dir = s"$Root/snap_nation_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
     once(s"$dir#$sfDir") {
-      deleteRecursively(new java.io.File(dir))
+      deleteRecursively(Paths.get(dir))
       val nation = spark.read.parquet(s"$sfDir/nation.parquet")
       val v1 = graft.sources.Snapshots.commit(nation, dir)
       val v2 = graft.sources.Snapshots.commit(
@@ -363,7 +366,7 @@ object Fixtures {
     import org.apache.spark.sql.functions._
     val dir = s"$Root/merge_nation_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
     once(s"$dir#$sfDir") {
-      deleteRecursively(new java.io.File(dir))
+      deleteRecursively(Paths.get(dir))
       val nation = spark.read.parquet(s"$sfDir/nation.parquet")
       val v1 = graft.sources.Snapshots.commit(nation, dir)
       // the new row's key types follow the table's own schema so the
@@ -381,11 +384,6 @@ object Fixtures {
       require(v1 == 1L && v2 == 2L, s"fresh merge table must commit v1,v2 — got $v1,$v2")
     }
     dir
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
   }
 
   /** Scratch checkpoint root for the streaming CORRECTNESS rows (q74/
@@ -435,15 +433,18 @@ object Fixtures {
   private[data] lazy val scratchAtExit: java.util.Set[String] = {
     val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      dirs.forEach(d => deleteRecursively(new java.io.File(d))), "graft-scratch-cleanup"))
+      dirs.forEach(d => dropCheckpointDir(d)), "graft-scratch-cleanup"))
     dirs
   }
 
   /** Best-effort cleanup of a [[fastCheckpointDir]] after the stream
     * drains (an explicit checkpointLocation is never auto-deleted the
-    * way Spark's implicit temp checkpoint is). */
+    * way Spark's implicit temp checkpoint is); what cannot be deleted
+    * stays. */
   def dropCheckpointDir(dir: String): Unit = {
-    deleteRecursively(new java.io.File(dir))
+    try deleteRecursively(Paths.get(dir)) catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException =>
+    }
     scratchAtExit.remove(dir)
   }
 }

@@ -36,8 +36,7 @@ object Bpe {
 
   /** The q70-parity whitespace tokenization -> (word, n) frequency table. */
   def wordFreq(docs: DataFrame): DataFrame =
-    docs.select(explode(filter(split(trim(col("text")), "\\s+"), tk => tk =!= ""))
-        .as("word"))
+    docs.select(explode(Quality.words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
 
   /**

@@ -133,15 +133,8 @@ object Checkpointed {
     // only rewrites partitions PRESENT in this write, so a crashed
     // attempt's partial files for a bucket whose retry legitimately
     // produces ZERO rows would otherwise survive as committed-looking data
-    todo.foreach { b =>
-      val part = Paths.get(outDir, "data", s"bucket=$b")
-      if (Files.isDirectory(part)) {
-        val s = Files.walk(part)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.deleteIfExists(_))
-        finally s.close()
-      }
-    }
+    todo.foreach(b =>
+      graft.sources.Storage.deleteRecursively(Paths.get(outDir, "data", s"bucket=$b")))
 
     // dynamic partition overwrite, scoped to THIS write via option (never
     // mutates the shared session conf): only the buckets present in the

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import DuckDb.dlit
+
 /**
  * N-gram-heuristic language identification (q24's operator, factored out
  * so the crawl-to-corpus pipeline (q73) and the standalone confusion
@@ -32,7 +34,7 @@ object LangId {
   /** Predicted language of `text` ("und" when no profile scores > 0).
     * Tie rule: first profile (in [[Profiles]] order) reaching the max. */
   def predict(text: Column): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
+    val toks = Quality.tokens(lower(text))
     // lambda-let: bind the token array to a lambda VARIABLE via a
     // 1-element transform, so the tokenization subtree is evaluated once
     // per row even though every profile score references it
@@ -57,11 +59,13 @@ object LangId {
     * strictly-greater scan). Returns (scoreSelectList, predCaseExpr) to
     * splice into a CTE: scores s1..sN from `textExpr`'s tokens, then the
     * CASE over them. */
-  def scoreSql(textExpr: String): String =
+  def scoreSql(textExpr: String): String = {
+    val toks = Quality.tokensSql(s"lower($textExpr)")
     Profiles.zipWithIndex.map { case ((_, ws), i) =>
       val lst = ws.map(w => s"'$w'").mkString("[", ",", "]")
-      s"len(list_filter($lst, w -> list_contains(string_split_regex(trim(lower($textExpr)), '\\s+'), w))) AS s${i + 1}"
+      s"len(list_filter($lst, w -> list_contains($toks, w))) AS s${i + 1}"
     }.mkString(",\n    ")
+  }
 
   def predCaseSql: String = {
     val n = langs.size
@@ -106,11 +110,6 @@ object TrigramLangId {
   /** Best-language mean trigram log-prob — the q79 fluency/quality score
     * (same kernel fold + one division; bit-exact cross-engine). */
   def fluency(text: Column): Column = graft.functions.trigram_fluency(text)
-
-  private def dlit(d: Double): String = {
-    val s = d.toString
-    if (s.contains("E") || s.contains("e")) s else s + "E0"
-  }
 
   private def mapSql(m: Map[String, Double]): String = {
     val entries = m.toSeq.sortBy(_._1) // deterministic SQL text

@@ -50,7 +50,7 @@ object Packing {
     val shards =
       if (nShards > 0) nShards
       else docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val nToks = size(split(trim(col("text")), "\\s+")).cast("long")
+    val nToks = size(Quality.tokens(col("text"))).cast("long")
     val shard = shardOf(col("doc_id"), shards)
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -24,7 +24,12 @@ object Quality {
   val MinStopRatio = 0.01
   val MinDistinctRatio = 0.3
 
+  /** Whitespace tokens of the space-trimmed text; "" and edge non-space
+    * whitespace give empty tokens. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
+
+  /** [[tokens]] without the empty ones: `TextOps.tokens`'s definition. */
+  def words(text: Column): Column = filter(tokens(text), tk => tk =!= "")
 
   def nStop(toks: Column): Column = size(filter(toks, tk => tk.isInCollection(Stopwords)))
 
@@ -42,6 +47,8 @@ object Quality {
 
   // ---- the same rules in DuckDB SQL ----
   def tokensSql(text: String): String = s"string_split_regex(trim($text), '\\s+')"
+
+  def wordsSql(text: String): String = s"list_filter(${tokensSql(text)}, t -> t <> '')"
 
   def nStopSql(text: String): String =
     s"len(list_filter(${tokensSql(text)},\n      t -> t IN (${Stopwords.map(w => s"'$w'").mkString(",")})))"

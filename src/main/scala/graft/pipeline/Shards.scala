@@ -31,7 +31,7 @@ object Shards {
   /** (doc_id, pos, tok) — q69's whitespace tokenization, positions kept. */
   def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
+      posexplode(Quality.tokens(col("text"))).as(Seq("pos", "tok")))
 
   /** Trained id table `(tok, tid)`: rank 1..maxVocab by (count desc,
     * token), everything rarer -> [[Unk]]. The window's input is the

@@ -69,6 +69,28 @@ object Sketch {
   def cmsMerge(countersBy: DataFrame): DataFrame =
     countersBy.groupBy(col("j"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
 
+  /** The merge self-check (q97, q103, q106, q107): one row whose column
+    * `name` counts the `keys` whose `value` differs between sketch tables
+    * `a` and `b`, a key missing on one side being 0 there (an empty
+    * register or counter). */
+  def mismatchCount(a: DataFrame, b: DataFrame, keys: Seq[String], value: String,
+                    name: String): DataFrame = {
+    val (va, vb) = (s"${value.head}a", s"${value.head}b")
+    a.select(keys.map(col) :+ col(value).as(va): _*)
+      .join(b.select(keys.map(col) :+ col(value).as(vb): _*), keys, "full")
+      .select(when(coalesce(col(va), lit(0)) === coalesce(col(vb), lit(0)), 0L)
+        .otherwise(1L).as("bad"))
+      .agg(coalesce(sum(col("bad")), lit(0L)).as(name))
+  }
+
+  /** [[mismatchCount]] in DuckDB SQL: a SELECT over tables `a` and `b`. */
+  def mismatchCountSql(a: String, b: String, keys: Seq[String], value: String,
+                       name: String): String =
+    s"""SELECT CAST(coalesce(sum(
+       |    CASE WHEN coalesce(a.$value, 0) = coalesce(b.$value, 0) THEN 0 ELSE 1 END), 0) AS BIGINT)
+       |    AS $name
+       |  FROM $a a FULL JOIN $b b USING (${keys.mkString(", ")})""".stripMargin
+
   // ---- HyperLogLog (q83): p = 6 -> m = 64 registers ----------------------
 
   val HllP = 6
@@ -190,14 +212,28 @@ object Sketch {
     s"""sum(CAST(CAST(1 AS BIGINT) << ($HllMaxRank - m) AS HUGEINT)) AS num,
        |    sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS occupied""".stripMargin
 
+  /** [[hllEstimateBy]] in DuckDB SQL, ending a WITH query: `regs(grp,
+    * idx, m)` padded to each group's full register grid, then one estimate
+    * row per group carrying the `extra` select items. */
+  def hllEstimateBySql(regs: String, extra: String): String =
+    s"""grid AS (SELECT g.grp, t.range AS idx
+       |  FROM (SELECT DISTINCT grp FROM $regs) g, range(0, $HllM) t),
+       |jm AS (SELECT grid.grp, coalesce(ar.m, 0) AS m
+       |  FROM grid LEFT JOIN $regs ar ON ar.grp = grid.grp AND ar.idx = grid.idx),
+       |agg AS (SELECT grp,
+       |    $hllSumsSql FROM jm GROUP BY grp)
+       |SELECT grp,
+       |  $hllEstimateSql,
+       |  $extra
+       |FROM agg""".stripMargin
+
   /** `hll_estimate, hll_corrected, occupied` over [[hllSumsSql]]'s
-    * columns. Both double constants print with an exponent, which DuckDB
-    * types DOUBLE (a bare decimal would be DECIMAL). */
+    * columns; the two double constants are DuckDB DOUBLE literals. */
   val hllEstimateSql: String = {
-    val raw = s"$HllNumeratorScale / CAST(num AS DOUBLE)"
+    val raw = s"${DuckDb.dlit(HllNumeratorScale)} / CAST(num AS DOUBLE)"
     s"""$raw AS hll_estimate,
        |  CASE WHEN $raw
-       |         <= ${2.5 * HllM}E0 AND ($HllM - occupied) > 0
+       |         <= ${DuckDb.dlit(2.5 * HllM)} AND ($HllM - occupied) > 0
        |       THEN round($HllM.0 * ln($HllM.0 / CAST($HllM - occupied AS DOUBLE)), 6)
        |       ELSE round($raw, 6)
        |  END AS hll_corrected,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{functions => gf}
 import Common._
+import graft.pipeline.Quality
+import graft.pipeline.DuckDb.dlit
 
 /**
  * Vector search queries (brute and LSH kNN, IVF, PQ, quantization,
@@ -418,7 +420,7 @@ private[graft] object AnnQueries {
       // WHERE on idf before the postings join). Ties cannot occur: the
       // row_number orders by (score, doc_id).
       val docs = t(s, d, "documents")
-      val toks = filter(split(trim(col("text")), "\\s+"), tk => tk =!= "")
+      val toks = Quality.words(col("text"))
       val docToks = docs.select(col("doc_id"), posexplode(toks))
         .withColumnRenamed("col", "term")
       // r6 (guide §2.3 "shuffle fewer bytes"): per-doc length needs no
@@ -490,8 +492,8 @@ private[graft] object AnnQueries {
     // identical rational arithmetic shapes, query-term-order fold
     // (list_reduce over list(c ORDER BY qpos)), row_number tiebreak
     () =>
-      """WITH tokd AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x != '') AS tk
+      s"""WITH tokd AS (
+        |  SELECT doc_id, ${Quality.wordsSql("text")} AS tk
         |  FROM documents),
         |toks AS (
         |  SELECT doc_id, tk[i] AS term, i - 1 AS pos

@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.data.{Courses, Pages}
-import graft.pipeline.CourseEngine
+import graft.pipeline.{CourseEngine, Quality}
 
 /**
  * What several query families share: the correctness-scale constants,
@@ -58,15 +58,6 @@ private[graft] object Common {
   }
 
   def pagesCte: String = s"WITH pages AS (${Pages.sqlView(Amp)})"
-
-  /** Double -> DuckDB DOUBLE literal: a bare decimal literal is typed
-    * DECIMAL and scale-unification across VALUES rows rounds it (observed
-    * 1-ULP drift); an exponent suffix forces DOUBLE, and Double.toString's
-    * shortest-roundtrip digits then parse back to the identical bits. */
-  def dlit(d: Double): String = {
-    val s = d.toString
-    if (s.contains("E") || s.contains("e")) s else s + "E0"
-  }
 
   // ---- FNV-1a 64 + splitmix64 replayed in SQL, so DuckDB re-derives every
   // hash-derived CANDIDATE (q25 minhash band keys, q26 simhash chunks, q27
@@ -130,8 +121,7 @@ private[graft] object Common {
        |  -- produced by leading/trailing NON-SPACE whitespace (SQL trim
        |  -- strips spaces only) — same divergence q70 fixed for '\\n'-padded
        |  -- corpora; len(tk) gates below therefore count REAL tokens
-       |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'),
-       |    t -> t <> '') AS tk FROM $src),
+       |  SELECT doc_id, ${Quality.wordsSql("text")} AS tk FROM $src),
        |sh AS (
        |  SELECT doc_id, concat_ws(' ', tk[i], tk[i+1], tk[i+2]) AS s
        |  FROM toks, unnest(range(1, len(tk) - 1)) AS g(i)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.data.Courses
 import graft.pipeline.{Catalog, CourseEngine, SpatialJoin}
+import graft.pipeline.DuckDb.dlit
 import graft.{functions => gf}
 import Common._
 

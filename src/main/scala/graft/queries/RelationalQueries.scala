@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import Common._
+import graft.pipeline.Quality
 
 /**
  * Relational queries (TPC-H style scans, joins, aggregates, windows and
@@ -308,14 +309,14 @@ private[graft] object RelationalQueries {
       t(s, d, "documents")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("total_tokens"),
+          sum(size(Quality.tokens(col("text"))).cast("long")).as("total_tokens"),
           sum(length(col("text")).cast("long")).as("sum_chars"))
         .select(col("source"), col("n_docs"), col("total_tokens"),
           round(col("sum_chars").cast("double") / col("n_docs").cast("double"), 6)
             .as("avg_chars"))
     }, () =>
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)) AS BIGINT) AS total_tokens,
+      s"""SELECT source, count(*) AS n_docs,
+        |  CAST(sum(CAST(len(${Quality.tokensSql("text")}) AS BIGINT)) AS BIGINT) AS total_tokens,
         |  round(CAST(sum(CAST(length(text) AS BIGINT)) AS DOUBLE) / count(*), 6) AS avg_chars
         |FROM documents GROUP BY source""".stripMargin),
 

@@ -75,12 +75,8 @@ private[graft] object SketchQueries {
         pmod(gf.hash_text(col("url")), lit(4L)), col("k"))
       val merged = Sketch.cmsMerge(byShard)
       val direct = Sketch.countMin(hosts.select(col("k")), col("k"))
-      val mis = merged.select(col("j"), col("bucket"), col("cnt").as("ca"))
-        .join(direct.select(col("j"), col("bucket"), col("cnt").as("cb")),
-          Seq("j", "bucket"), "full")
-        .select(when(coalesce(col("ca"), lit(0L)) === coalesce(col("cb"), lit(0L)), 0L)
-          .otherwise(1L).as("bad"))
-        .agg(coalesce(sum(col("bad")), lit(0L)).as("n_counter_mismatch"))
+      val mis = Sketch.mismatchCount(merged, direct, Seq("j", "bucket"), "cnt",
+        "n_counter_mismatch")
       val exact = hosts.groupBy(col("k")).agg(count(lit(1)).as("exact_n"))
       Sketch.cmsEstimates(merged, exact.select(col("k")))
         .join(exact, Seq("k"))
@@ -100,10 +96,8 @@ private[graft] object SketchQueries {
       |byshard AS (SELECT grp, j, bucket, count(*) AS cnt FROM b GROUP BY grp, j, bucket),
       |merged AS (SELECT j, bucket, sum(cnt) AS cnt FROM byshard GROUP BY j, bucket),
       |direct AS (SELECT j, bucket, count(*) AS cnt FROM b GROUP BY j, bucket),
-      |mis AS (SELECT CAST(coalesce(sum(
-      |    CASE WHEN coalesce(a.cnt, 0) = coalesce(d.cnt, 0) THEN 0 ELSE 1 END), 0) AS BIGINT)
-      |    AS n_counter_mismatch
-      |  FROM merged a FULL JOIN direct d USING (j, bucket)),
+      |mis AS (${Sketch.mismatchCountSql("merged", "direct", Seq("j", "bucket"), "cnt",
+           "n_counter_mismatch")}),
       |ks AS (SELECT DISTINCT k, j, bucket FROM b),
       |est AS (SELECT ks.k, min(c.cnt) AS cms_est
       |        FROM ks JOIN merged c USING (j, bucket) GROUP BY ks.k),
@@ -159,11 +153,7 @@ private[graft] object SketchQueries {
         pmod(gf.hash_text(col("url")), lit(4L)), col("k"))
       val mergedRegs = Sketch.hllMerge(regsBy)
       val direct = Sketch.hllRegisters(hosts.select(col("k")), col("k"))
-      val mis = mergedRegs.select(col("idx"), col("m").as("ma"))
-        .join(direct.select(col("idx"), col("m").as("mb")), Seq("idx"), "full")
-        .select(when(coalesce(col("ma"), lit(0)) === coalesce(col("mb"), lit(0)), 0L)
-          .otherwise(1L).as("bad"))
-        .agg(coalesce(sum(col("bad")), lit(0L)).as("n_register_mismatch"))
+      val mis = Sketch.mismatchCount(mergedRegs, direct, Seq("idx"), "m", "n_register_mismatch")
       val all = regsBy.unionByName(
         mergedRegs.withColumn("grp", lit(-1L)).select(col("grp"), col("idx"), col("m")))
       Sketch.hllEstimateBy(all).crossJoin(mis)
@@ -180,21 +170,10 @@ private[graft] object SketchQueries {
       |regsby AS (SELECT grp, idx, max(rank) AS m FROM rr GROUP BY grp, idx),
       |merged AS (SELECT CAST(-1 AS BIGINT) AS grp, idx, max(m) AS m FROM regsby GROUP BY idx),
       |direct AS (SELECT idx, max(rank) AS m FROM rr GROUP BY idx),
-      |mis AS (SELECT CAST(coalesce(sum(
-      |    CASE WHEN coalesce(a.m, 0) = coalesce(b.m, 0) THEN 0 ELSE 1 END), 0) AS BIGINT)
-      |    AS n_register_mismatch
-      |  FROM merged a FULL JOIN direct b USING (idx)),
+      |mis AS (${Sketch.mismatchCountSql("merged", "direct", Seq("idx"), "m", "n_register_mismatch")}),
       |allregs AS (SELECT * FROM regsby UNION ALL SELECT * FROM merged),
-      |grid AS (SELECT g.grp, t.range AS idx
-      |  FROM (SELECT DISTINCT grp FROM allregs) g, range(0, ${Sketch.HllM}) t),
-      |jm AS (SELECT grid.grp, coalesce(ar.m, 0) AS m
-      |  FROM grid LEFT JOIN allregs ar ON ar.grp = grid.grp AND ar.idx = grid.idx),
-      |agg AS (SELECT grp,
-      |    ${Sketch.hllSumsSql} FROM jm GROUP BY grp)
-      |SELECT grp,
-      |  ${Sketch.hllEstimateSql},
-      |  (SELECT n_register_mismatch FROM mis) AS n_register_mismatch
-      |FROM agg""".stripMargin)),
+      |${Sketch.hllEstimateBySql("allregs",
+           "(SELECT n_register_mismatch FROM mis) AS n_register_mismatch")}""".stripMargin)),
 
     Query("q100_bloom_semijoin", (s, d) => {
       // Bloom-filter semi-join reduction (pipeline.Bloom): a 256-url
@@ -337,11 +316,7 @@ private[graft] object SketchQueries {
       val rDirect = Sketch.hllRegistersBy(v2, lit(3L), col("n_name"))
       val rMerged = Sketch.hllMerge(r1.unionByName(rInc))
         .select(lit(4L).as("grp"), col("idx"), col("m"))
-      val mis = rMerged.select(col("idx"), col("m").as("ma"))
-        .join(rDirect.select(col("idx"), col("m").as("mb")), Seq("idx"), "full")
-        .select(when(coalesce(col("ma"), lit(0)) === coalesce(col("mb"), lit(0)), 0L)
-          .otherwise(1L).as("bad"))
-        .agg(coalesce(sum(col("bad")), lit(0L)).as("n_register_mismatch"))
+      val mis = Sketch.mismatchCount(rMerged, rDirect, Seq("idx"), "m", "n_register_mismatch")
       Sketch.hllEstimateBy(
           r1.unionByName(rInc).unionByName(rDirect).unionByName(rMerged))
         .crossJoin(mis)
@@ -363,21 +338,10 @@ private[graft] object SketchQueries {
       |merged AS (SELECT CAST(4 AS BIGINT) AS grp, idx, max(m) AS m
       |  FROM regsby WHERE grp IN (1, 2) GROUP BY idx),
       |direct AS (SELECT idx, m FROM regsby WHERE grp = 3),
-      |mis AS (SELECT CAST(coalesce(sum(
-      |    CASE WHEN coalesce(a.m, 0) = coalesce(b.m, 0) THEN 0 ELSE 1 END), 0) AS BIGINT)
-      |    AS n_register_mismatch
-      |  FROM merged a FULL JOIN direct b USING (idx)),
+      |mis AS (${Sketch.mismatchCountSql("merged", "direct", Seq("idx"), "m", "n_register_mismatch")}),
       |allregs AS (SELECT * FROM regsby UNION ALL SELECT * FROM merged),
-      |grid AS (SELECT g.grp, t.range AS idx
-      |  FROM (SELECT DISTINCT grp FROM allregs) g, range(0, ${Sketch.HllM}) t),
-      |jm AS (SELECT grid.grp, coalesce(ar.m, 0) AS m
-      |  FROM grid LEFT JOIN allregs ar ON ar.grp = grid.grp AND ar.idx = grid.idx),
-      |agg AS (SELECT grp,
-      |    ${Sketch.hllSumsSql} FROM jm GROUP BY grp)
-      |SELECT grp,
-      |  ${Sketch.hllEstimateSql},
-      |  (SELECT n_register_mismatch FROM mis) AS n_register_mismatch
-      |FROM agg""".stripMargin)),
+      |${Sketch.hllEstimateBySql("allregs",
+           "(SELECT n_register_mismatch FROM mis) AS n_register_mismatch")}""".stripMargin)),
 
     Query("q104_weighted_sample", (s, d) => {
       // deterministic WEIGHTED sampling (pipeline.Sample.weightedBottomK):

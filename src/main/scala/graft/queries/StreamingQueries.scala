@@ -146,11 +146,7 @@ private[graft] object StreamingQueries {
         batches.lastOption.getOrElse(Array.empty[org.apache.spark.sql.Row]).toSeq.asJava,
         StructType(Seq(StructField("idx", LongType), StructField("m", IntegerType))))
       val direct = Sketch.hllRegisters(t(s, d, "documents"), col("text"))
-      val mis = streamed.select(col("idx"), col("m").as("ma"))
-        .join(direct.select(col("idx"), col("m").as("mb")), Seq("idx"), "full")
-        .select(when(coalesce(col("ma"), lit(0)) === coalesce(col("mb"), lit(0)), 0L)
-          .otherwise(1L).as("bad"))
-        .agg(coalesce(sum(col("bad")), lit(0L)).as("n_register_mismatch"))
+      val mis = Sketch.mismatchCount(streamed, direct, Seq("idx"), "m", "n_register_mismatch")
       streamed.crossJoin(mis)
     },
     // streaming-sketch replay: the register table re-derived from raw

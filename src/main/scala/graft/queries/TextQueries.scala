@@ -117,16 +117,16 @@ private[graft] object TextQueries {
     Query("q21_token_stats", (s, d) => {
       t(s, d, "documents")
         .select(col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
+          size(Quality.tokens(col("text"))).cast("long").as("n_tokens"),
           length(col("text")).cast("long").as("n_chars"))
     }, () =>
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+      s"""SELECT doc_id,
+        |  CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_tokens,
         |  CAST(length(text) AS BIGINT) AS n_chars
         |FROM documents""".stripMargin),
 
     Query("q22_quality_score", (s, d) => {
-      val nTokens = size(split(trim(col("text")), "\\s+")).cast("long")
+      val nTokens = size(Quality.tokens(col("text"))).cast("long")
       val nChars = length(col("text")).cast("long")
       val nSpaces = (length(col("text")) - length(regexp_replace(col("text"), " ", ""))).cast("long")
       t(s, d, "documents")
@@ -150,12 +150,12 @@ private[graft] object TextQueries {
       // the token counter a training-data pipeline budgets with
       val pat = "'(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9'\\s]+|\\s+"
       t(s, d, "documents").select(col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_ws_tokens"),
+        size(Quality.tokens(col("text"))).cast("long").as("n_ws_tokens"),
         size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long").as("n_bpe_tokens"))
     }, () =>
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9''\s]+|\s+')) AS BIGINT) AS n_bpe_tokens
+      s"""SELECT doc_id,
+        |  CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_ws_tokens,
+        |  CAST(len(regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9''\\s]+|\\s+')) AS BIGINT) AS n_bpe_tokens
         |FROM documents""".stripMargin),
 
     Query("q29_stopword_ratio", (s, d) => {
@@ -178,7 +178,7 @@ private[graft] object TextQueries {
       // shuffle carries one row per (doc, distinct bigram) — no per-doc
       // driver work, scales to any doc length
       val toks = t(s, d, "documents")
-        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
+        .select(col("doc_id"), Quality.tokens(col("text")).as("toks"))
       // guard: sequence(1, 0) is DESCENDING in Spark ([1, 0]), which would
       // fabricate null bigrams for <=1-token docs — emit an empty array
       // instead (DuckDB's generate_series(1, 0) is empty)
@@ -201,8 +201,8 @@ private[graft] object TextQueries {
           round(col("top_bigram_n").cast("double") /
             col("n_bigrams").cast("double"), 6).as("top_bigram_frac"))
     }, () =>
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
+      s"""WITH toks AS (
+        |  SELECT doc_id, ${Quality.tokensSql("text")} AS toks FROM documents),
         |big AS (
         |  SELECT doc_id, t.toks[i] || ' ' || t.toks[i+1] AS bigram
         |  FROM toks t, unnest(generate_series(1, greatest(len(t.toks) - 1, 0))) AS g(i)),
@@ -263,9 +263,9 @@ private[graft] object TextQueries {
     },
     // fingerprint(text) groups by the whitespace-normalized token sequence
     () =>
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_dups
+      s"""SELECT min(doc_id) AS keep_id, count(*) AS n_dups
         |FROM documents
-        |GROUP BY array_to_string(string_split_regex(trim(text), '\s+'), ' ')""".stripMargin),
+        |GROUP BY array_to_string(${Quality.tokensSql("text")}, ' ')""".stripMargin),
 
     Query("q24_langid", (s, d) => {
       // n-gram heuristic language id: score against tiny per-language
@@ -372,8 +372,7 @@ private[graft] object TextQueries {
     // (lag == running max because span starts sort ascending per doc)
     () =>
       s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'),
-         |    t -> t <> '') AS tk FROM documents),
+         |  SELECT doc_id, ${Quality.wordsSql("text")} AS tk FROM documents),
          |gr0 AS (
          |  SELECT doc_id, i - 1 AS pos, array_to_string(tk[i : i + 7], ' ') AS sh
          |  FROM toks, unnest(generate_series(1, greatest(len(tk) - 7, 0))) AS s(i)),
@@ -583,7 +582,7 @@ private[graft] object TextQueries {
       // plan. A pair with no shared token gets kernel dot 0 == the old
       // coalesce(NULL, 0).
       val tcv = docsT.select(col("doc_id"),
-          explode(filter(split(trim(col("text")), "\\s+"), tk => tk =!= "")).as("tok"))
+          explode(Quality.words(col("text"))).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"))
         .agg(array_sort(collect_list(struct(col("tok"), col("c")))).as("ps"))
@@ -608,7 +607,7 @@ private[graft] object TextQueries {
     // division, IEEE sqrt)
     () =>
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS s FROM documents),
+         |  SELECT doc_id, unnest(${Quality.tokensSql("text")}) AS s FROM documents),
          |th AS (SELECT doc_id, ${fnvSql("s")} AS h FROM toks),
          |bits AS (
          |  SELECT doc_id, b.b,
@@ -625,8 +624,8 @@ private[graft] object TextQueries {
          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM chunks a JOIN chunks b ON a.chunk = b.chunk AND a.doc_id < b.doc_id),
          |tc AS (SELECT doc_id, tok, count(*) AS c FROM (
-         |    SELECT doc_id, unnest(list_filter(string_split_regex(trim(text), '\\s+'),
-         |      t -> t <> '')) AS tok FROM documents) GROUP BY doc_id, tok),
+         |    SELECT doc_id, unnest(${Quality.wordsSql("text")}) AS tok FROM documents)
+         |  GROUP BY doc_id, tok),
          |nn AS (SELECT doc_id, sum(c*c) AS n2 FROM tc GROUP BY doc_id),
          |dt AS (SELECT p.doc_a, p.doc_b, sum(a.c * b.c) AS dp
          |  FROM pairs p JOIN tc a ON a.doc_id = p.doc_a
@@ -714,7 +713,7 @@ private[graft] object TextQueries {
       val nd = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
       val thresholds = (1 to 5).map(i => math.ceil(nd * i / 5.0).toLong)
       val firstSeen = docs.select(col("doc_id"),
-          explode(filter(split(trim(col("text")), "\\s+"), tk => tk =!= "")).as("w"))
+          explode(Quality.words(col("text"))).as("w"))
         .groupBy(col("w")).agg(min(col("doc_id")).as("fd"))
       firstSeen.select(col("fd"), explode(typedLit(thresholds)).as("prefix_docs"))
         .where(col("fd") < col("prefix_docs"))
@@ -724,8 +723,7 @@ private[graft] object TextQueries {
     // min, the same ceil(nd*i/5) thresholds, per-threshold counts
     () =>
       s"""WITH tok AS (SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(trim(text), '\\s+'),
-         |      t -> t <> '')) AS w FROM documents),
+         |    unnest(${Quality.wordsSql("text")}) AS w FROM documents),
          |fs AS (SELECT w, min(doc_id) AS fd FROM tok GROUP BY w),
          |n AS (SELECT max(doc_id) + 1 AS nd FROM documents),
          |th AS (SELECT CAST(ceil(nd * u.i / 5.0) AS BIGINT) AS prefix_docs
@@ -1140,11 +1138,9 @@ private[graft] object TextQueries {
       // equi-join on the gram hash with the tiny eval side BROADCAST —
       // the training side streams map-side; never an all-pairs stage.
       val docs = t(s, d, "documents")
-      // eval tokens = NON-EMPTY \s+ tokens of the trimmed text — the
-      // exact TextOps.tokens definition (Java split drops trailing
-      // empties, TextOps drops the leading one; Spark's split keeps
-      // both), so the slice is whitespace-robust, not space-only
-      val evalToks = filter(split(trim(col("text")), "\\s+"), tk => tk =!= "")
+      // eval tokens are the non-empty Quality.words, so the slice is
+      // whitespace-robust, not space-only
+      val evalToks = Quality.words(col("text"))
       val evalDf = docs.filter(col("doc_id") % 25 === 0)
         .select(col("doc_id").as("eval_id"),
           concat_ws(" ", slice(evalToks, 6, 10)).as("etext"))
@@ -1165,13 +1161,10 @@ private[graft] object TextQueries {
     // TextOps.hashedWordShingles replayed: per-token FNV/mix64 hash, then
     // the rolling h*31+tokHash combine over 5 tokens (mod 2^64), mix64'd;
     // same every-25th-doc 10-token eval slice, same inverted-index join.
-    // Tokens are filtered to NON-EMPTY (TextOps.tokens semantics): trim
-    // strips only spaces, so '\n'/'\t'-padded text would otherwise leave
-    // empty boundary tokens here that the engine never hashes
+    // over the non-empty Quality.words tokens the engine hashes
     () =>
       s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'),
-         |    t -> t <> '') AS tk FROM documents),
+         |  SELECT doc_id, ${Quality.wordsSql("text")} AS tk FROM documents),
          |eth AS (
          |  SELECT doc_id AS eval_id, list_transform(tk[6:15], t -> ${fnvSql("t")}) AS th
          |  FROM toks WHERE doc_id % 25 = 0),
@@ -1203,7 +1196,7 @@ private[graft] object TextQueries {
       // end (prev covered up to s + 16), so starts stop at n - 17 — a
       // trailing subset window would be a pure duplicate training sample
       // (12% of chunks on the fixture before this guard).
-      val tk = split(trim(col("text")), "\\s+")
+      val tk = Quality.tokens(col("text"))
       t(s, d, "documents")
         .select(col("doc_id"), tk.as("tk"))
         .select(col("doc_id"),
@@ -1217,8 +1210,8 @@ private[graft] object TextQueries {
     // same windows: starts 0,48,96,... over the token list, width 64,
     // DuckDB's 1-based inclusive list slice == Spark's slice(arr, st+1, 64)
     () =>
-      """WITH tk AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk FROM documents),
+      s"""WITH tk AS (
+        |  SELECT doc_id, ${Quality.tokensSql("text")} AS tk FROM documents),
         |ch AS (
         |  SELECT doc_id, g.i AS start_i,
         |    tk[g.i + 1 : least(g.i + 64, len(tk))] AS chunk,
@@ -1239,7 +1232,7 @@ private[graft] object TextQueries {
       val docs = t(s, d, "documents")
       val base = graft.pipeline.Packing.tokenBatches(docs, Q123TokenBudget, Q123Shards)
       val toks = docs.select(col("doc_id").as("last_doc"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("last_toks"))
+        size(Quality.tokens(col("text"))).cast("long").as("last_toks"))
       base.join(toks, Seq("last_doc"))
         .select(col("shard"), col("batch_id"), col("n_docs"), col("total_tokens"),
           floor(lit(100L) * col("total_tokens") / lit(Q123TokenBudget)).cast("long")
@@ -1253,7 +1246,7 @@ private[graft] object TextQueries {
     () =>
       s"""WITH t AS (
         |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
+        |    CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_toks,
         |    ${Packing.md5KeySql("CAST(doc_id AS VARCHAR)")} % $Q123Shards AS shard
         |  FROM documents),
         |b AS (
@@ -1283,7 +1276,7 @@ private[graft] object TextQueries {
     }, () =>
       s"""WITH t AS (
         |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
+        |    CAST(len(${Quality.tokensSql("text")}) AS BIGINT) AS n_toks,
         |    ${Packing.md5KeySql("CAST(doc_id AS VARCHAR)")} % $Q69Shards AS shard
         |  FROM documents),
         |b AS (
@@ -1318,7 +1311,7 @@ private[graft] object TextQueries {
     () =>
       s"""WITH toks AS (
          |  SELECT d.doc_id, g.i AS pos, d.tk[g.i] AS tok
-         |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
+         |  FROM (SELECT doc_id, ${Quality.tokensSql("text")} AS tk
          |        FROM documents) d,
          |       unnest(generate_series(1, len(d.tk))) AS g(i)),
          |vc AS (SELECT tok, count(*) AS n FROM toks GROUP BY tok),
@@ -1512,7 +1505,7 @@ private[graft] object TextQueries {
     // verify over the recomputed 64-bit signatures
     () =>
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS s FROM documents),
+         |  SELECT doc_id, unnest(${Quality.tokensSql("text")}) AS s FROM documents),
          |th AS (SELECT doc_id, ${fnvSql("s")} AS h FROM toks),
          |bits AS (
          |  SELECT doc_id, b.b,
@@ -1625,11 +1618,11 @@ private[graft] object TextQueries {
         .filter(col("n_a") + col("n_b") > 0)
         .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"))
     }, () =>
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(list_transform(generate_series(1, greatest(len(toks) - 2, 0)),
         |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents)
+        |  FROM (SELECT doc_id, ${Quality.tokensSql("text")} AS toks FROM documents)
         |  WHERE doc_id < 1000
         |)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1753,8 +1746,7 @@ private[graft] object TextQueries {
   private def bpeRoundCtes(rounds: Int): String = {
     val sb = new StringBuilder
     sb.append(
-      s"""wtoks AS (SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'),
-         |    t -> t <> '')) AS word FROM documents),
+      s"""wtoks AS (SELECT unnest(${Quality.wordsSql("text")}) AS word FROM documents),
          |vocab AS MATERIALIZED (SELECT word, count(*) AS n FROM wtoks GROUP BY word),
          |s0 AS MATERIALIZED (SELECT word, n, CAST(g.i AS BIGINT) AS pos, substring(word, g.i, 1) AS sym
          |  FROM vocab, unnest(generate_series(1, length(word))) g(i))""".stripMargin)

@@ -26,6 +26,17 @@ object Storage {
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
+  /** Deletes `p` and everything under it, if it exists. A symbolic link
+    * is deleted, never followed. */
+  def deleteRecursively(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, LinkOption, Path}
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
+      finally s.close()
+    }
+  }
+
   /**
    * Materialize a SMALL batch-built dimension (cover index, boundary dim,
    * style catalog) into a `LocalRelation` — the "publish the index"
@@ -376,14 +387,7 @@ object Snapshots {
       Files.isDirectory(p) && !live.contains(s"data/${p.getFileName}") &&
         Files.getLastModifiedTime(p).toMillis <= cutoff
     }
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().asScala.toVector.foreach(rm) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    dead.foreach(rm)
+    dead.foreach(Storage.deleteRecursively)
     dead.map(p => s"data/${p.getFileName}").sorted
   }
 }

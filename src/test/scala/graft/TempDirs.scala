@@ -19,11 +19,5 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
 
   override def afterAll(): Unit =
     try super.afterAll()
-    finally dirs.forEach { dir =>
-      if (Files.exists(dir)) {
-        val walk = Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-        finally walk.close()
-      }
-    }
+    finally dirs.forEach(dir => graft.sources.Storage.deleteRecursively(dir))
 }

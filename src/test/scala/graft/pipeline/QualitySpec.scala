@@ -74,4 +74,22 @@ class QualitySpec extends AnyFunSuite {
         assert((raw >= t) == (round6(raw) >= t), s"k=$k n=$n threshold $t")
     }
   }
+
+  test("tokens keeps empty edge tokens; words drops them and equals TextOps.tokens") {
+    val inputs = Seq("", "  a  b  ", "\ta b\n", "word")
+    val got = inputs.toDF("text")
+      .select($"text", Quality.tokens($"text"), Quality.words($"text"))
+      .collect().map(r => r.getString(0) -> (r.getSeq[String](1), r.getSeq[String](2))).toMap
+    // Spark's trim strips spaces only, and its split keeps edge empties
+    assert(got("")._1 == Seq(""))
+    assert(got("  a  b  ")._1 == Seq("a", "b"))
+    assert(got("\ta b\n")._1 == Seq("", "a", "b", ""))
+    assert(got("word")._1 == Seq("word"))
+    inputs.foreach { in =>
+      val words = got(in)._2
+      assert(words == got(in)._1.filter(_.nonEmpty), in)
+      assert(words == graft.expr.TextOps.tokens(
+        org.apache.spark.unsafe.types.UTF8String.fromString(in)).toSeq, in)
+    }
+  }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -105,5 +106,52 @@ class SketchSpec extends AnyFunSuite {
     val est = Sketch.hllEstimate(Sketch.hllRegisters(df.select($"k"), $"k"))
       .collect()(0)
     assert(byGrp(-1L) == ((est.getDouble(0), est.getDouble(1))))
+  }
+
+  test("mismatchCount: 0 for equal tables, a missing key matches 0, each differing value counts 1") {
+    def n(a: DataFrame, b: DataFrame, keys: Seq[String], value: String): Long = {
+      val r = Sketch.mismatchCount(a, b, keys, value, "n_mis").collect()
+      assert(r.length == 1 && r(0).schema.fieldNames.toSeq == Seq("n_mis"))
+      r(0).getLong(0)
+    }
+    val regs = Seq((0L, 3), (1L, 0), (2L, 5)).toDF("idx", "m")
+    assert(n(regs, regs, Seq("idx"), "m") == 0)
+    assert(n(regs.limit(0), regs.limit(0), Seq("idx"), "m") == 0)
+    // register 1 is 0 on one side and absent on the other, either way round
+    assert(n(regs, regs.filter($"idx" =!= 1L), Seq("idx"), "m") == 0)
+    assert(n(regs.filter($"idx" =!= 1L), regs, Seq("idx"), "m") == 0)
+    assert(n(regs, regs.filter($"idx" =!= 2L), Seq("idx"), "m") == 1)
+    assert(n(regs, Seq((0L, 3), (1L, 0), (2L, 6)).toDF("idx", "m"), Seq("idx"), "m") == 1)
+    // q107's shape: a (j, bucket) key over long counters
+    val cnt = Seq((0, 1L, 4L), (1, 1L, 2L)).toDF("j", "bucket", "cnt")
+    val other = Seq((0, 1L, 4L), (1, 1L, 3L), (2, 9L, 0L)).toDF("j", "bucket", "cnt")
+    assert(n(cnt, other, Seq("j", "bucket"), "cnt") == 1)
+  }
+
+  test("mismatchCount equals q97's former inline full-join count on q97's inputs") {
+    val hosts = graft.queries.Common.pages(spark, "/root/testdata/sf0.01")
+      .select($"url", Urls.host($"url").as("k"))
+    val regsBy = Sketch.hllRegistersBy(hosts,
+      pmod(graft.functions.hash_text($"url"), lit(4L)), $"k")
+    val merged = Sketch.hllMerge(regsBy)
+    val direct = Sketch.hllRegisters(hosts.select($"k"), $"k")
+    // the closure q97, q103 and q106 each wrote before the helper existed
+    def inline(a: DataFrame, b: DataFrame): DataFrame =
+      a.select(col("idx"), col("m").as("ma"))
+        .join(b.select(col("idx"), col("m").as("mb")), Seq("idx"), "full")
+        .select(when(coalesce(col("ma"), lit(0)) === coalesce(col("mb"), lit(0)), 0L)
+          .otherwise(1L).as("bad"))
+        .agg(coalesce(sum(col("bad")), lit(0L)).as("n_register_mismatch"))
+    // the merged sketch (q97's graded 0), and the direct one with its
+    // first occupied register raised or dropped (1 each)
+    val first = direct.filter($"m" > 0).agg(min($"idx")).head().getLong(0)
+    val raised = direct.select($"idx", when($"idx" === first, $"m" + 1).otherwise($"m").as("m"))
+    val dropped = direct.filter($"idx" =!= first)
+    for ((a, want) <- Seq(merged -> 0L, raised -> 1L, dropped -> 1L)) {
+      val got = Sketch.mismatchCount(a, direct, Seq("idx"), "m", "n_register_mismatch")
+      assert(got.schema == inline(a, direct).schema)
+      val (g, w) = (got.collect().toSeq, inline(a, direct).collect().toSeq)
+      assert(g == w && g.head.getLong(0) == want, s"$g vs $w")
+    }
   }
 }

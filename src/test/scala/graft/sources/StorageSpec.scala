@@ -238,4 +238,17 @@ class StorageSpec extends AnyFunSuite with graft.TempDirs {
     // keepLast < 1 is a contract violation
     intercept[IllegalArgumentException] { Snapshots.expire(dir, keepLast = 0) }
   }
+
+  test("deleteRecursively removes a tree, not what a link inside it points to") {
+    val root = tempDir("graft-rm")
+    val outside = Files.createDirectories(root.resolve("outside"))
+    Files.write(outside.resolve("keep.txt"), Array[Byte](1))
+    val tree = Files.createDirectories(root.resolve("tree/a/b"))
+    Files.write(tree.resolve("f.bin"), Array[Byte](2))
+    Files.createSymbolicLink(root.resolve("tree/a/link"), outside)
+    Storage.deleteRecursively(root.resolve("tree"))
+    assert(!Files.exists(root.resolve("tree"), java.nio.file.LinkOption.NOFOLLOW_LINKS))
+    assert(Files.exists(outside.resolve("keep.txt")))
+    Storage.deleteRecursively(root.resolve("tree")) // absent: a no-op
+  }
 }

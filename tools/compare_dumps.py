@@ -10,7 +10,9 @@ that no query output depends on partition count, task order, parallelism
 level, or a refactor that should not change behaviour.
 
 Then compares the two dumps' oracle_sql.json key for key, after replacing
-each run's fixture root (/tmp/graft_fixtures_<pid>) with one placeholder.
+each run's own fixture root (/tmp/graft_fixtures_<pid>, or the directory
+SPARK_GRAFT_FIXTURE_ROOT named) with one placeholder. A dump's root is the
+directory its oracles read the fixture subdirectories from.
 Each oracle is reported as identical, whitespace-only (equal once
 whitespace runs are collapsed) or changed. A trailing ORACLE name allows
 the oracles it selects to change: the key equal to it or starting with it
@@ -48,12 +50,19 @@ def eq(a, b):
     return True
 
 
-FIXTURE_ROOT = re.compile(r"/tmp/graft_fixtures_\d+")
+# a quoted path into one of the subdirectories graft.data.Fixtures writes
+FIXTURE_PATH = re.compile(r"'(/[^']*?)/(?:oracle_inputs|layouts_jsonl_\d+|warc|crawl)/")
 
 
 def oracles(outdir):
     with open(f"{outdir}/oracle_sql.json") as f:
-        return {k: FIXTURE_ROOT.sub("<fixture_root>", v) for k, v in json.load(f).items()}
+        sql = json.load(f)
+    roots = {root for v in sql.values() for root in FIXTURE_PATH.findall(v)}
+    if len(roots) > 1:
+        sys.exit(f"{outdir}: oracles name several fixture roots: {sorted(roots)}")
+    for root in roots:
+        sql = {k: v.replace(root + "/", "<fixture_root>/") for k, v in sql.items()}
+    return sql
 
 
 def compare_oracles(out_a, out_b, allowed):
